@@ -119,6 +119,7 @@ def main() -> None:
         # the vs-base and within-delta candidate paths execute; the
         # assert is one-sided because admitted counts are
         # band-probabilistic by design.
+        from spatial_data_engineering_spark import memo
         from spatial_data_engineering_spark.operators import dedup
         from spatial_data_engineering_spark.plans.curation import (
             admit_delta)
@@ -133,10 +134,9 @@ def main() -> None:
         base_sigs = dedup.persisted_shingle_bands(spark, src)
         base_sigs[0].count(); base_sigs[1].count()  # force materialization
         row["base_sig_build_sec"] = round(time.perf_counter() - t0, 2)
-        # a FRESH session's cost: drop the in-memory handle and time the
-        # parquet read-back that replaces the build
-        dedup._SIG_CACHE.pop(
-            (spark.sparkContext.applicationId, os.path.abspath(src)), None)
+        # a FRESH session's cost: drop the session-tier entry and time
+        # the parquet read-back that replaces the build
+        memo.forget(spark, "sigs")
         t0 = time.perf_counter()
         base_sigs = dedup.persisted_shingle_bands(spark, src)
         base_sigs[0].count(); base_sigs[1].count()

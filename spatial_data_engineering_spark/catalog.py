@@ -11,58 +11,27 @@ file.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .memo import memo
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Session-scoped analyzed-relation cache.  Resolving a parquet relation
-# (path listing + footer schema read + analysis) costs ~100 ms of pure
-# driver time per call here, and the suite resolves the same ten tables
-# hundreds of times; at 100 TB the listing is a cloud-prefix walk and the
-# cost is far worse.  DataFrames are immutable, so handing the same
-# analyzed frame to every caller within a session is safe.  The cache
-# dict lives ON the session object (not in a module-global registry), so
-# its lifetime is exactly the session's — a DataFrame value references
-# its session, which would pin a weak-keyed global map forever.  The stat
-# fingerprint (size + mtime) invalidates an entry when a test or stress
-# script rewrites the table in place.
-_CACHE_ATTR = "_sde_relation_cache"
-
-
-def _fingerprint(path: str):
-    try:
-        st = os.stat(path)
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return None  # remote/virtual path: fall through to a fresh read
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The analyzed relation of one table, memoized per session: resolving
+    a parquet relation (listing, footer schema read, analysis) costs
+    ~100 ms of driver time, and the suite resolves the same ten tables
+    hundreds of times.  DataFrames are immutable, so every caller in the
+    session can share one; a rewritten table file gets a new key."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    fp = _fingerprint(f"{sf_dir}/{name}.parquet")
-    if fp is None:
-        return _read(spark, sf_dir, name)
-    cache = getattr(spark, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        try:
-            setattr(spark, _CACHE_ATTR, cache)
-        except AttributeError:  # slotted/mock session: skip caching
-            return _read(spark, sf_dir, name)
-    hit = cache.get((sf_dir, name))
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = _read(spark, sf_dir, name)
-    cache[(sf_dir, name)] = (fp, df)
-    return df
+    return memo(spark, "relation", (f"{sf_dir}/{name}.parquet",),
+                lambda: _read(spark, sf_dir, name))
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -144,36 +113,31 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def table_rows_cached(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Session-memoized row count of a base table (r17 opt, guide §1
-    "don't pay to discover a constant").
+    """Session-memoized row count of a base table.  A parquet count is
+    footer-only but still a Spark job (~40-60 ms of driver time), and the
+    global-window helpers probe input cardinality on every construction.
+    Callers only pick a strategy from it; both paths compute exact
+    results."""
+    return memo(spark, "rows", (f"{sf_dir}/{name}.parquet",),
+                lambda: load(spark, sf_dir, name).count())
 
-    A parquet count-star is footer-metadata-only, but it is still a
-    Spark JOB (~40-60 ms of driver fixed cost locally), and the
-    scale-safe global-window helpers probe input cardinality on every
-    call — several queries were paying that job once per construction
-    per run.  The count of an immutable base table within one session
-    is a constant: memoize it next to the analyzed-relation cache,
-    invalidated by the same (size, mtime) fingerprint.  Callers pass it
-    to ``_probe_small``-style path choices, which both compute exact
-    results on either path — a stale value could only ever mis-pick a
-    strategy, and the fingerprint prevents even that."""
-    fp = _fingerprint(f"{sf_dir}/{name}.parquet")
-    if fp is None:
-        return load(spark, sf_dir, name).count()
-    cache = getattr(spark, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        try:
-            setattr(spark, _CACHE_ATTR, cache)
-        except AttributeError:
-            return load(spark, sf_dir, name).count()
-    key = (sf_dir, name, "rows")
-    hit = cache.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    n = load(spark, sf_dir, name).count()
-    cache[key] = (fp, n)
-    return n
+
+class DuplicateKeyError(ValueError):
+    """A table breaks a key-uniqueness contract a query plan relies on."""
+
+
+def require_unique_doc_ids(spark: SparkSession, sf_dir: str) -> None:
+    """Raise DuplicateKeyError unless ``documents.doc_id`` is unique,
+    checked once per session.  q127, q163, q176, q188 and q209 carry
+    quality next to other document columns instead of self-joining the
+    corpus on doc_id, which matches their oracles' join only for a unique
+    key."""
+    dup = memo(spark, "doc_id_unique", (f"{sf_dir}/documents.parquet",),
+               lambda: load(spark, sf_dir, "documents").groupBy("doc_id")
+               .count().filter("count > 1").limit(1).collect())
+    if dup:
+        raise DuplicateKeyError(
+            f"documents.doc_id {dup[0].doc_id} is not unique in {sf_dir}")
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

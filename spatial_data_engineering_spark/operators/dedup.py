@@ -19,14 +19,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
-import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..memo import legacy_counter, memo
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -169,8 +167,8 @@ def _hex_fold(engine: str, md5col: str) -> str:
 
     Spark evaluates one conv() parse of the 8-char prefix (fits unsigned
     in a BIGINT); DuckDB keeps the strpos/arithmetic fold because its
-    from_hex returns a blob, not an integer.  Measured on 270k tokens
-    (scripts/microbench_hexfold.py): 0.58s -> 0.25s for the fold +
+    from_hex returns a blob, not an integer.  Measured on 270k tokens:
+    0.58s -> 0.25s for the fold +
     min-agg stage, zero value mismatches — this single expression sits
     under every minhash signature, sketch bucket and md5-percent split
     in the engine, so the ~2.3x applies corpus-wide.
@@ -334,51 +332,19 @@ def verified_pairs(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
 
 
 # --------------------------------------------------------------------------
-# Shared near-dup pair set — q47's output, materialized ONCE per
-# (application, sf_dir) for its graph consumers (q56 components, q86
-# PageRank, the curation DAG).  The LSH DAG is the repo's most expensive
-# upstream (shingle explosion + banded self-join + exact verify); before
-# this, each consumer re-executed it cold (measured: q86's first run
-# 20-35 s vs 4.7 s warm — all upstream recompute).  The pair list is
-# edge-sized — bounded by near-dup density, orders of magnitude smaller
-# than the corpus — so an eager localCheckpoint pins it cheaply and
-# truncates the LSH lineage.  At 100 TB the same role is played by
-# writing the pair table once and reading it back (the bucketed-table
-# pattern) — and since round 6 that IS what this does: the pair table is
-# persisted to parquet once per source corpus and read back by every
-# later session, so no consumer ever pays the LSH cold start twice
-# across sessions (r5 verdict task 5: q199-cold was >12 s at sf0.1; a
-# disk-hit session reads a KB-sized parquet instead).
+# Shared intermediate tables, each one memo() entry (..memo): a tag, its
+# source tables and a build function.
 #
-# Invalidation is by content fingerprint of the source documents.parquet
-# (path + size + mtime), so a regenerated testdata dir can never serve a
-# stale pair set.  Writes are write-to-tmp + atomic rename; a concurrent
-# writer losing the race just discards its tmp dir.
+# The disk tier holds the stored LSH tables, so a later session reads
+# them back instead of re-running the LSH DAG (q199-cold was >12 s at
+# sf0.1): q47's near-dup pair EDGES, which q56 components, q86 PageRank
+# and the curation DAG consume, and a base corpus's (sh, bands)
+# SIGNATURES and exact hashes, which incremental admission
+# (plans/curation.admit_delta) probes instead of rebuilding base
+# minhashes on every refresh.  All three fold _lsh_algo_fingerprint()
+# into their key, so they invalidate together on any source or
+# algorithm change.
 # --------------------------------------------------------------------------
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PAIR_CACHE_COMPUTES = 0   # test hook: cold LSH materialization count
-_PAIR_CACHE_DISK_HITS = 0  # test hook: parquet read-back count
-_PAIR_CACHE_LOCK = threading.Lock()
-
-# Cache root.  Overridable for tests and for deployments where the pair
-# table belongs next to the data lake rather than the code checkout — at
-# 100 TB this would be a warehouse table path, not a local directory.
-#
-# The DEFAULT is per-process (r16 optimization round): an unconfigured
-# run — in particular every driver bench/oracle invocation — must compute
-# its derived tables from the parquet inputs, not inherit a previous
-# process's materializations (benchmark hygiene: a disk hit in run 1
-# would time a KB-sized parquet read in place of the LSH build).  The
-# cross-SESSION persistence the disk tier exists for (a maintained
-# warehouse table, q82's standing corpus state) is production behavior
-# that a deployment opts into by pointing SPARK_GRAFT_PAIR_CACHE at a
-# durable location — exactly how the tests exercise it.
-_PAIR_CACHE_ROOT_ENV = "SPARK_GRAFT_PAIR_CACHE"
-_DEFAULT_PAIR_CACHE_ROOT = os.path.join(
-    tempfile.gettempdir(), f"spark_graft_pair_cache_{os.getpid()}",
-)
-
-
 def _lsh_algo_fingerprint() -> str:
     """Hash of every parameter that defines q47's pair semantics.
 
@@ -394,305 +360,50 @@ def _lsh_algo_fingerprint() -> str:
     ]).encode()).hexdigest()[:12]
 
 
-def _corpus_fingerprint(src: str) -> str | None:
-    """Content fingerprint of a local corpus parquet (file OR the
-    directory Spark writes), or None if it can't be statted (hdfs://,
-    s3://, missing).  For directories the part-file names/sizes/mtimes
-    are folded in — the directory's own stat does not change when a
-    part file is rewritten in place."""
-    try:
-        st = os.stat(src)
-        parts = ""
-        if os.path.isdir(src):
-            for name in sorted(os.listdir(src)):
-                ps = os.stat(os.path.join(src, name))
-                parts += f"|{name}:{ps.st_size}:{ps.st_mtime_ns}"
-    except OSError:
-        return None  # non-local source — in-session cache only
-    return hashlib.md5(
-        f"{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}{parts}"
-        f"|{_lsh_algo_fingerprint()}".encode()
-    ).hexdigest()
-
-
-def _cache_path(src: str, prefix: str) -> str | None:
-    fp = _corpus_fingerprint(src)
-    if fp is None:
-        return None
-    root = os.environ.get(_PAIR_CACHE_ROOT_ENV, _DEFAULT_PAIR_CACHE_ROOT)
-    return os.path.join(root, f"{prefix}-{fp}.parquet")
-
-
-def _pair_cache_path(sf_dir: str) -> str | None:
-    """Stable on-disk location for sf_dir's pair table, or None if the
-    source corpus can't be fingerprinted (non-local sf_dir)."""
-    return _cache_path(os.path.join(sf_dir, "documents.parquet"), "pairs")
-
-
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(a_id, b_id) confirmed near-dup pairs, materialized once per
-    source corpus: in-memory per (applicationId, sf_dir), and on disk
-    per documents.parquet fingerprint so later SESSIONS read the pair
-    table back instead of re-running the LSH DAG.
-
-    In-memory entries from other applications are evicted on each call
-    (the cache is bounded by the live application's sf_dirs, never grows
-    across session restarts) and the cold materialization is serialized
-    under a lock so concurrent first callers can't run the LSH DAG twice.
-    """
-    global _PAIR_CACHE_COMPUTES, _PAIR_CACHE_DISK_HITS
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    with _PAIR_CACHE_LOCK:
-        for k in [k for k in _PAIR_CACHE if k[0] != app]:
-            del _PAIR_CACHE[k]  # dead handles of stopped applications
-        hit = _PAIR_CACHE.get(key)
-        if hit is not None:
-            return hit
-
-        disk = _pair_cache_path(sf_dir)
-        if disk is not None and os.path.isdir(disk):
-            pairs = spark.read.parquet(disk)
-            _PAIR_CACHE_DISK_HITS += 1
-            _PAIR_CACHE[key] = pairs
-            return pairs
-
-        pairs = (q47_minhash_lsh(spark, sf_dir).select("a_id", "b_id")
-                 .localCheckpoint(eager=True))
-        _PAIR_CACHE_COMPUTES += 1
-        if disk is not None:
-            tmp = f"{disk}.tmp-{os.getpid()}"
-            try:
-                (pairs.coalesce(1)  # edge-sized table; one file reads fastest
-                 .write.mode("overwrite").parquet(tmp))
-                os.makedirs(os.path.dirname(disk), exist_ok=True)
-                try:
-                    os.rename(tmp, disk)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            except Exception:
-                shutil.rmtree(tmp, ignore_errors=True)  # cache is best-effort
-        _PAIR_CACHE[key] = pairs
-        return pairs
-
-
-# --------------------------------------------------------------------------
-# Persisted base-signature table — the OTHER half of the stored-LSH
-# pattern (round-8 verdict task 3).  ``near_dup_pairs`` persists the
-# pair EDGES; incremental admission (plans/curation.admit_delta) needs
-# the base corpus's (sh, bands) SIGNATURES so a delta batch can probe
-# base band keys without rebuilding base minhashes every refresh.
-# SCALE_NOTES round 8 measured the signature build at ~9.5 s for the
-# 400k-doc stress base; this makes the second and every later session
-# pay a parquet read instead.  Keyed by the same corpus-content +
-# _lsh_algo_fingerprint scheme as the pair table, so both caches
-# invalidate together on any source or algorithm change.
-# --------------------------------------------------------------------------
-# (app, src) -> (sh, bands) tuple; (app, "eh:"+src) -> eh DataFrame
-_SIG_CACHE: dict[tuple[str, str], object] = {}
-_SIG_CACHE_COMPUTES = 0   # test hook: cold signature-build count
-_SIG_CACHE_DISK_HITS = 0  # test hook: parquet read-back count
-
-
-def _sig_cache_path(src: str) -> str | None:
-    """Disk location for the signature pair of the corpus parquet at
-    ``src`` (a documents.parquet file or directory), or None if the
-    source can't be fingerprinted."""
-    return _cache_path(src, "sigs")
+    """(a_id, b_id) confirmed near-dup pairs, built once per source corpus
+    and read back from the disk tier after that.  The pair list is
+    edge-sized, so it is stored as one file."""
+    return memo(spark, "pairs", (os.path.join(sf_dir, "documents.parquet"),),
+                lambda: (q47_minhash_lsh(spark, sf_dir)
+                         .select("a_id", "b_id").repartition(1),),
+                tier="disk", params=(_lsh_algo_fingerprint(),))[0]
 
 
 def persisted_shingle_bands(spark: SparkSession,
                             src: str) -> tuple[DataFrame, DataFrame]:
-    """(sh, bands) signature frames for the (doc_id, text) corpus
-    parquet at ``src``, materialized once per source corpus: in-memory
-    per (applicationId, src), on disk per content fingerprint so later
-    SESSIONS read the signature table back instead of re-running
-    shingle -> minhash -> banding over the whole base.
-
-    This is the stored signature table ``admit_delta`` documents: at
-    100 TB it lives next to the pair table in the warehouse; locally it
-    is two parquet dirs (sh/, bands/) under the pair-cache root.  The
-    read-back frames are parquet scans — base lineage is truncated at
-    the files, so a delta admission's plan never contains the base
-    signature DAG at all."""
-    global _SIG_CACHE_COMPUTES, _SIG_CACHE_DISK_HITS
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.abspath(src))
-    with _PAIR_CACHE_LOCK:
-        for k in [k for k in _SIG_CACHE if k[0] != app]:
-            del _SIG_CACHE[k]  # dead handles of stopped applications
-        hit = _SIG_CACHE.get(key)
-        if hit is not None:
-            return hit
-
-        disk = _sig_cache_path(src)
-        if disk is not None and os.path.isdir(disk):
-            out = (spark.read.parquet(os.path.join(disk, "sh")),
-                   spark.read.parquet(os.path.join(disk, "bands")))
-            _SIG_CACHE_DISK_HITS += 1
-            _SIG_CACHE[key] = out
-            return out
-
-        d = spark.read.parquet(src).select("doc_id", "text")
-        sh, bands = shingle_bands(d)
-        _SIG_CACHE_COMPUTES += 1
-        if disk is None:
-            out = (sh, bands)  # non-fingerprintable source: session only
-        else:
-            # corpus-sized tables: keep Spark's partitioning (no
-            # coalesce(1) — unlike the KB-sized pair list, sh carries
-            # every doc's shingle array)
-            tmp = f"{disk}.tmp-{os.getpid()}"
-            try:
-                sh.write.mode("overwrite").parquet(
-                    os.path.join(tmp, "sh"))
-                bands.write.mode("overwrite").parquet(
-                    os.path.join(tmp, "bands"))
-                os.makedirs(os.path.dirname(disk), exist_ok=True)
-                try:
-                    os.rename(tmp, disk)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            except Exception:
-                shutil.rmtree(tmp, ignore_errors=True)  # best-effort
-            if os.path.isdir(disk):
-                # serve the parquet-backed frames (truncated lineage)
-                out = (spark.read.parquet(os.path.join(disk, "sh")),
-                       spark.read.parquet(os.path.join(disk, "bands")))
-            else:
-                out = (sh, bands)
-        _SIG_CACHE[key] = out
-        return out
+    """(sh, bands) signature frames of the (doc_id, text) corpus parquet
+    at ``src``, stored on the disk tier.  The read-back frames are parquet
+    scans, so a delta admission's plan never contains the base signature
+    DAG."""
+    return memo(spark, "sigs", (src,),
+                lambda: shingle_bands(
+                    spark.read.parquet(src).select("doc_id", "text")),
+                tier="disk", params=(_lsh_algo_fingerprint(),))
 
 
 def persisted_exact_hashes(spark: SparkSession, src: str) -> DataFrame:
-    """Distinct md5(text) hashes (column ``eh``) of the corpus parquet
-    at ``src``, persisted like the signature pair and keyed by the same
-    corpus-content fingerprint.
-
-    The third stored table of the refresh path: with signatures AND
-    exact hashes persisted, ``admit_delta`` never reads the base corpus
-    at all — a daily refresh touches two scans of hash-sized tables
-    plus delta-sized work.  (No LSH parameters fold into this one's
-    semantics, but the shared fingerprint keeps all three caches
-    invalidating together on any source change.)"""
-    global _SIG_CACHE_COMPUTES, _SIG_CACHE_DISK_HITS
-    app = spark.sparkContext.applicationId
-    key = (app, "eh:" + os.path.abspath(src))
-    with _PAIR_CACHE_LOCK:
-        for k in [k for k in _SIG_CACHE if k[0] != app]:
-            del _SIG_CACHE[k]
-        hit = _SIG_CACHE.get(key)
-        if hit is not None:
-            return hit
-
-        disk = _cache_path(src, "ehash")
-        if disk is not None and os.path.isdir(disk):
-            eh = spark.read.parquet(disk)
-            _SIG_CACHE_DISK_HITS += 1
-            _SIG_CACHE[key] = eh
-            return eh
-
-        eh = (spark.read.parquet(src)
-              .select(F.md5("text").alias("eh")).distinct())
-        _SIG_CACHE_COMPUTES += 1
-        if disk is not None:
-            tmp = f"{disk}.tmp-{os.getpid()}"
-            try:
-                eh.write.mode("overwrite").parquet(tmp)
-                os.makedirs(os.path.dirname(disk), exist_ok=True)
-                try:
-                    os.rename(tmp, disk)
-                except OSError:
-                    shutil.rmtree(tmp, ignore_errors=True)
-            except Exception:
-                shutil.rmtree(tmp, ignore_errors=True)
-            if os.path.isdir(disk):
-                eh = spark.read.parquet(disk)
-        _SIG_CACHE[key] = eh
-        return eh
-
-
-# --------------------------------------------------------------------------
-# Session-level derived-frame memos (round 15; VERDICT r14 task 3 — the
-# kmeans_fit_cached pattern, clustering.py:53, extended to the dedup
-# family's shared recomputes).  The sf0.1 suite re-built the SAME
-# deterministic frames per consumer: the shingle/minhash/band triple by
-# q47 AND q156, the 16-bit SimHash signature by q48 AND q167, q153's
-# 64-bit signature per run.  Each memo is keyed by (applicationId, tag,
-# corpus fingerprint): it dies with the session (the partition-
-# independence harness's two sessions never share), invalidates when
-# the source parquet or LSH constants change, and returns bit-identical
-# frames by the determinism contracts the family's tests pin — so no
-# value can move, only recompute disappears.  At 100 TB this is the
-# honest shape: signatures are computed once and REUSED by every
-# consumer (dedup, audit, Venn dashboards), which is exactly what the
-# disk-persisted near_dup_pairs / persisted_shingle_bands tables already
-# do across sessions; the memo is their within-session counterpart for
-# frames that stay in executor storage.
-# --------------------------------------------------------------------------
-_DOC_FRAME_CACHE: dict[tuple[str, str, str], object] = {}
-_DOC_FRAME_LOCK = threading.Lock()
-# per-key build serialization (r15 advice): the old double-checked
-# insert let two concurrent cold callers both run build(); the loser's
-# eagerly-localCheckpointed frames (e.g. shingle_frames_cached's sh)
-# were discarded WITHOUT unpersist, leaking executor storage blocks
-# until the JVM's periodic ContextCleaner GC.  A per-key lock means a
-# loser never exists.  RLock, not Lock: builders may re-enter the memo
-# for a DIFFERENT tag (curation_stages -> near_dup_pairs -> q47 ->
-# minhash_frames), and the tag dependency graph is a DAG, so per-key
-# locks are acquired in DAG order and cannot cycle; the one global
-# lock (_DOC_FRAME_LOCK) is only ever held for dict ops, never across
-# a build, so the old self-deadlock class stays impossible.
-_DOC_FRAME_BUILD_LOCKS: dict[tuple[str, str, str], threading.RLock] = {}
-_DOC_FRAME_COMPUTES = 0  # test hook: cold builds per tag
+    """Distinct md5(text) hashes (column ``eh``) of the corpus parquet at
+    ``src``, stored like the signatures: with both stored, ``admit_delta``
+    never reads the base corpus."""
+    return memo(spark, "ehash", (src,),
+                lambda: (spark.read.parquet(src)
+                         .select(F.md5("text").alias("eh")).distinct(),),
+                tier="disk", params=(_lsh_algo_fingerprint(),))[0]
 
 
 def _doc_frame_memo(spark: SparkSession, sf_dir: str, tag: str, build,
                     table: str | tuple[str, ...] = "documents"):
-    """Memoize ``build()`` per (session, tag, source-table fingerprints).
+    """Session-tier memo of ``build()`` over sf_dir's ``table`` (a name or
+    a tuple).  Name every table the build reads, or a change to an
+    unnamed one would serve stale frames."""
+    tables = (table,) if isinstance(table, str) else table
+    return memo(spark, tag,
+                [os.path.join(sf_dir, f"{t}.parquet") for t in tables], build)
 
-    ``table`` names every source table the built frames derive from
-    (r15 advice: a memo keyed on fewer tables than the build reads
-    would serve stale frames when the unkeyed table changes); all
-    fingerprints fold into the key.  Falls back to an uncached build
-    when any source can't be fingerprinted (virtual/registered
-    sources) — same rule as kmeans_fit_cached.
 
-    ``build()`` runs inside its KEY's lock but outside the global one:
-    builders in this family re-enter locking code themselves (curation
-    stages -> near_dup_pairs -> _PAIR_CACHE_LOCK; q56 -> q47 -> this
-    memo), so a hold-the-global-lock build would self-deadlock on the
-    non-reentrant lock, while the per-key lock serializes cold callers
-    of the SAME frames so exactly one build ever runs."""
-    global _DOC_FRAME_COMPUTES
-    tables = (table,) if isinstance(table, str) else tuple(table)
-    fps = [_corpus_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
-           for t in tables]
-    if any(fp is None for fp in fps):
-        return build()
-    app = spark.sparkContext.applicationId
-    key = (app, tag, "|".join(fps))
-    with _DOC_FRAME_LOCK:
-        for k in [k for k in _DOC_FRAME_CACHE if k[0] != app]:
-            del _DOC_FRAME_CACHE[k]  # dead handles of stopped applications
-        for k in [k for k in _DOC_FRAME_BUILD_LOCKS if k[0] != app]:
-            del _DOC_FRAME_BUILD_LOCKS[k]
-        hit = _DOC_FRAME_CACHE.get(key)
-        if hit is not None:
-            return hit
-        build_lock = _DOC_FRAME_BUILD_LOCKS.setdefault(key,
-                                                       threading.RLock())
-    with build_lock:
-        with _DOC_FRAME_LOCK:
-            hit = _DOC_FRAME_CACHE.get(key)
-        if hit is not None:
-            return hit  # a concurrent caller built while we waited
-        frame = build()
-        with _DOC_FRAME_LOCK:
-            _DOC_FRAME_CACHE[key] = frame
-            _DOC_FRAME_COMPUTES += 1
-        return frame
+def __getattr__(name: str):
+    return legacy_counter(name)  # perfbench reads pre-memo counter names
 
 
 def shingle_frames_cached(spark: SparkSession, sf_dir: str
@@ -971,46 +682,26 @@ def _ssj_candidates_from_sh(sh: DataFrame) -> DataFrame:
     return cand
 
 
-# Candidate-pair twin of _PAIR_CACHE: q76 and q88 share the SAME df-capped
-# inverted-index candidates, and each was re-running the token explode +
-# df groupBy + index self-join cold.  The pair list is df-cap-bounded
-# (sub-quadratic by contract, ~edge-sized), so one localCheckpoint per
-# (application, sf_dir) pins it cheaply; the corpus-sized shingle FRAME is
-# deliberately NOT cached — rebuilding it is one shuffle-free scan, and
-# checkpointing the token stream is the measured anti-fix documented at
-# q76 (ReuseExchange note above).
-_SSJ_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SSJ_CACHE_COMPUTES = 0  # test hook
-
-
 def ssj_candidate_pairs(spark: SparkSession, sf_dir: str):
-    """(shingle frame, checkpointed candidate pairs) for the exact
-    set-similarity family, candidates materialized once per
-    (applicationId, sf_dir) — the near_dup_pairs policy (eviction of dead
-    applications, locked cold compute)."""
-    global _SSJ_CACHE_COMPUTES
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    # The verify-join sides deliberately REBUILD the shingle frame from
-    # the scan instead of reading the session-memoized checkpoint: a
-    # localCheckpoint-backed LogicalRDD has no statistics (it estimates
-    # at spark.sql.defaultSizeInBytes), so feeding it to the verify
-    # joins flipped the planner to shuffling the array payloads —
+    """(shingle frame, candidate pairs) for the exact set-similarity
+    family.  q76 and q88 share the same df-capped inverted-index
+    candidates; the list is df-cap-bounded (~edge-sized), so it is a
+    session-tier memo pinned by one localCheckpoint."""
+    # The shingle frame is deliberately NOT memoized: rebuilding it is one
+    # shuffle-free scan, and the verify-join sides need the scan-derived
+    # frame.  A localCheckpoint-backed LogicalRDD has no statistics (it
+    # estimates at spark.sql.defaultSizeInBytes), so feeding it to the
+    # verify joins flipped the planner to shuffling the array payloads —
     # measured in-suite r17: q76 0.76 -> 9.98 s, q88 0.95 -> 4.90 s,
     # REVERTED same round.  The scan-derived frame keeps honest size
     # estimates and its duplication rides ReuseExchange (the standing
     # q76 note above).
     sh, _ = _ssj_candidates(_spread_docs(load(spark, sf_dir, "documents")))
-    with _PAIR_CACHE_LOCK:
-        for k in [k for k in _SSJ_CACHE if k[0] != app]:
-            del _SSJ_CACHE[k]
-        cand = _SSJ_CACHE.get(key)
-        if cand is None:
-            _, cand = _ssj_candidates(
-                _spread_docs(load(spark, sf_dir, "documents")))
-            cand = cand.localCheckpoint(eager=True)
-            _SSJ_CACHE_COMPUTES += 1
-            _SSJ_CACHE[key] = cand
+    cand = memo(spark, "ssj_candidates",
+                (os.path.join(sf_dir, "documents.parquet"),),
+                lambda: _ssj_candidates(_spread_docs(
+                    load(spark, sf_dir, "documents")))[1]
+                .localCheckpoint(eager=True))
     return sh, cand
 
 
@@ -1424,8 +1115,8 @@ def _q153_word_sums_from_words() -> list[str]:
     md5 -> substring -> locate per row inside the aggregate.  Hex char c
     sits at bit offset 4*(8-c) of h1 (or 4*(16-c) of h2), and bit j of
     digit d is (h >> (4*(8-c)+j)) & 1 == (d div 2^j) % 2 — identical
-    values, proven by scripts/microbench_hexfold.py (1.30s -> 0.70s for
-    the signature stage on 270k tokens, zero mismatches)."""
+    values, measured at 1.30s -> 0.70s for the signature stage on 270k
+    tokens with zero mismatches."""
     out = []
     for w in range(_HAM_WORDS):
         for k in range(16):
@@ -2149,57 +1840,16 @@ def substring_dup_spans(d: DataFrame, L: int = _SPAN_L) -> DataFrame:
             .select("doc_id", "n_chars", "s", "e"))
 
 
-_SPAN_CACHE_COMPUTES = 0   # test hook: cold span-table builds
-_SPAN_CACHE_DISK_HITS = 0  # test hook: parquet read-backs
-
-
 def substring_dup_spans_cached(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    """Session-memoized AND disk-persisted span table for sf_dir's
-    documents — q224 and q225 both read it, so the gram relation and
-    island merge run once per session (the shingle_frames_cached
-    pattern), and since round 16 the resulting doc-span-sized table is
-    written to parquet under the pair-cache root (r15 verdict task 4:
-    the ehash/pair `_cache_path` tier) so a NEW session reads the span
-    table back instead of re-running the corpus-chars-sized gram
-    relation.  This makes the "at 100 TB this is the written gram
-    table" comment in ``substring_dup_spans`` real code: the gram walk
-    is paid once per corpus, not once per session.  The cache key
-    folds ``_SPAN_L`` into the prefix, so changing the anchor length
-    invalidates the table (the corpus-content + mtime fingerprint
-    covers source regeneration, as for the pair/signature tables)."""
-    def build():
-        global _SPAN_CACHE_COMPUTES, _SPAN_CACHE_DISK_HITS
-        src = os.path.join(sf_dir, "documents.parquet")
-        disk = _cache_path(src, f"spans-L{_SPAN_L}")
-        if disk is not None and os.path.isdir(disk):
-            _SPAN_CACHE_DISK_HITS += 1
-            return spark.read.parquet(disk)
-        spans = substring_dup_spans(
-            _spread_docs(load(spark, sf_dir, "documents")))
-        _SPAN_CACHE_COMPUTES += 1
-        if disk is None:  # non-fingerprintable source: session pin only
-            return spans.localCheckpoint(eager=False)
-        tmp = f"{disk}.tmp-{os.getpid()}"
-        try:
-            # doc-span-sized (orders of magnitude under the gram
-            # relation) but corpus-proportional: keep Spark's
-            # partitioning, as for the signature tables
-            spans.write.mode("overwrite").parquet(tmp)
-            os.makedirs(os.path.dirname(disk), exist_ok=True)
-            try:
-                os.rename(tmp, disk)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)  # cache is best-effort
-        if os.path.isdir(disk):
-            # serve the parquet-backed frame — lineage truncated at the
-            # files, so q224/q225 plans never contain the gram DAG
-            return spark.read.parquet(disk)
-        return spans.localCheckpoint(eager=False)
-
-    return _doc_frame_memo(spark, sf_dir, "substr_spans", build)
+    """sf_dir's substring-dup span table, which q224 and q225 both read,
+    stored on the disk tier: the corpus-chars-sized gram relation runs
+    once per corpus, and later sessions read the doc-span-sized table
+    back.  The key folds the anchor length ``_SPAN_L``."""
+    return memo(spark, "spans", (os.path.join(sf_dir, "documents.parquet"),),
+                lambda: (substring_dup_spans(
+                    _spread_docs(load(spark, sf_dir, "documents"))),),
+                tier="disk", params=(_SPAN_L,))[0]
 
 
 def substring_span_stats(d: DataFrame, L: int = _SPAN_L) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load, load_spread
+from ..memo import memo
 from .common import (davg, dvar_samp, fround6, np_fround6, sql_davg,
                      sql_dvar_expr, sql_fround6,
                      sql_spark_pct)
@@ -1260,32 +1261,15 @@ def _dec_mean(vals) -> float:
     return float(s) / len(vals)
 
 
-# Session-level codebook memo (round 14, the kmeans_fit_cached pattern):
-# q111 and its audit twin q218 both train the SAME deterministic
-# codebooks — cache on the SparkSession keyed by (sf_dir, table
-# stat-fingerprint, params); a regenerated parquet invalidates.  At
-# 100 TB codebooks are trained once and persisted offline (the scale
-# note above) — this is the session-scale version of that shape.
-_PQ_CACHE_ATTR = "_sde_pq_codebook_cache"
-
-
 def pq_codebooks_cached(spark: SparkSession, sf_dir: str,
                         m: int = _PQ_M, kstar: int = _PQ_KSTAR,
                         n_train: int = _PQ_TRAIN_N, iters: int = 10):
-    from ..catalog import _fingerprint
-
-    fp = _fingerprint(f"{sf_dir}/embeddings.parquet")
-    if fp is None:
-        return pq_train_codebooks(spark, sf_dir, m, kstar, n_train, iters)
-    key = (sf_dir, fp, m, kstar, n_train, iters)
-    cache = getattr(spark, _PQ_CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _PQ_CACHE_ATTR, cache)
-    if key not in cache:
-        cache[key] = pq_train_codebooks(spark, sf_dir, m, kstar,
-                                        n_train, iters)
-    return cache[key]
+    """Session-memoized ``pq_train_codebooks``: q111 and its audit twin
+    q218 train the same deterministic codebooks."""
+    return memo(spark, "pq_codebooks", (f"{sf_dir}/embeddings.parquet",),
+                lambda: pq_train_codebooks(spark, sf_dir, m, kstar, n_train,
+                                           iters),
+                params=(m, kstar, n_train, iters))
 
 
 def pq_train_codebooks(spark: SparkSession, sf_dir: str,

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load, table_rows_cached
+from ..catalog import load, require_unique_doc_ids, table_rows_cached
 from .common import (davg, fround6, sql_davg, sql_dvar_expr, sql_fround6,
                      sql_spark_pct)
 
@@ -467,6 +467,10 @@ def _scored_quality(d: DataFrame, keep: tuple = ()) -> DataFrame:
     is a corpus-wide shuffle/broadcast this keeps out of the plan
     (r17; guide §3 — removed from q127/q163/q176/q188/q209).
     """
+    clash = set(keep) & {"doc_id", "lang", "quality", "n", "nt", "ndt",
+                         "nstop"}
+    if clash:
+        raise ValueError(f"keep= collides with scorer columns: {sorted(clash)}")
     feats = d.select(
         "doc_id", "lang", *keep,
         F.length("text").alias("n"),
@@ -673,28 +677,18 @@ def q74_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # results stay deterministic because the shard function and the walk
 # order are part of the contract, not the physical plan.
 #
-# N_SHARDS auto-sizes to the session's core budget (the same env/cpu
-# derivation as session.get_cpus) instead of a fixed 8 — 8 shards on a
-# 32-core host left 3/4 of the cores idle through the whole walk
-# (measured: the round-4 bench charged q77 3.6 s for an 8-task stage).
-# The oracle f-string bakes the SAME module constant, so Spark and
-# DuckDB replay identical shard assignments within any one process, and
-# every downstream consumer (curation DAG, invariants test) imports the
-# constant rather than assuming a value.
+# N_SHARDS is a fixed semantic constant: the shard function is part of
+# the output, so it must not follow the host's core count (the round-4
+# bench charged 8 shards 3.6 s on 32 cores; 32 shards keep a 32-core
+# host busy).  The oracle f-string and every downstream consumer
+# (curation DAG, invariants test) read this constant.
 #
 # The oracle replays the same walk as a recursive CTE (the q56 pattern):
 # row r's bin state derives from row r-1's — a linear recursion DuckDB
 # evaluates exactly.
 # --------------------------------------------------------------------------
 _PACK_CAP = 512
-
-
-def _pack_shards() -> int:
-    from ..session import get_cpus
-    return get_cpus()
-
-
-_PACK_SHARDS = _pack_shards()
+_PACK_SHARDS = 32
 
 
 @query(
@@ -1778,6 +1772,7 @@ def q121_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q127_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import global_ntile
 
+    require_unique_doc_ids(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     # keep=: the scorer carries n_chars through its 1:1 projection, so
     # the old corpus self-join on doc_id is gone (r17, guide §3)
@@ -1999,9 +1994,20 @@ def q139_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on doc_id once.  ln() per row is IEEE-identical across engines; the
 # cross-engine sum uses the round-9 + decimal trick from q121.
 # --------------------------------------------------------------------------
+def _q141_round(places: int, div: str) -> str:
+    """Half-up rounding of the per-doc mean nll ``s / c`` to ``places``
+    decimals, in units of 10^-places, where ``s`` is the doc's exact
+    term sum in units of 10^-9.  Integer arithmetic (``div`` is the
+    engine's integer division), so both engines round the exact
+    quotient: rounding a double mean first let DuckDB and Spark split
+    on a value like 3.4367709674999998."""
+    k = 10 ** (9 - places)
+    return f"(2 * s + {k} * c) {div} ({2 * k} * c)"
+
+
 @query(
     "q141_unigram_logprob",
-    """
+    f"""
     WITH tok AS (
         SELECT doc_id, source, UNNEST(string_split(text, ' ')) AS t
         FROM documents
@@ -2011,19 +2017,23 @@ def q139_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot AS (SELECT SUM(n) AS tot FROM freq),
     perdoc AS (
         SELECT doc_id, source,
-               CAST(SUM(CAST(ROUND(-ln(CAST(freq.n AS DOUBLE) / tot.tot), 9)
-                             AS DECIMAL(30,9))) AS DOUBLE)
-                   / COUNT(*) AS nll
+               SUM(CAST(CAST(ROUND(-ln(CAST(freq.n AS DOUBLE) / tot.tot), 9)
+                             AS DECIMAL(30,9)) * 1000000000 AS BIGINT)) AS s,
+               COUNT(*) AS c
         FROM tokf JOIN freq ON tokf.t = freq.t CROSS JOIN tot
         GROUP BY doc_id, source
+    ),
+    r AS (
+        SELECT source, {_q141_round(9, "//")} AS r9,
+               {_q141_round(6, "//")} AS r6
+        FROM perdoc
     )
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CAST(ROUND(nll, 9) AS DECIMAL(30,9))) AS DOUBLE)
-               / COUNT(*) AS avg_nll,
-           ROUND(MIN(nll), 6) AS min_nll,
-           ROUND(MAX(nll), 6) AS max_nll
-    FROM perdoc GROUP BY source
+           CAST(SUM(r9) AS DOUBLE) / 1e9 / COUNT(*) AS avg_nll,
+           CAST(MIN(r6) AS DOUBLE) / 1e6 AS min_nll,
+           CAST(MAX(r6) AS DOUBLE) / 1e6 AS max_nll
+    FROM r GROUP BY source
     """,
 )
 def q141_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2034,18 +2044,21 @@ def q141_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     tot = freq.agg(F.sum("n").alias("tot"))  # 1 row — broadcast crossJoin
     p = F.col("n").cast("double") / F.col("tot")
-    term = F.round(-F.log(p), 9).cast("decimal(30,9)")
+    # exact term in units of 10^-9: decimal(18,9) x 10^9 keeps full scale
+    term = (F.round(-F.log(p), 9).cast("decimal(18,9)")
+            * 1000000000).cast("bigint")
     perdoc = (tok.join(freq, "t")
               .crossJoin(F.broadcast(tot))
               .groupBy("doc_id", "source")
-              .agg((F.sum(term).cast("double") / F.count(F.lit(1)))
-                   .alias("nll")))
+              .agg(F.sum(term).alias("s"), F.count(F.lit(1)).alias("c"))
+              .select("source", F.expr(_q141_round(9, "div")).alias("r9"),
+                      F.expr(_q141_round(6, "div")).alias("r6")))
     return (perdoc.groupBy("source")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                 (F.sum(F.round(F.col("nll"), 9).cast("decimal(30,9)"))
-                  .cast("double") / F.count(F.lit(1))).alias("avg_nll"),
-                 F.round(F.min("nll"), 6).alias("min_nll"),
-                 F.round(F.max("nll"), 6).alias("max_nll")))
+                 (F.sum("r9").cast("double") / 1e9
+                  / F.count(F.lit(1))).alias("avg_nll"),
+                 (F.min("r6").cast("double") / 1e6).alias("min_nll"),
+                 (F.max("r6").cast("double") / 1e6).alias("max_nll")))
 
 
 # --------------------------------------------------------------------------
@@ -2685,6 +2698,7 @@ def q160_lang_mislabel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q163_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import global_row_number
 
+    require_unique_doc_ids(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     # keep=: n_chars rides the scorer's 1:1 projection — no corpus
     # self-join (r17, guide §3)
@@ -2894,6 +2908,7 @@ def q172_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q176_score_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import grouped_percentiles
 
+    require_unique_doc_ids(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     # keep=: source rides the scorer's 1:1 projection — no corpus
     # self-join (r17, guide §3)
@@ -3168,6 +3183,7 @@ def q186_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q188_aa_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .common import davg, dvar_samp
 
+    require_unique_doc_ids(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     scored = _scored_quality(d)
     arm = (F.expr(_md5_bucket("spark", "doc_id")) % 2).cast("bigint")
@@ -3741,6 +3757,7 @@ def q209_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three branches (token explode, q182-gram diversity, quality score)
     # all fan out of this scan; spreading it parallelizes every branch
     # off ONE reused exchange (measured 2.6s -> 1.9s at sf0.1)
+    require_unique_doc_ids(spark, sf_dir)
     d = _spread_docs(load(spark, sf_dir, "documents"))
     tokf = (d.select("source", "doc_id",
                      F.explode(F.split("text", " ")).alias("t"))

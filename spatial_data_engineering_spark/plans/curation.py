@@ -128,28 +128,16 @@ def curation_stages(spark: SparkSession,
 
 def curation_stages_cached(spark: SparkSession,
                            sf_dir: str) -> list[tuple[str, DataFrame]]:
-    """Session-memoized ``curation_stages`` (round 15; VERDICT r14 task
-    3 — the kmeans_fit_cached pattern).  q212 (shards) and q213 (funnel)
-    replay the SAME deterministic stage pipeline; without the memo each
-    re-runs the LSH-pair, decontamination and quality-cut upstream that
-    the lazily-checkpointed survivor sets exist to pay once.  Keyed by
-    (session, documents fingerprint) via the dedup module's frame memo,
-    so a regenerated corpus invalidates and two sessions never share;
-    stage frames are pure functions of content hashes (the module
-    docstring's determinism contract), so the memo can only remove
-    recompute, never move a value.  At 100 TB this is the honest shape:
-    a curation run materializes its per-stage survivor tables once and
-    every report reads them."""
+    """Session-memoized ``curation_stages``: q212 (shards) and q213
+    (funnel) replay the same deterministic stage pipeline, whose LSH-pair,
+    decontamination and quality-cut upstream the lazily-checkpointed
+    survivor sets exist to pay once."""
     from ..operators.dedup import _doc_frame_memo
 
-    # MEMO-KEY CONTRACT (r15 advice): every table a stage reads must be
-    # named here so its fingerprint folds into the key.  Today all five
-    # stages derive SOLELY from documents — q79's benchmark membership
-    # is a pure doc_id function, not a table read — so the key is the
-    # documents fingerprint alone.  A future stage reading another
-    # table (e.g. a real eval-suite table for decontamination) MUST add
-    # it to ``table=``, or a changed eval table would silently serve
-    # stale stage frames within a session.
+    # Every table a stage reads must be named here so its fingerprint
+    # folds into the key.  All five stages derive solely from documents
+    # (q79's benchmark membership is a doc_id function, not a table read);
+    # a stage that reads another table must add it to ``table=``.
     return _doc_frame_memo(spark, sf_dir, "curation_stages",
                            lambda: curation_stages(spark, sf_dir),
                            table=("documents",))

@@ -86,6 +86,20 @@ def get_cpus() -> int:
         return os.cpu_count() or 4
 
 
+def default_driver_mem() -> str:
+    """About half of physical memory, at most 32g: the rest is headroom
+    for Python workers and Arrow buffers.  ParallelGC grows the heap to
+    its cap, so a fixed 32g heap got the JVM killed on a 15 GB host with
+    no swap."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{max(1, min(32, round(kb / 2 ** 21)))}g"
+
+
 def build_session(app_name: str = "spatial_data_engineering_spark",
                   cpus: int | None = None,
                   shuffle_partitions: int | None = None,
@@ -132,10 +146,11 @@ def build_session(app_name: str = "spatial_data_engineering_spark",
         # the single-node resource that doesn't scale out.  Measured
         # (60-query subset x 3 passes, sf0.1): 75.8/48.8/40.2 s default
         # vs 52.9/39.7/35.7 s at 10k entries.  ~1000 cached classes is
-        # tens of MB of metaspace — nothing against a 32 GiB driver.
+        # tens of MB of metaspace, small next to the driver heap.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem()))
         # throughput GC for the single-JVM batch harness: the suite is
         # all short-lived allocation (UnsafeRow buffers, codegen), where
         # Parallel beats G1's pause-oriented heuristics by a few percent

@@ -75,17 +75,17 @@ def test_dedup_components_vs_pairs(spark):
 
 def test_near_dup_pairs_materialized_once(spark):
     """The q47->{q56,q86,curation} family must share ONE materialization
-    of the LSH pair set per (application, sf_dir) — each graph consumer
+    of the LSH pair set per (session, corpus) — each graph consumer
     re-executing the shingle/band/verify DAG cold was the round-3
     perf finding (q86 first run 20-35s vs 4.7s warm)."""
+    from spatial_data_engineering_spark import memo
     from spatial_data_engineering_spark.operators import dedup
     from spatial_data_engineering_spark.operators.clustering import (
         q56_dedup_components, q86_pagerank_centrality)
 
-    key = (spark.sparkContext.applicationId, SF_ORACLE)
-    dedup._PAIR_CACHE.pop(key, None)
-    before = dedup._PAIR_CACHE_COMPUTES
-    before_disk = dedup._PAIR_CACHE_DISK_HITS
+    memo.forget(spark, "pairs")
+    before = memo.COUNTS["pairs"]["builds"]
+    before_disk = memo.COUNTS["pairs"]["disk_hits"]
 
     first = dedup.near_dup_pairs(spark, SF_ORACLE)
     # the cached frame is materialized (checkpoint or parquet read-back):
@@ -100,8 +100,8 @@ def test_near_dup_pairs_materialized_once(spark):
     # exactly ONE expensive event for the whole consumer family: either a
     # cold LSH materialization or (round 6+) a disk read-back of the
     # persisted pair table from an earlier session
-    assert (dedup._PAIR_CACHE_COMPUTES - before) + (
-        dedup._PAIR_CACHE_DISK_HITS - before_disk) == 1
+    assert (memo.COUNTS["pairs"]["builds"] - before) + (
+        memo.COUNTS["pairs"]["disk_hits"] - before_disk) == 1
 
 
 def test_embedding_covariance_matches_numpy(spark):

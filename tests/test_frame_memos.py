@@ -1,145 +1,126 @@
-"""Round-15 session-frame memos (VERDICT r14 task 3): the shared
-signature/stage frames build ONCE per (session, corpus) and their
-consumers produce bit-identical values through the memo.
+"""The session tier of ``memo()``: shared frames build ONCE per (session,
+corpus) and their consumers produce bit-identical values through it.
 
 Value identity is the load-bearing assertion: each memoized query is
-compared row-for-row against a cold rebuild in the same session (cache
-cleared), so the memo provably removes recompute without moving a
-value.  Compute-count hooks pin the sharing itself.
+compared row-for-row against a cold rebuild in the same session (memo
+forgotten), so the memo provably removes recompute without moving a
+value.  ``memo.COUNTS`` pins the sharing itself.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+from spatial_data_engineering_spark import memo
 
 from .conftest import SF_ORACLE
 
+_DOCS = os.path.join(SF_ORACLE, "documents.parquet")
+
 
 def _rows(df):
-    return sorted(map(tuple, df.collect()))
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _query(name):
+    from spatial_data_engineering_spark.queries_registry import _modules
+
+    return next(m.QUERIES[name] for m in _modules() if name in m.QUERIES)
+
+
+def _cold_events(tag):
+    return memo.COUNTS[tag]["builds"] + memo.COUNTS[tag]["disk_hits"]
 
 
 @pytest.fixture()
-def clear_memos():
-    from spatial_data_engineering_spark.operators import dedup
-
-    dedup._DOC_FRAME_CACHE.clear()
+def clear_memos(spark):
+    memo.forget(spark)
     yield
-    dedup._DOC_FRAME_CACHE.clear()
+    memo.forget(spark)
+
+
+def _build_once_then_identical(spark, tag, consumers):
+    n0 = _cold_events(tag)
+    first = [_rows(_query(q)(spark, SF_ORACLE)) for q in consumers]
+    assert _cold_events(tag) - n0 == 1, \
+        f"{' + '.join(consumers)} must share ONE {tag} build"
+    memo.forget(spark, tag)  # cold rebuild in the same session
+    assert [_rows(_query(q)(spark, SF_ORACLE)) for q in consumers] == first
 
 
 def test_minhash_frames_build_once_for_q47_and_q156(spark, clear_memos):
-    from spatial_data_engineering_spark.operators import dedup
-
-    n0 = dedup._DOC_FRAME_COMPUTES
-    a1 = _rows(dedup.QUERIES["q47_minhash_lsh"](spark, SF_ORACLE))
-    b1 = _rows(dedup.QUERIES["q156_minhash_estimate_audit"](spark,
-                                                            SF_ORACLE))
-    built_once = dedup._DOC_FRAME_COMPUTES - n0
-    assert built_once == 1, "q47+q156 must share ONE minhash-frame build"
-
-    # cold rebuild in the same session: values must be identical
-    dedup._DOC_FRAME_CACHE.clear()
-    a2 = _rows(dedup.QUERIES["q47_minhash_lsh"](spark, SF_ORACLE))
-    b2 = _rows(dedup.QUERIES["q156_minhash_estimate_audit"](spark,
-                                                            SF_ORACLE))
-    assert a1 == a2 and b1 == b2
+    _build_once_then_identical(spark, "minhash_frames",
+                               ["q47_minhash_lsh",
+                                "q156_minhash_estimate_audit"])
 
 
 def test_simhash_sig_builds_once_for_q48_q167(spark, clear_memos):
-    from spatial_data_engineering_spark.operators import dedup
-
-    n0 = dedup._DOC_FRAME_COMPUTES
-    a1 = _rows(dedup.QUERIES["q48_simhash"](spark, SF_ORACLE))
-    b1 = _rows(dedup.QUERIES["q167_dedup_strategy_venn"](spark,
-                                                         SF_ORACLE))
-    assert dedup._DOC_FRAME_COMPUTES - n0 == 1, \
-        "q48+q167 must share ONE 16-bit SimHash signature build"
-
-    dedup._DOC_FRAME_CACHE.clear()
-    a2 = _rows(dedup.QUERIES["q48_simhash"](spark, SF_ORACLE))
-    b2 = _rows(dedup.QUERIES["q167_dedup_strategy_venn"](spark,
-                                                         SF_ORACLE))
-    assert a1 == a2 and b1 == b2
+    _build_once_then_identical(spark, "simhash16",
+                               ["q48_simhash", "q167_dedup_strategy_venn"])
 
 
 def test_q153_sig_memo_value_identity(spark, clear_memos):
-    from spatial_data_engineering_spark.operators import dedup
-
-    a1 = _rows(dedup.QUERIES["q153_simhash_hamming_join"](spark,
-                                                          SF_ORACLE))
-    a1b = _rows(dedup.QUERIES["q153_simhash_hamming_join"](spark,
-                                                           SF_ORACLE))
-    dedup._DOC_FRAME_CACHE.clear()
-    a2 = _rows(dedup.QUERIES["q153_simhash_hamming_join"](spark,
-                                                          SF_ORACLE))
-    assert a1 == a1b == a2
+    q153 = _query("q153_simhash_hamming_join")
+    a1 = _rows(q153(spark, SF_ORACLE))
+    a1b = _rows(q153(spark, SF_ORACLE))
+    memo.forget(spark, "simhash64")
+    assert a1 == a1b == _rows(q153(spark, SF_ORACLE))
 
 
 def test_curation_stages_build_once_for_q212_q213(spark, clear_memos):
-    from spatial_data_engineering_spark.operators import dedup
-    from spatial_data_engineering_spark.plans import curation
-
-    n0 = dedup._DOC_FRAME_COMPUTES
-    f1 = _rows(curation.QUERIES["q213_curation_funnel"](spark, SF_ORACLE))
-    s1 = _rows(curation.QUERIES["q212_curation_shards"](spark, SF_ORACLE))
-    n_stage_builds = sum(
-        1 for k in dedup._DOC_FRAME_CACHE if k[1] == "curation_stages")
-    assert n_stage_builds == 1, \
-        "q212+q213 must share ONE curation-stage pipeline build"
-    assert dedup._DOC_FRAME_COMPUTES > n0
-
-    dedup._DOC_FRAME_CACHE.clear()
-    f2 = _rows(curation.QUERIES["q213_curation_funnel"](spark, SF_ORACLE))
-    s2 = _rows(curation.QUERIES["q212_curation_shards"](spark, SF_ORACLE))
-    assert f1 == f2 and s1 == s2
+    _build_once_then_identical(spark, "curation_stages",
+                               ["q213_curation_funnel",
+                                "q212_curation_shards"])
 
 
 def test_semdedup_assign_builds_once_for_q148_q201(spark, clear_memos):
-    from spatial_data_engineering_spark.operators import dedup, similarity
+    _build_once_then_identical(spark, "semdedup_assign",
+                               ["q148_semdedup", "q201_cluster_label_purity"])
 
-    a1 = _rows(similarity.QUERIES["q148_semdedup"](spark, SF_ORACLE))
-    b1 = _rows(similarity.QUERIES["q201_cluster_label_purity"](spark,
-                                                               SF_ORACLE))
-    n_assign_builds = sum(
-        1 for k in dedup._DOC_FRAME_CACHE if k[1] == "semdedup_assign")
-    assert n_assign_builds == 1, \
-        "q148+q201 must share ONE SemDeDup assignment build"
 
-    dedup._DOC_FRAME_CACHE.clear()
-    a2 = _rows(similarity.QUERIES["q148_semdedup"](spark, SF_ORACLE))
-    b2 = _rows(similarity.QUERIES["q201_cluster_label_purity"](spark,
-                                                               SF_ORACLE))
-    assert a1 == a2 and b1 == b2
+def test_cov_moments_build_once_for_q93_and_q191(spark, clear_memos):
+    _build_once_then_identical(spark, "cov_moments",
+                               ["q93_embedding_covariance",
+                                "q191_dim_redundancy"])
+
+
+@pytest.mark.parametrize("tag,consumers", [
+    ("mmr_cand", ["q110_mmr_diversify", "q220_mmr_audit"]),
+    ("neardup_components", ["q56_dedup_components", "q94_dedup_canonical"]),
+    ("edges_q109", ["q109_triangle_count", "q115_bfs_hops"]),
+    ("kmeans_fit", ["q55_kmeans", "q219_kmeans_audit",
+                    "q223_cluster_silhouette"]),
+    ("pq_codebooks", ["q111_pq_adc_topk", "q218_pq_recall_audit"]),
+    ("spans", ["q224_exact_substring_dedup",
+               "q225_substring_dedup_materialize"]),
+])
+def test_shared_memo_builds_once(spark, clear_memos, tag, consumers):
+    _build_once_then_identical(spark, tag, consumers)
 
 
 def test_memo_falls_back_uncached_for_virtual_sources(spark):
-    """A non-fingerprintable sf_dir (no documents.parquet on disk) must
-    build fresh — never a stale hit, never a crash."""
-    from spatial_data_engineering_spark.operators import dedup
-
+    """A source that cannot be statted builds fresh on every call —
+    never a stale hit, never a crash."""
     calls = []
-    out = dedup._doc_frame_memo(spark, "/nonexistent/sfdir", "t",
-                                lambda: calls.append(1) or "frame")
-    out2 = dedup._doc_frame_memo(spark, "/nonexistent/sfdir", "t",
-                                 lambda: calls.append(1) or "frame")
-    assert out == out2 == "frame" and len(calls) == 2
+    for _ in range(2):
+        out = memo.memo(spark, "t", ["/nonexistent/sfdir/documents.parquet"],
+                        lambda: calls.append(1) or "frame")
+        assert out == "frame"
+    assert len(calls) == 2
 
 
 def test_concurrent_cold_callers_build_exactly_once(spark):
-    """r15 advice: two concurrent cold callers of the SAME memo key
-    must produce exactly ONE build.  Before the per-key build lock,
-    both executed build() and the loser's eagerly-checkpointed frames
-    leaked executor storage until ContextCleaner GC; now the second
-    caller blocks on the key's lock and reads the winner's entry."""
+    """Two concurrent cold callers of the SAME key produce exactly ONE
+    build: the second blocks on the key's lock and reads the winner's
+    entry (a loser's eagerly-checkpointed frames would leak executor
+    storage)."""
     import threading
     import time
 
-    from spatial_data_engineering_spark.operators import dedup
-
-    dedup._DOC_FRAME_CACHE.clear()
-    dedup._DOC_FRAME_BUILD_LOCKS.clear()
-    n0 = dedup._DOC_FRAME_COMPUTES
+    memo.forget(spark, "race_tag")
+    n0 = memo.COUNTS["race_tag"]["builds"]
     builds, results, errs = [], [], []
     gate = threading.Barrier(2)
 
@@ -151,8 +132,7 @@ def test_concurrent_cold_callers_build_exactly_once(spark):
     def call():
         try:
             gate.wait()
-            results.append(dedup._doc_frame_memo(
-                spark, SF_ORACLE, "race_tag", build))
+            results.append(memo.memo(spark, "race_tag", [_DOCS], build))
         except Exception as exc:  # pragma: no cover - diagnostic
             errs.append(exc)
 
@@ -164,80 +144,84 @@ def test_concurrent_cold_callers_build_exactly_once(spark):
     assert not errs, errs
     assert results == ["frame", "frame"]
     assert len(builds) == 1, "exactly one cold build may run per key"
-    assert dedup._DOC_FRAME_COMPUTES - n0 == 1
-    dedup._DOC_FRAME_CACHE.clear()
-    dedup._DOC_FRAME_BUILD_LOCKS.clear()
+    assert memo.COUNTS["race_tag"]["builds"] - n0 == 1
+    assert memo.COUNTS["race_tag"]["hits"] >= 1
+    memo.forget(spark, "race_tag")
+
+
+def test_memo_stress_many_threads_build_each_key_once(spark):
+    """More threads than cores, a shortened switch interval: every key
+    builds once, and every other call is counted as a hit."""
+    import sys
+    import threading
+
+    tags = [f"stress_{i}" for i in range(4)]
+    memo.forget(spark, *tags)
+    before = {t: dict(memo.COUNTS[t]) for t in tags}
+    n_threads, rounds = 16, 50
+    errs = []
+
+    def call(i):
+        try:
+            for r in range(rounds):
+                tag = tags[(i + r) % len(tags)]
+                assert memo.memo(spark, tag, [_DOCS], lambda: tag) == tag
+        except Exception as exc:  # pragma: no cover - diagnostic
+            errs.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=call, args=(i,))
+              for i in range(n_threads)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts) and not errs, errs
+    for t in tags:
+        got = {k: memo.COUNTS[t][k] - before[t].get(k, 0)
+               for k in ("builds", "hits")}
+        assert got == {"builds": 1,
+                       "hits": n_threads * rounds // len(tags) - 1}
+    memo.forget(spark, *tags)
 
 
 def test_memo_reentrant_for_dependent_tags(spark):
     """A build() that re-enters the memo for ANOTHER tag (the
-    curation_stages -> minhash_frames shape) must not deadlock on the
-    per-key locks — the tag dependency DAG orders the acquisitions."""
-    from spatial_data_engineering_spark.operators import dedup
-
-    dedup._DOC_FRAME_CACHE.clear()
-    dedup._DOC_FRAME_BUILD_LOCKS.clear()
-
-    def inner_build():
-        return "inner"
+    curation_stages -> near_dup_pairs -> minhash_frames shape) must not
+    deadlock on the per-key locks."""
+    memo.forget(spark, "dag_inner", "dag_outer")
 
     def outer_build():
-        return dedup._doc_frame_memo(spark, SF_ORACLE, "dag_inner",
-                                     inner_build) + "+outer"
+        return memo.memo(spark, "dag_inner", [_DOCS],
+                         lambda: "inner") + "+outer"
 
-    out = dedup._doc_frame_memo(spark, SF_ORACLE, "dag_outer",
-                                outer_build)
-    assert out == "inner+outer"
-    dedup._DOC_FRAME_CACHE.clear()
-    dedup._DOC_FRAME_BUILD_LOCKS.clear()
+    assert memo.memo(spark, "dag_outer", [_DOCS],
+                     outer_build) == "inner+outer"
+    memo.forget(spark, "dag_inner", "dag_outer")
 
 
 def test_memo_key_folds_every_named_table(spark, tmp_path):
-    """r15 advice (curation contract): with table=(a, b), changing
-    EITHER source invalidates the key."""
+    """With two sources, changing EITHER one invalidates the key."""
     import shutil
     import time as _time
 
-    from spatial_data_engineering_spark.operators import dedup
-
-    sfd = tmp_path / "sf"
-    sfd.mkdir()
+    srcs = []
     for t in ("documents", "embeddings"):
-        shutil.copy(f"{SF_ORACLE}/{t}.parquet", sfd / f"{t}.parquet")
+        shutil.copy(f"{SF_ORACLE}/{t}.parquet", tmp_path / f"{t}.parquet")
+        srcs.append(str(tmp_path / f"{t}.parquet"))
     calls = []
-    args = (spark, str(sfd), "two_tab")
 
-    dedup._doc_frame_memo(*args, lambda: calls.append(1) or "v1",
-                          table=("documents", "embeddings"))
-    dedup._doc_frame_memo(*args, lambda: calls.append(1) or "v2",
-                          table=("documents", "embeddings"))
+    memo.memo(spark, "two_tab", srcs, lambda: calls.append(1) or "v1")
+    memo.memo(spark, "two_tab", srcs, lambda: calls.append(1) or "v2")
     assert len(calls) == 1  # hit on unchanged fingerprints
 
     # touch the SECOND table only; the key must change
     _time.sleep(0.01)
-    (sfd / "embeddings.parquet").touch()
-    out = dedup._doc_frame_memo(*args, lambda: calls.append(1) or "v3",
-                                table=("documents", "embeddings"))
+    (tmp_path / "embeddings.parquet").touch()
+    out = memo.memo(spark, "two_tab", srcs, lambda: calls.append(1) or "v3")
     assert out == "v3" and len(calls) == 2
-    dedup._DOC_FRAME_CACHE.clear()
-    dedup._DOC_FRAME_BUILD_LOCKS.clear()
-
-
-def test_cov_moments_build_once_for_q93_and_q191(spark, clear_memos):
-    """r17 opt: q93 (covariance) and q191 (redundancy audit over the
-    SAME covariance) must share ONE BLAS corpus pass per session, and a
-    cold rebuild must produce bit-identical values."""
-    from spatial_data_engineering_spark.operators import dedup, similarity
-
-    n0 = dedup._DOC_FRAME_COMPUTES
-    a1 = _rows(similarity.QUERIES["q93_embedding_covariance"](spark,
-                                                              SF_ORACLE))
-    b1 = _rows(similarity.QUERIES["q191_dim_redundancy"](spark, SF_ORACLE))
-    assert dedup._DOC_FRAME_COMPUTES - n0 == 1, \
-        "q93+q191 must share ONE covariance-moment build"
-
-    dedup._DOC_FRAME_CACHE.clear()
-    a2 = _rows(similarity.QUERIES["q93_embedding_covariance"](spark,
-                                                              SF_ORACLE))
-    b2 = _rows(similarity.QUERIES["q191_dim_redundancy"](spark, SF_ORACLE))
-    assert a1 == a2 and b1 == b2
+    memo.forget(spark, "two_tab")

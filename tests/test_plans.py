@@ -439,24 +439,24 @@ def test_q96_lift_covers_all_multi_token_docs(spark):
 
 def test_ssj_candidates_materialized_once(spark):
     """q76/q88 must share ONE materialization of the df-capped candidate
-    pair set per (application, sf_dir) — each was re-running the token
+    pair set per (session, corpus) — each was re-running the token
     explode + df groupBy + index self-join cold (the near_dup_pairs
     finding, applied to the exact set-similarity family)."""
+    from spatial_data_engineering_spark import memo
     from spatial_data_engineering_spark.operators import dedup
 
-    key = (spark.sparkContext.applicationId, SF_ORACLE)
-    dedup._SSJ_CACHE.pop(key, None)
-    before = dedup._SSJ_CACHE_COMPUTES
+    memo.forget(spark, "ssj_candidates")
+    before = memo.COUNTS["ssj_candidates"]["builds"]
 
     _, c1 = dedup.ssj_candidate_pairs(spark, SF_ORACLE)
     _, c2 = dedup.ssj_candidate_pairs(spark, SF_ORACLE)
     assert c2 is c1
-    assert dedup._SSJ_CACHE_COMPUTES == before + 1
+    assert memo.COUNTS["ssj_candidates"]["builds"] == before + 1
 
     n76 = dedup.q76_ngram_jaccard_join(spark, SF_ORACLE).count()
     n88 = dedup.q88_containment_join(spark, SF_ORACLE).count()
     assert n76 > 0 and n88 > 0
-    assert dedup._SSJ_CACHE_COMPUTES == before + 1
+    assert memo.COUNTS["ssj_candidates"]["builds"] == before + 1
 
 
 def test_q106_bloom_prunes_before_shuffle(spark):

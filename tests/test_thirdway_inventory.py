@@ -74,6 +74,7 @@ REPLAYS = {
     "q127_score_calibration": "test_numpy_crosscheck13.py",
     "q139_split_contamination": "test_numpy_crosscheck13.py",
     "q145_curriculum_stages": "test_numpy_crosscheck5.py",
+    "q141_unigram_logprob": "test_numpy_crosscheck2.py",
     "q159_bm25_topk": "test_numpy_crosscheck2.py",
     "q163_score_auc": "test_numpy_crosscheck.py",
     "q176_score_normalization": "test_numpy_crosscheck2.py",

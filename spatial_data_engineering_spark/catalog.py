@@ -80,36 +80,40 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # key be derived deterministically so task retries reproduce the same
 # row-to-partition assignment).
 SPREAD_KEYS = {"lineitem": "l_orderkey", "orders": "o_orderkey",
-               "embeddings": "vec_id"}
+               "embeddings": "vec_id", "documents": "doc_id"}
+
+
+def spread(df: DataFrame, key: str) -> DataFrame:
+    """Repartition a small-split scan to ``defaultParallelism`` by ``key``
+    (guide §2.5 "Input skew: one huge unsplittable file ... repartition
+    immediately after the read", §6).  The bench tables are single-row-
+    group parquet files, so every scan is ONE task and whatever follows
+    inherits that single thread (measured: the q76 shingle pipeline
+    dropped 25-33s -> ~10s at sf0.1 once spread).  A no-op whenever the
+    scan already has enough splits — at 100 TB the input has thousands of
+    row groups and an unconditional repartition would shuffle it for
+    nothing, so this is scale-adaptive, not a local[32] constant."""
+    sc = df.sparkSession.sparkContext
+    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
+        return df
+    return df.repartition(sc.defaultParallelism, key)
 
 
 def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``load`` plus the input-skew fix for unsplittable scans (guide
-    §2.5 "Input skew: one huge unsplittable file ... repartition
-    immediately after the read", §6): the bench tables are single-row-
-    group parquet files, so every scan is ONE task and a scan-dominated
-    aggregate runs single-threaded regardless of core count.  The
-    repartition is guarded exactly like the dedup family's _spread_docs:
-    a no-op whenever the scan already has enough splits — at 100 TB the
-    input has thousands of row groups and the guard disables it, so this
-    is scale-adaptive, not a local[32] constant.  Predicate pushdown and
-    column pruning pass through RepartitionByExpression (verified in the
-    r16 plan captures), so the shuffle carries only filtered, pruned
-    rows.
+    """``load`` plus ``spread`` on the table's ``SPREAD_KEYS`` key.
+    Predicate pushdown and column pruning pass through
+    RepartitionByExpression (verified in the r16 plan captures), so the
+    shuffle carries only filtered, pruned rows.
 
-    Applied SURGICALLY to compute-heavy aggregate queries where the r16
+    Applied SURGICALLY: to the documents pipelines that explode text,
+    and to compute-heavy aggregate queries where the r16
     interleaved A/B proved a win (0.45-0.85x) — a blanket spread in
     ``load`` measurably hurts filter-light or join-shaped queries whose
     pre-shuffle partial aggregation already collapses the row count
     (q06 1.27x, q02 1.67x, q164 1.95x in the same A/B)."""
     df = load(spark, sf_dir, name)
     key = SPREAD_KEYS.get(name)
-    if key is None:
-        return df
-    sc = spark.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism, key)
+    return df if key is None else spread(df, key)
 
 
 def table_rows_cached(spark: SparkSession, sf_dir: str, name: str) -> int:

@@ -13,6 +13,9 @@ queries can use them, mirroring how PostGIS exposes ST_ into SQL.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from itertools import repeat
+
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -49,31 +52,27 @@ def _map(series: pd.Series, fn):
 
 @F.pandas_udf(T.BinaryType())
 def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
-    # Vectorized fast path (r16 optimization, guide §4.2): point WKB is a
-    # fixed 21-byte record (01 01000000 <x:f64le> <y:f64le>), so a whole
-    # batch is one numpy byte-matrix assembly instead of a per-row
-    # struct.pack through the generic writer — byte-identical output
-    # (pinned by the WKB round-trip tests).  Non-float batches (object
-    # dtype carrying Nones) keep the general row loop.
-    if x.dtype == "float64" and y.dtype == "float64":
-        import numpy as np
+    # Point WKB is a fixed 21-byte record (01 01000000 <x:f64le> <y:f64le>),
+    # so a whole batch is one numpy byte-matrix assembly instead of a
+    # per-row struct.pack through the generic writer — byte-identical
+    # output (tests compare it with ``G.wkb_dumps``).  Arrow hands a null
+    # coordinate to pandas as NaN or None; either one, or a NaN value,
+    # makes the point null, never a NaN point.
+    import numpy as np
 
-        n = len(x)
-        buf = np.empty((n, 21), dtype=np.uint8)
-        buf[:, 0] = 1          # little-endian flag
-        buf[:, 1] = 1          # geometry type 1 = Point
-        buf[:, 2:5] = 0
-        buf[:, 5:13] = np.ascontiguousarray(
-            x.to_numpy(dtype="float64")).view(np.uint8).reshape(n, 8)
-        buf[:, 13:21] = np.ascontiguousarray(
-            y.to_numpy(dtype="float64")).view(np.uint8).reshape(n, 8)
-        tb = buf.tobytes()
-        return pd.Series([tb[i * 21:i * 21 + 21] for i in range(n)])
-    return pd.Series(
-        [None if xi is None or yi is None
-         else G.wkb_dumps(("Point", (float(xi), float(yi))))
-         for xi, yi in zip(x, y)]
-    )
+    xs = np.ascontiguousarray(x.to_numpy(dtype="float64", na_value=np.nan))
+    ys = np.ascontiguousarray(y.to_numpy(dtype="float64", na_value=np.nan))
+    n = len(xs)
+    buf = np.empty((n, 21), dtype=np.uint8)
+    buf[:, 0] = 1          # little-endian flag
+    buf[:, 1] = 1          # geometry type 1 = Point
+    buf[:, 2:5] = 0
+    buf[:, 5:13] = xs.view(np.uint8).reshape(n, 8)
+    buf[:, 13:21] = ys.view(np.uint8).reshape(n, 8)
+    tb = buf.tobytes()
+    ok = (~(np.isnan(xs) | np.isnan(ys))).tolist()
+    return pd.Series([tb[i * 21:i * 21 + 21] if ok[i] else None
+                      for i in range(n)])
 
 
 @F.pandas_udf(T.BinaryType())
@@ -258,28 +257,8 @@ def st_simplify(wkb: pd.Series, tol: pd.Series) -> pd.Series:
 
 # ------------------------------------------------- grid bucketing (join) --
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def st_grid_cells(wkb: pd.Series, cell: pd.Series) -> pd.Series:
-    """Grid-cell ids ("ix_iy") whose cell intersects the geometry's bbox —
-    the §4 custom physical strategy: equi-join on these ids replaces the
-    n^2 cross join; an exact predicate refines the candidates."""
-    out = []
-    for b, c in zip(wkb, cell):
-        if b is None:
-            out.append(None)
-            continue
-        bb = G.bounds(G.wkb_loads(bytes(b)))
-        out.append([f"{ix}_{iy}" for ix, iy in G.grid_cells(bb, float(c))])
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def st_grid_cells_pad(wkb: pd.Series, cell: pd.Series,
-                      pad: pd.Series) -> pd.Series:
-    """Grid-cell ids for the geometry's bbox EXPANDED by ``pad`` on every
-    side — the probe-side key generator for the distance join: two
-    geometries within distance d have bbox gap <= d, so padding one
-    side's bbox by d guarantees the pair shares a cell."""
+def _grid_cell_ids(wkb: pd.Series, cell: pd.Series,
+                   pad: Iterable[float]) -> pd.Series:
     out = []
     for b, c, p in zip(wkb, cell, pad):
         if b is None:
@@ -290,6 +269,24 @@ def st_grid_cells_pad(wkb: pd.Series, cell: pd.Series,
         bb = (xmin - p, ymin - p, xmax + p, ymax + p)
         out.append([f"{ix}_{iy}" for ix, iy in G.grid_cells(bb, float(c))])
     return pd.Series(out)
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def st_grid_cells(wkb: pd.Series, cell: pd.Series) -> pd.Series:
+    """Grid-cell ids ("ix_iy") whose cell intersects the geometry's bbox —
+    the §4 custom physical strategy: equi-join on these ids replaces the
+    n^2 cross join; an exact predicate refines the candidates."""
+    return _grid_cell_ids(wkb, cell, repeat(0.0))
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def st_grid_cells_pad(wkb: pd.Series, cell: pd.Series,
+                      pad: pd.Series) -> pd.Series:
+    """Grid-cell ids for the geometry's bbox EXPANDED by ``pad`` on every
+    side — the probe-side key generator for the distance join: two
+    geometries within distance d have bbox gap <= d, so padding one
+    side's bbox by d guarantees the pair shares a cell."""
+    return _grid_cell_ids(wkb, cell, pad)
 
 
 @F.pandas_udf(T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))))

@@ -28,21 +28,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load
+from ..queries_registry import registrar
 from .common import (davg, dsum, dvar_samp, fround6, sql_davg, sql_dsum,
                      sql_dsum_expr, sql_dvar_expr, sql_fround6,
                      sql_spark_pct)
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # --------------------------------------------------------------------------

@@ -25,19 +25,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..memo import memo
+from ..queries_registry import registrar
 from .common import np_fround6, sql_fround6
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # --------------------------------------------------------------------------

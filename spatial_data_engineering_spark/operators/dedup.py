@@ -23,20 +23,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, load_spread, spread
 from ..memo import legacy_counter, memo
+from ..queries_registry import registrar
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # --------------------------------------------------------------------------
@@ -112,23 +103,6 @@ _Q47_THETA = 0.6  # exact-Jaccard verify threshold (part of the cache key)
 _MH_P = 2_147_483_647  # 2^31 - 1; a*h stays < 2^62, no int64 overflow
 _MH_A = [2 * i + 1 for i in range(_N_HASHES)]          # odd multipliers
 _MH_B = [i * i + 17 for i in range(_N_HASHES)]
-
-
-def _spread_docs(df: DataFrame) -> DataFrame:
-    """Spread a small-split scan across the cluster before token explosion.
-
-    At bench SF the documents table is ONE parquet file -> one scan task,
-    and every shingle/explode pipeline inherits that single thread for a
-    ~300x row multiplication (measured: the q76 candidate pipeline dropped
-    25-33s -> ~10s at sf0.1 once spread).  The guard makes it a no-op when
-    the scan already has enough splits — at 100 TB the input has thousands
-    of row groups and an unconditional repartition would shuffle the whole
-    corpus text for nothing.
-    """
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism, "doc_id")
 
 
 # Spark side uses an overlapping-lookahead regex scan, not
@@ -414,7 +388,7 @@ def shingle_frames_cached(spark: SparkSession, sf_dir: str
     shingle_bands pipeline (one extra handle on its internal sig), so
     q47 and q156 consume the same values they built standalone."""
     def build():
-        d = _spread_docs(load(spark, sf_dir, "documents"))
+        d = load_spread(spark, sf_dir, "documents")
         # sh eager: it feeds three consumers in the FIRST caller's one
         # action (q47's measured pin rationale); sig/bands lazy — they
         # materialize inside whichever consumer runs first
@@ -556,7 +530,7 @@ def _simhash_sig(d: DataFrame) -> DataFrame:
     With the doc_id spread upstream the vote groupBy reuses that
     exchange — the whole signature phase runs shuffle-free.
     """
-    tok = _spread_docs(d).select("doc_id", F.explode(
+    tok = spread(d, "doc_id").select("doc_id", F.explode(
         F.array_distinct(F.split("text", " "))).alias("t"))
     dig = tok.select("doc_id", F.md5("t").alias("hh")).select(
         "doc_id",
@@ -696,11 +670,11 @@ def ssj_candidate_pairs(spark: SparkSession, sf_dir: str):
     # REVERTED same round.  The scan-derived frame keeps honest size
     # estimates and its duplication rides ReuseExchange (the standing
     # q76 note above).
-    sh, _ = _ssj_candidates(_spread_docs(load(spark, sf_dir, "documents")))
+    sh, _ = _ssj_candidates(load_spread(spark, sf_dir, "documents"))
     cand = memo(spark, "ssj_candidates",
                 (os.path.join(sf_dir, "documents.parquet"),),
-                lambda: _ssj_candidates(_spread_docs(
-                    load(spark, sf_dir, "documents")))[1]
+                lambda: _ssj_candidates(
+                    load_spread(spark, sf_dir, "documents"))[1]
                 .localCheckpoint(eager=True))
     return sh, cand
 
@@ -798,7 +772,7 @@ def substring_dup_pairs(d: DataFrame) -> DataFrame:
 @query("q81_substring_dup", _ORACLE_Q81)
 def q81_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_dup_pairs(
-        _spread_docs(load(spark, sf_dir, "documents")))
+        load_spread(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -1180,7 +1154,7 @@ _ORACLE_Q153 = f"""
 @query("q153_simhash_hamming_join", _ORACLE_Q153)
 def q153_simhash_hamming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build_sig() -> DataFrame:
-        d = _spread_docs(load(spark, sf_dir, "documents"))
+        d = load_spread(spark, sf_dir, "documents")
         # per-doc DISTINCT tokens computed row-locally (array_distinct) —
         # the same token set as the corpus-wide (doc_id, t) DISTINCT but
         # with zero shuffle, and the vote groupBy can then reuse the
@@ -1848,7 +1822,7 @@ def substring_dup_spans_cached(spark: SparkSession,
     back.  The key folds the anchor length ``_SPAN_L``."""
     return memo(spark, "spans", (os.path.join(sf_dir, "documents.parquet"),),
                 lambda: (substring_dup_spans(
-                    _spread_docs(load(spark, sf_dir, "documents"))),),
+                    load_spread(spark, sf_dir, "documents")),),
                 tier="disk", params=(_SPAN_L,))[0]
 
 

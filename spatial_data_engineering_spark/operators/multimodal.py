@@ -28,11 +28,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, load_spread
+from ..queries_registry import registrar
 from .common import sql_davg
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, query = registrar()
 
 DECODE_SCHEMA = ("doc_id bigint, source string, n_bytes bigint, "
                  "width int, height int, n_frames int")
@@ -126,15 +126,6 @@ def decode_images(df: DataFrame, real: bool = False) -> DataFrame:
             yield decode_image_batch(pdf, real=real)
 
     return df.mapInPandas(run, schema=DECODE_SCHEMA)
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -753,9 +744,7 @@ _Q227_FP_SQL = (f"list_sum(list_transform(generate_series(1, {_AF_W}), "
     """,
 )
 def q227_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _spread_docs
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
+    d = load_spread(spark, sf_dir, "documents")
     # All frame fingerprints of a doc in ONE map-side expression (r16
     # optimization; values proven identical by oracle parity + the A/B
     # in OPTIMIZATION_r16.md): the original exploded a row per stride
@@ -768,7 +757,7 @@ def q227_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass), each frame folds a W-int array slice (O(1) indexed), and
     # array_distinct replaces the (doc_id, fp) distinct SHUFFLE —
     # uniqueness is per-doc, so no exchange is needed to establish it.
-    # _spread_docs parallelizes the pipeline off the one-split bench
+    # load_spread parallelizes the pipeline off the one-split bench
     # scan exactly as the q76/q81 gram pipelines do.
     fps = (
         f"array_distinct(transform("

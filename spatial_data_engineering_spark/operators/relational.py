@@ -15,21 +15,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load, load_spread
+from ..queries_registry import registrar
 from .common import (davg, dcv, dsum, dvar_samp, sql_davg, sql_dcv_expr,
                      sql_spark_pct,
                      sql_dsum, sql_dsum_expr, sql_dvar_expr)
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # --------------------------------------------------------------------------

@@ -26,21 +26,12 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load, load_spread
 from ..memo import memo
+from ..queries_registry import registrar
 from .common import (davg, dvar_samp, fround6, np_fround6, sql_davg,
                      sql_dvar_expr, sql_fround6,
                      sql_spark_pct)
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # dot(a, b) as a strict left fold in index order, double math throughout.

@@ -33,18 +33,22 @@ from pyspark.sql import functions as F
 
 from ..functions import geometry as G
 from ..functions.st_funcs import (st_contains, st_envelope, st_grid_cells,
-                                  st_intersects)
+                                  st_grid_cells_pad, st_intersects)
 
 
 def _grid_candidates(left: DataFrame, right: DataFrame, cell: float,
-                     left_geom: str, right_geom: str) -> DataFrame:
+                     left_geom: str, right_geom: str,
+                     pad: float = 0.0) -> DataFrame:
     """Candidate pairs from the cell-id equi-join, PRE-dedup — factored
     out so the skew test can measure raw candidate duplication directly
-    (the public join dedupes and refines on top of this)."""
+    (the public joins dedupe and refine on top of this).  ``pad`` expands
+    the left side's bbox on every side before it is bucketed."""
     lg, rg = "__lg", "__rg"
     l = left.withColumnRenamed(left_geom, lg)
     r = right.withColumnRenamed(right_geom, rg)
-    l = l.withColumn("__cell", F.explode(st_grid_cells(F.col(lg), F.lit(cell))))
+    lcells = (st_grid_cells_pad(F.col(lg), F.lit(cell), F.lit(float(pad)))
+              if pad else st_grid_cells(F.col(lg), F.lit(cell)))
+    l = l.withColumn("__cell", F.explode(lcells))
     r = r.withColumn("__cell", F.explode(st_grid_cells(F.col(rg), F.lit(cell))))
     return l.join(r, "__cell").drop("__cell")
 
@@ -251,19 +255,12 @@ def distance_join(
     padding multiplies build-side duplication by ((E+2d)/(E))-ish, which
     is the inherent candidate cost of a distance predicate.
     """
-    from ..functions.st_funcs import st_dwithin, st_grid_cells_pad
+    from ..functions.st_funcs import st_dwithin
 
     if cell is None:
         cell = max(adaptive_cell(right, right_geom), float(d))
     lg, rg = "__lg", "__rg"
-    l = left.withColumnRenamed(left_geom, lg)
-    r = right.withColumnRenamed(right_geom, rg)
-    l = l.withColumn(
-        "__cell",
-        F.explode(st_grid_cells_pad(F.col(lg), F.lit(cell), F.lit(float(d)))))
-    r = r.withColumn(
-        "__cell", F.explode(st_grid_cells(F.col(rg), F.lit(cell))))
-    cand = l.join(r, "__cell").drop("__cell")
+    cand = _grid_candidates(left, right, cell, left_geom, right_geom, pad=d)
     cand = cand.dropDuplicates(left_keys + right_keys)
     out = cand.filter(st_dwithin(F.col(lg), F.col(rg), F.lit(float(d))))
     out = out.withColumnRenamed(lg, left_geom)

@@ -13,21 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load, require_unique_doc_ids, table_rows_cached
+from ..catalog import (load, load_spread, require_unique_doc_ids,
+                       table_rows_cached)
+from ..queries_registry import registrar
 from .common import (davg, fround6, sql_davg, sql_dvar_expr, sql_fround6,
                      sql_spark_pct)
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 from .dedup import _MH_P as _FOLD_P, _hex_fold as _fold
@@ -248,9 +240,7 @@ def lang_id_confusion(d: DataFrame, score_cols=None) -> DataFrame:
     """,
 )
 def q43_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _spread_docs
-
-    d = _spread_docs(load(spark, sf_dir, "documents"))
+    d = load_spread(spark, sf_dir, "documents")
     from .dedup import ngram_list_spark
 
     # linear regex gram walk, not the O(len^2) transform+substring form
@@ -3012,13 +3002,11 @@ _Q182_GRAMS_DUCK = ("list_transform(generate_series(1, "
     """,
 )
 def q182_subword_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _spread_docs
-
     # per-doc char-4-gram materialization is a ~300x row-width blowup —
     # without the spread it runs inside the single parquet scan task
     # (measured 1.74s -> 0.63s at sf0.1 once spread; no-op at scale
     # where the scan already has splits)
-    d = _spread_docs(load(spark, sf_dir, "documents"))
+    d = load_spread(spark, sf_dir, "documents")
     grams = _Q182_GRAMS_SPARK
     diversity = F.round(
         F.expr(f"size(array_distinct({grams}))").cast("double")
@@ -3752,13 +3740,11 @@ def q200_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q209_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _spread_docs
-
     # three branches (token explode, q182-gram diversity, quality score)
     # all fan out of this scan; spreading it parallelizes every branch
     # off ONE reused exchange (measured 2.6s -> 1.9s at sf0.1)
     require_unique_doc_ids(spark, sf_dir)
-    d = _spread_docs(load(spark, sf_dir, "documents"))
+    d = load_spread(spark, sf_dir, "documents")
     tokf = (d.select("source", "doc_id",
                      F.explode(F.split("text", " ")).alias("t"))
             .filter(F.col("t") != ""))

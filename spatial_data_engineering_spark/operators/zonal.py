@@ -26,20 +26,11 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.st_funcs import (st_area, st_makebox, st_num_geometries,
                                   st_point)
+from ..queries_registry import registrar
 from .common import davg, sql_davg
 from .spatial_join import grid_spatial_join, union_agg
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 # Grid pitch for joins whose build side is the _nation_boxes fixture:

@@ -48,18 +48,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.common import sql_spark_pct
+from ..queries_registry import registrar
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
+QUERIES, ORACLES, query = registrar()
 
 
 def curation_stages(spark: SparkSession,

@@ -98,8 +98,8 @@ def monthly_ndvi(pixels: DataFrame, dissolved: DataFrame) -> DataFrame:
     """(keterangan, month, ndvi): the zonal mean of each month's median
     composite inside each category."""
     # --- location mask (D2/D3): the categories containing each location.
-    # A null or NaN lon/lat has no point, so it drops out here (st_point's
-    # float fast path would make a NaN point the grid cannot place) ------
+    # A null or NaN lon/lat has no point (st_point returns null for it);
+    # dropping such rows here keeps them out of the distinct and the join
     locations = (pixels.select("lon", "lat").dropna().distinct()
                  .withColumn("geom", st_point("lon", "lat")))
     zones = grid_spatial_join(

@@ -1,15 +1,62 @@
 """Merged query/oracle registry backing the driver contract.
 
-``__spark_entry__.queries()`` / ``oracle_sql()`` delegate here.  Modules
-register into their own QUERIES/ORACLES dicts; this module merges them and
-asserts name uniqueness.
+``__spark_entry__.queries()`` / ``oracle_sql()`` delegate here.  Each module
+gets its QUERIES/ORACLES dicts and ``@query`` decorator from ``registrar()``;
+this module merges them and asserts name uniqueness.
+
+The driver's correctness harness verifies the FIRST 50 registry entries in
+iteration order, so ordering is a coverage decision, not cosmetics.  The
+order is derived from the driver's own evidence, the committed
+``CORRECTNESS_r{N}.json`` files at the repo root (``window_order``):
+
+1. the names in ``FORCED`` lead: queries whose plan or oracle changed since
+   their last driver row;
+2. then queries with no driver row at all, in registration order;
+3. then every other query by the newest round that has a driver row for
+   it, oldest first; ties go by the row's position in that round's file.
+
+A new round's ``CORRECTNESS_r{N}.json`` therefore rotates the window with
+no code edit.  Empty ``FORCED`` once the forced rows have driver rows.
+The driver window is the sampling gate; ``tests/test_oracle_parity.py``,
+which hash-matches the FULL inventory against DuckDB on every pytest run,
+is the completeness gate.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Mapping, Sequence
+from functools import cache
+from pathlib import Path
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
+
+# q141: its Spark plan and oracle (`_q141_round`) changed after its last
+# driver row (r16).
+FORCED: tuple[str, ...] = ("q141_unigram_logprob",)
+
+_REPO = Path(__file__).resolve().parent.parent
+
+
+def registrar():
+    """A module's ``(QUERIES, ORACLES, query)``: two fresh dicts and the
+    ``@query(name, oracle=None)`` decorator that fills them."""
+    queries: dict = {}
+    oracles: dict = {}
+
+    def query(name: str, oracle: str | None = None):
+        def deco(fn):
+            if name in queries:
+                raise ValueError(f"duplicate query name {name!r}")
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+        return deco
+
+    return queries, oracles, query
 
 
 def _modules():
@@ -26,176 +73,54 @@ def _modules():
             clustering, analytics, subqueries, sketches, curation]
 
 
-# The driver's correctness harness verifies the FIRST 50 registry entries in
-# iteration order, so ordering is a coverage decision, not cosmetics.
-#
-# ROTATION POLICY (round 3+): least-recently-driver-verified first.  Each
-# round, (1) queries whose newest driver row is oldest lead the window,
-# (2) queries whose implementation or oracle changed this round are forced
-# in-window regardless of age, (3) queries verified last round take the
-# tail.  Combined with tests/test_oracle_parity.py — which re-runs the
-# DuckDB hash-match for the FULL inventory on every pytest run and is the
-# actual completeness gate — this keeps every oracled query's driver row at
-# most one round old.  The driver window is the sampling gate, not the
-# completeness gate.
-#
-# Round-17 window (driver verifies the FIRST 50), executing the written
-# r17 schedule committed in round 15: the remaining 37 r12-verified rows
-# (q158 leads) + the oldest 13 r13-verified rows = 50; max driver
-# staleness advances to r13.
-#   Rotation notes: this optimization round's changes are all
-#   value-identical restructurings (shared-memo consumption, strategy-
-#   probe bounds, a TakeOrderedAndProject top-K, the py4j resolution
-#   cache) — no operator definition or oracle changed, so nothing is
-#   rule-(2) forced (the r16 precedent for optimization rounds); every
-#   touched query is instead re-proven by the committed sf1-parity and
-#   partition-independence artifacts on the final tree.  Several
-#   touched queries (q168, q164, q174, q189, q163, q220, ...) happen to
-#   sit in this window anyway, so they also get post-change driver rows.
-# WRITTEN SCHEDULE (continuing):
-#   - r18: the remaining 27 r13 rows (q216 block's tail, q76 leads) +
-#     the oldest 23 r14 rows;
-#   - r19: the remaining 27 r14 rows + the oldest 23 r15 rows;
-#   - r20: the remaining r15 rows + the oldest r16 rows.
-_PRIORITY = [
-    # --- ROUND-17 DRIVER WINDOW (first 50) ---
-    # Executing the written r17 schedule committed in round 15 ("the
-    # remaining 37 r12 rows, q158 leads, + the oldest 13 r13 rows") —
-    # max driver staleness advances to r13.  No never-driver-verified
-    # rows exist and no oracle changed this round (the r17 optimization
-    # changes are value-identical restructurings, covered by sf1 parity
-    # + partition-independence artifacts per the r16 precedent), so the
-    # window is exactly the schedule.
-    # slots 1-37: the full r12-verified remainder
-    "q158_session_paths", "q159_bm25_topk", "q160_lang_mislabel", "q161_wilson_proportion",
-    "q162_churn_rate", "q165_nation_trade_volume", "q166_market_share",
-    "q168_dedup_cost_model", "q170_burst_detection",
-    "q171_dup_degree_distribution", "q173_order_reconciliation",
-    "q175_error_rate_timeline", "q177_weekday_seasonality",
-    "q178_new_vs_returning", "q164_rfm_segments", "q174_value_gini",
-    "q189_runs_test", "q193_heaps_law", "q22_cube", "q23_unpivot",
-    "q24_in_subquery", "q25_window_analytics", "q26_median",
-    "q27_first_limit", "q28_approx_distinct", "q34_approx_quantiles",
-    "q137_time_to_convert", "q138_session_stats", "q127_score_calibration",
-    "q149_winsorized_stats", "q80_quality_filter", "q163_score_auc",
-    "q176_score_normalization", "q33_percentiles", "q181_order_interarrival",
-    "q203_quantization_error", "q206_ship_latency",
-    # slots 38-50: the oldest 13 r13-verified rows
-    "q216_dsir_importance", "q217_domain_quota_sample", "q220_mmr_audit",
-    "q30_range_join", "q31_sliding_window", "q32_session_window",
-    "q35_rank_functions", "q36_full_outer", "q37_array_agg", "q38_profile",
-    "q39_local_supplier_revenue", "q63_date_functions", "q64_bag_set_ops",
-    # --- tail: rotates into r18+ windows, least-recently-verified
-    # first ---
-    # the r13-verified remainder (r18 lead, 27 rows)
-    "q76_ngram_jaccard_join", "q77_pack_sequences", "q83_embedding_stats",
-    "q84_sample_exact_k", "q85_twophase_topk", "q10_row_number",
-    "q71_frame_sample", "q50_embedding_neardup", "q53_embedding_centroids",
-    "q73_hash_split", "q78_balance_corpus", "q91_temperature_sample",
-    "q113_cms_heavy_hitters", "q114_kmv_distinct", "q118_weighted_sample",
-    "q119_kmv_setops", "q139_split_contamination", "q144_training_order",
-    "q42_lang_id", "q52_ivf_ann", "q180_basket_lift",
-    "q182_subword_diversity", "q183_fk_audit", "q184_bounce_rate",
-    "q187_dedup_survivor_bias", "q190_prefix_dup", "q191_dim_redundancy",
-    "q110_mmr_diversify",
-    # the r14-verified window — the freshest evidence closes the
-    # registry; rotates back in at r18
-    "q221_gopher_rules", "q222_bigram_lm_buckets", "q223_cluster_silhouette",
-    "q192_segment_migration", "q194_truncation_loss", "q195_effective_tokens",
-    "q197_session_survival", "q198_position_value_decay", "q200_corpus_stats",
-    "q204_forecast_revenue", "q205_supplier_coverage",
-    "q207_brand_return_rate", "q208_embedding_norm_qa",
-    "q210_word_length_hist", "q79_decontaminate", "q81_substring_dup",
-    "q67_overlap_dissolve", "q60_point_in_polygon", "q61_zonal_histogram",
-    "q43_fingerprint", "q54_dedup_materialize", "q15_count_distinct",
-    "q19_hourly_window", "q21_props_extract", "q18_sessionization",
-    "q01_pricing_summary", "q45_dedup_exact", "q46_dedup_tokensort",
-    "q40_text_stats", "q41_token_count", "q08_var_argmax",
-    "q72_hierarchical_rollup", "q57_normalize_text", "q58_edit_distance",
-    "q65_blocklist_filter", "q169_vocab_coverage", "q179_hapax_ratio",
-    "q196_crosssplit_perplexity", "q66_repetition", "q68_chunk_documents",
-    "q69_embedding_quantize", "q70_multimodal_meta", "q74_vocab_topk",
-    "q02_ilike_filter", "q03_join_enrich", "q04_semi_join", "q05_anti_join",
-    "q06_monthly_revenue", "q07_month_spine", "q111_pq_adc_topk",
-    # the r15-verified window (minus the q224/q225 forces above) — the
-    # freshest evidence closes the registry; rotates back in at r19
-    "q55_kmeans", "q218_pq_recall_audit",
-    "q219_kmeans_audit", "q47_minhash_lsh", "q48_simhash",
-    "q56_dedup_components", "q128_detector_agreement",
-    "q153_simhash_hamming_join", "q156_minhash_estimate_audit",
-    "q167_dedup_strategy_venn", "q212_curation_shards",
-    "q213_curation_funnel", "q09_histogram", "q11_topk_per_group",
-    "q12_pivot", "q13_setops", "q14_rollup", "q16_extent",
-    "q17_case_thresholds", "q20_above_avg", "q75_golden_variance",
-    "q82_incremental_dedup", "q62_dissolve_area", "q88_containment_join",
-    "q89_bigram_lift", "q90_pattern_redact", "q92_random_projection",
-    "q87_ngram_novelty", "q97_funnel", "q98_cohort_retention",
-    "q99_zscore_anomaly", "q100_time_weighted_avg",
-    "q101_gap_fill_interpolate", "q102_bottomk_sample",
-    "q103_order_count_distribution", "q104_large_volume_orders",
-    "q106_bloom_semi_join", "q107_line_dedup", "q108_tfidf_keywords",
-    "q109_triangle_count", "q115_bfs_hops", "q116_psi_drift",
-    "q117_rolling_median", "q120_asof_forward", "q148_semdedup",
-    "q201_cluster_label_purity", "q49_cosine_topk", "q51_srp_lsh_buckets",
-    # the r16-verified window — the freshest evidence closes the
-    # registry; rotates back in at r20
-    "q226_incremental_near_dedup", "q227_audio_neardup",
-    "q224_exact_substring_dedup", "q225_substring_dedup_materialize",
-    "q121_token_entropy", "q122_grouping_sets", "q123_mad_outliers",
-    "q124_incremental_agg_merge", "q125_small_quantity_revenue",
-    "q126_revenue_share", "q129_hamming_topk", "q130_weighted_median",
-    "q131_user_trend", "q132_skew_report", "q133_video_neardup",
-    "q134_ewma", "q135_benford_audit", "q136_transition_matrix",
-    "q140_class_separation", "q94_dedup_canonical",
-    "q95_stratified_split", "q96_doc_bigram_lift",
-    "q93_embedding_covariance", "q86_pagerank_centrality",
-    "q105_lone_returner", "q112_scd2_intervals", "q29_asof_join",
-    "q154_knn_label_accuracy", "q155_pmi_collocations", "q172_zipf_fit",
-    "q185_bigram_cond_entropy", "q186_negative_sampling",
-    "q202_cramers_v", "q211_discount_quantity_corr",
-    "q199_dup_quality_link", "q141_unigram_logprob", "q44_quality_score",
-    "q145_curriculum_stages", "q188_aa_test", "q209_source_scorecard",
-    "q214_url_domain_dedup", "q215_rate_limited_sample",
-    "q142_stopword_discovery", "q143_bpe_pair_counts",
-    "q146_vocab_overlap", "q147_chi2_keywords", "q150_hhi_concentration",
-    "q151_returned_revenue", "q152_dup_cluster_sizes",
-    "q157_mix_rebalance",
-]
+def window_order(registered: Sequence[str],
+                 evidence: Mapping[int, Sequence[str]],
+                 forced: Sequence[str]) -> list[str]:
+    """Registry order from driver evidence ({round: names in file order}):
+    forced names, then never-verified ones in registration order, then the
+    rest least-recently verified first (see the module docstring)."""
+    unknown = [n for n in forced if n not in registered]
+    if unknown:
+        raise ValueError(f"FORCED names are not registered: {unknown}")
+    newest: dict[str, tuple[int, int]] = {}
+    for rnd in sorted(evidence):
+        for pos, name in enumerate(evidence[rnd]):
+            newest[name] = (rnd, pos)
+    rest = [n for n in registered if n not in forced]
+    never = [n for n in rest if n not in newest]
+    seen = sorted((n for n in rest if n in newest), key=newest.__getitem__)
+    return [*forced, *never, *seen]
 
 
+@cache
+def driver_evidence() -> Mapping[int, tuple[str, ...]]:
+    """{round: query names in file order} of the committed
+    ``CORRECTNESS_r{N}.json`` files; read once per process."""
+    out = {}
+    for path in _REPO.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            out[int(m.group(1))] = tuple(json.loads(path.read_text()))
+    return MappingProxyType(out)
 
 
-def _ordered(merged: dict) -> dict:
-    """Reorder the merged registry by ``_PRIORITY``, loudly.
-
-    Set equality is asserted in both directions so a new query that was not
-    deliberately placed (or a typo in the priority list) fails the registry
-    instead of silently landing outside the verification window.
-    """
-    missing = [n for n in _PRIORITY if n not in merged]
-    unplaced = [n for n in merged if n not in _PRIORITY]
-    if missing or unplaced:
-        raise ValueError(
-            f"registry/priority mismatch: missing={missing} unplaced={unplaced}")
-    return {name: merged[name] for name in _PRIORITY}
+def _merged(attr: str, kind: str) -> dict:
+    out: dict = {}
+    for mod in _modules():
+        for name, value in getattr(mod, attr).items():
+            if name in out:
+                raise ValueError(f"duplicate {kind} name {name!r}")
+            out[name] = value
+    return out
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict = {}
-    for mod in _modules():
-        for name, fn in mod.QUERIES.items():
-            if name in out:
-                raise ValueError(f"duplicate query name {name!r}")
-            out[name] = fn
-    return _ordered(out)
+    merged = _merged("QUERIES", "query")
+    order = window_order(list(merged), driver_evidence(), FORCED)
+    return {name: merged[name] for name in order}
 
 
 def all_oracles() -> dict[str, str]:
-    out: dict = {}
-    for mod in _modules():
-        for name, sql in mod.ORACLES.items():
-            if name in out:
-                raise ValueError(f"duplicate oracle name {name!r}")
-            out[name] = sql
+    merged = _merged("ORACLES", "oracle")
     # Not every query has an oracle; order the ones that do consistently.
-    return {name: out[name] for name in _PRIORITY if name in out}
+    return {name: merged[name] for name in all_queries() if name in merged}

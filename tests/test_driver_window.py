@@ -1,31 +1,30 @@
-"""Driver-window regression guard (since round 6).
+"""Driver-window rule.
 
 The driver's correctness harness verifies the FIRST 50 entries of
-``__spark_entry__.queries()`` in iteration order.  Rotation used to be
-comment policy in ``queries_registry.py``; round 5 proved that policy can
-silently lose (71 late additions never reached the window).  This test
-pins the window for the current round to a checked-in expected list, so
-any registry reorder — deliberate rotation or accidental append — shows
-up as a reviewed diff in BOTH files, and any query added without a
-rotation decision fails CI instead of landing outside the window.
+``__spark_entry__.queries()`` in iteration order.  The order is not a
+hand-kept list: ``queries_registry.window_order`` derives it from the
+committed ``CORRECTNESS_r{N}.json`` files.  Names in ``FORCED`` (plan or
+oracle changed since their last driver row) lead, never-driver-verified
+queries follow in registration order, then every other query by the newest
+round with a driver row for it, oldest first, ties by the row's position
+in that round's file.  A new round's ``CORRECTNESS_r{N}.json`` rotates the
+window with no code edit.
 
-Update EXPECTED_WINDOW together with ``_PRIORITY`` each round, following
-the written schedule in queries_registry.py (never-driver-verified rows
-first, then changed-this-round rows forced in, then oldest driver
-evidence).
+These tests assert the rule on synthetic evidence and its result on the
+committed artifacts; no Spark session is needed.
 """
 
 from __future__ import annotations
 
-from spatial_data_engineering_spark.queries_registry import all_queries
+import pytest
 
-# Round-17 window, executing the written r17 schedule committed in
-# round 15: the full 37-row r12-verified remainder (q158 leads) + the
-# oldest 13 r13-verified rows.  Max driver staleness advances to r13.
-# This optimization round changed no operator definition or oracle
-# (value-identical restructurings only, re-proven by the sf1-parity and
-# partition-independence artifacts), so nothing is rule-(2) forced and
-# the window is exactly the schedule.
+from spatial_data_engineering_spark.queries_registry import (
+    FORCED, all_queries, driver_evidence, window_order)
+
+
+# The reviewed round-17 window (the full r12-verified remainder, q158
+# first, then the oldest 13 r13-verified rows).  The rule must reproduce
+# it from the evidence up to r16, and the driver's r17 rows are exactly it.
 EXPECTED_WINDOW = [
     "q158_session_paths", "q159_bm25_topk", "q160_lang_mislabel",
     "q161_wilson_proportion", "q162_churn_rate",
@@ -49,8 +48,8 @@ EXPECTED_WINDOW = [
     "q64_bag_set_ops",
 ]
 
-# The rows that must LEAD the round-18 window: the r13-verified
-# remainder in least-recently-verified order.
+# The r13-verified remainder in least-recently-verified order: it followed
+# the round-17 window and leads the round-18 window, right after FORCED.
 EXPECTED_R18_LEAD = [
     "q76_ngram_jaccard_join", "q77_pack_sequences", "q83_embedding_stats",
     "q84_sample_exact_k", "q85_twophase_topk", "q10_row_number",
@@ -60,42 +59,70 @@ EXPECTED_R18_LEAD = [
 ]
 
 
+def _upto(rnd):
+    return {r: rows for r, rows in driver_evidence().items() if r <= rnd}
+
+REGISTERED = ["a", "b", "c", "d", "e", "f"]
+EVIDENCE = {
+    3: ["a", "b", "c"],
+    1: ["d", "e", "a"],
+    2: ["f", "e"],
+}
+
+
+def test_forced_rows_lead():
+    got = window_order(REGISTERED, EVIDENCE, ("c", "e"))
+    assert got[:2] == ["c", "e"]
+    assert sorted(got) == sorted(REGISTERED)
+
+
+def test_never_verified_follows_forced():
+    got = window_order(REGISTERED + ["new"], EVIDENCE, ("c",))
+    assert got[:2] == ["c", "new"]
+
+
+def test_rounds_run_oldest_first():
+    # d: r1; f, e: r2 (e's r1 row is superseded); a, b, c: r3
+    assert window_order(REGISTERED, EVIDENCE, ()) == [
+        "d", "f", "e", "a", "b", "c"]
+
+
+def test_file_order_breaks_ties():
+    evidence = {1: ["c", "a", "b"]}
+    assert window_order(["a", "b", "c"], evidence, ()) == ["c", "a", "b"]
+
+
+def test_unregistered_forced_name_raises():
+    with pytest.raises(ValueError, match="not registered"):
+        window_order(REGISTERED, EVIDENCE, ("zz",))
+
+
+def test_committed_artifacts_drive_the_window():
+    names = list(all_queries())
+    assert names[:len(FORCED)] == list(FORCED)
+    evidence = driver_evidence()
+    newest = {n: r for r in sorted(evidence) for n in evidence[r]}
+    rounds = [newest.get(n, 0) for n in names[len(FORCED):]]
+    assert rounds == sorted(rounds)
+    # the r18 window, derived from the evidence up to r17: the remaining
+    # r13 rows lead, q76 first
+    upto_r17 = {r: rows for r, rows in evidence.items() if r <= 17}
+    order = window_order(names, upto_r17, FORCED)
+    assert order[len(FORCED)] == "q76_ngram_jaccard_join"
+
+
 def test_driver_window_is_the_reviewed_round17_plan():
     names = list(all_queries())
     assert len(EXPECTED_WINDOW) == 50
-    got = names[:50]
-    assert got == EXPECTED_WINDOW, (
-        "driver window drifted from the reviewed round-17 rotation plan; "
-        f"first divergence at slot "
-        f"{next(i for i, (a, b) in enumerate(zip(got, EXPECTED_WINDOW)) if a != b) + 1}"
-    )
+    got = window_order(names, _upto(16), ())
+    assert got[:50] == EXPECTED_WINDOW
+    assert got[50:50 + len(EXPECTED_R18_LEAD)] == EXPECTED_R18_LEAD
+    assert list(driver_evidence()[17]) == EXPECTED_WINDOW
 
 
 def test_round18_queue_is_next():
     names = list(all_queries())
-    assert names[50:50 + len(EXPECTED_R18_LEAD)] == EXPECTED_R18_LEAD, (
-        "the r18 lead (the r13-verified remainder) must sit immediately "
-        "after the window"
-    )
-
-
-def test_r16_window_rotated_to_tail():
-    # the rows verified in round 16 are the freshest evidence and must
-    # close the registry
-    names = list(all_queries())
-    r16_tail = set(names[-50:])
-    for probe in ("q226_incremental_near_dedup", "q227_audio_neardup",
-                  "q224_exact_substring_dedup",
-                  "q225_substring_dedup_materialize", "q121_token_entropy",
-                  "q86_pagerank_centrality", "q209_source_scorecard",
-                  "q152_dup_cluster_sizes", "q157_mix_rebalance"):
-        assert probe in r16_tail, f"{probe} missing from the rotated tail"
-    assert "q158_session_paths" not in r16_tail
-
-
-def test_inventory_growth_is_a_rotation_decision():
-    # New queries must enter between the window and the stale rows
-    # (never-driver-verified rows outrank stale ones) and keep
-    # (new + stale) <= 50 per round.
-    n = len(all_queries())
-    assert 216 <= n <= 230, n
+    lead = names[len(FORCED):len(FORCED) + len(EXPECTED_R18_LEAD)]
+    assert lead == EXPECTED_R18_LEAD
+    got = window_order(names, _upto(17), ())
+    assert got[:len(EXPECTED_R18_LEAD)] == EXPECTED_R18_LEAD

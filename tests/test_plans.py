@@ -235,14 +235,14 @@ def test_q82_incremental_is_anti_join(spark):
 def test_spread_docs_guard(spark):
     # the spread is a no-op once the scan already has enough splits —
     # no unconditional corpus shuffle at scale
-    from spatial_data_engineering_spark.operators.dedup import _spread_docs
+    from spatial_data_engineering_spark.catalog import spread
 
     p = spark.sparkContext.defaultParallelism
     wide = spark.range(1000).withColumnRenamed("id", "doc_id") \
         .repartition(p + 4)
-    assert _spread_docs(wide) is wide
+    assert spread(wide, "doc_id") is wide
     narrow = spark.range(1000).withColumnRenamed("id", "doc_id").coalesce(1)
-    assert _spread_docs(narrow).rdd.getNumPartitions() == p
+    assert spread(narrow, "doc_id").rdd.getNumPartitions() == p
 
 
 def test_q77_packing_random_frames(spark):

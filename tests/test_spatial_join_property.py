@@ -53,6 +53,34 @@ def test_grid_join_equals_bruteforce(spark, seed, cell):
     assert g == b and len(b) > 0
 
 
+@pytest.mark.parametrize("cell", [5.0, None])
+def test_null_or_nan_coordinates_drop_out(spark, cell):
+    """A null lon or a NaN lat makes no point (st_point returns null), so
+    the row drops out of the join instead of failing the grid with a NaN
+    point it cannot place."""
+    from spatial_data_engineering_spark.functions.st_funcs import st_point
+
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        [(0, 5.0, 5.0), (1, None, 5.0), (2, 5.0, nan), (3, None, nan),
+         (4, 15.0, 15.0)],
+        "pt_id int, x double, y double").withColumn(
+        "geom", st_point("x", "y"))
+    boxes = spark.createDataFrame(
+        [(0, 0.0, 0.0, 10.0, 10.0), (1, 12.0, 12.0, 20.0, 20.0)],
+        "box_id int, x0 double, y0 double, x1 double, y1 double").withColumn(
+        "geom", st_makebox("x0", "y0", "x1", "y1"))
+
+    geoms = {r.pt_id: r.geom for r in pts.select("pt_id", "geom").collect()}
+    assert {i for i, g in geoms.items() if g is None} == {1, 2, 3}
+    # the generic WKB writer is the reference for the vectorized bytes
+    assert geoms[0] == G.wkb_dumps(("Point", (5.0, 5.0)))
+    assert geoms[4] == G.wkb_dumps(("Point", (15.0, 15.0)))
+    got = grid_spatial_join(pts, boxes, ["pt_id"], ["box_id"],
+                            predicate="contains", cell=cell)
+    assert {(r.pt_id, r.box_id) for r in got.collect()} == {(0, 0), (4, 1)}
+
+
 def test_grid_join_cell_size_invariance(spark):
     """The result SET must not depend on the grid pitch: explicit cells
     spanning two orders of magnitude and the adaptive p95-extent default

@@ -177,8 +177,7 @@ def _per_observation_monthly(pixels, dissolved):
     from spatial_data_engineering_spark.operators.spatial_join import (
         grid_spatial_join)
 
-    # the old plan raised on a null or NaN lon/lat (st_point's float fast
-    # path made a NaN point); such a row has no point to match, so drop it
+    # a null or NaN lon/lat has no point to match, so drop the row
     ndvi = pixels.dropna(subset=["lon", "lat"]).select(
         "scene_id", "ts", "lon", "lat",
         F.when(F.col("sr_b5") + F.col("sr_b4") == 0, None)

@@ -890,7 +890,7 @@ def q82_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-duplicates of the corpus (and within the batch) are rejected
 # before they enter.  Three tiers, arrival keep-first:
 #
-#   1. exact/fingerprint vs corpus — byte-for-byte q82's anti joins;
+#   1. exact/fingerprint vs corpus — q82_incremental_dedup itself;
 #   2. near-dup vs corpus — tier-1 survivors' band keys (filtered out
 #      of the STANDING full-table band relation, shingle_frames_cached
 #      — the batch's signatures are already rows of the maintained
@@ -987,9 +987,10 @@ def _q226_oracle() -> str:
 def _near_dup_admission(t1: DataFrame, b_bands: DataFrame,
                         c_bands: DataFrame, sh_a: DataFrame,
                         sh_b: DataFrame) -> DataFrame:
-    """The LSH tiers (2+3) shared by q226 and its streaming twin:
-    reject ``t1`` rows that verify as near-dups of the corpus side, and
-    the higher id of every verified within-batch pair.
+    """The LSH tiers (2+3) shared by q226, its streaming twin and
+    ``curation.admit_delta``: reject ``t1`` rows that verify as
+    near-dups of the corpus side, and the higher id of every verified
+    within-batch pair.
 
     ``b_bands``/``sh_a`` cover the (delta-bounded) tier-1 survivors;
     ``c_bands``/``sh_b`` the corpus side.  The batch bands BROADCAST
@@ -1019,17 +1020,7 @@ def _near_dup_admission(t1: DataFrame, b_bands: DataFrame,
 @query("q226_incremental_near_dedup", _q226_oracle())
 def q226_incremental_near_dedup(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    eh = F.md5("text")
-    fh = _fp_spark()
-    is_batch = F.col("doc_id") % _INC_MOD == _INC_REM
-    corpus = d.filter(~is_batch).select(eh.alias("eh"), fh.alias("fh"))
-    batch = d.filter(is_batch).select(
-        "doc_id", "lang", "source", eh.alias("eh"), fh.alias("fh"))
-    t1 = (batch
-          .join(corpus.select("eh").distinct(), "eh", "left_anti")
-          .join(corpus.select("fh").distinct(), "fh", "left_anti")
-          .select("doc_id", "lang", "source"))
+    t1 = q82_incremental_dedup(spark, sf_dir)
     # the STANDING signature/band tables — the batch's rows are already
     # in them (a real pipeline maintains this table; a daily batch
     # appends its signatures), so neither side recomputes shingles

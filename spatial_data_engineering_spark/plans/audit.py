@@ -301,17 +301,19 @@ _ATTR_ID_RE = re.compile(r"#\d+L?")
 
 def _stable_ids(obj):
     """Replace Catalyst attribute ids (``name#123``) with ``#N`` in every
-    string of a JSON-able payload.
+    string of a JSON-able payload, with dict keys in sorted order.
 
     The ids are allocated per-session, so without this the committed
     GLOBAL_WINDOW_AUDIT.json artifact churned on every pytest run and
-    per-round diffs were pure noise (ADVICE r10).  Applied only to the
-    serialized artifact — live ``global_window_report`` rows keep real
-    ids for debugging."""
+    per-round diffs were pure noise (ADVICE r10).  Sorted keys keep the
+    artifact independent of the registry order, which moves with every
+    round's CORRECTNESS evidence.  Applied only to the serialized
+    artifact — live ``global_window_report`` rows keep real ids for
+    debugging."""
     if isinstance(obj, str):
         return _ATTR_ID_RE.sub("#N", obj)
     if isinstance(obj, dict):
-        return {k: _stable_ids(v) for k, v in obj.items()}
+        return {k: _stable_ids(obj[k]) for k in sorted(obj)}
     if isinstance(obj, list):
         return [_stable_ids(v) for v in obj]
     return obj

@@ -218,7 +218,7 @@ def admit_delta(base: DataFrame, delta: DataFrame,
     once, every subsequent delta admission ~13 s — vs ~200 s for a full
     pipeline re-run per refresh.
     """
-    from ..operators.dedup import shingle_bands, verified_pairs
+    from ..operators.dedup import _near_dup_admission, shingle_bands
     from ..operators.textops import _DECON_THETA
 
     # 1. exact, vs base then within-delta keep-first.  The base side is
@@ -238,29 +238,12 @@ def admit_delta(base: DataFrame, delta: DataFrame,
     first = d1.groupBy("eh").agg(F.min("doc_id").alias("doc_id"))
     d1 = d1.join(first, ["eh", "doc_id"]).drop("eh")
 
-    # 2. near-dup: delta bands vs base bands + delta self-join
+    # 2. near-dup: delta bands vs base bands + delta self-join — q226's
+    # tiers 2-3; the delta bands broadcast, so the corpus-sized base
+    # band table never shuffles for a delta-sized probe
     base_sh, base_bands = base_signatures or shingle_bands(base)
     delta_sh, delta_bands = shingle_bands(d1)
-    # broadcast the DELTA bands: the base band table is corpus-sized and
-    # must not shuffle for a delta-sized probe
-    vs_base = (F.broadcast(delta_bands.alias("a"))
-               .join(base_bands.alias("b"), "band")
-               .select(F.col("a.doc_id").alias("a_id"),
-                       F.col("b.doc_id").alias("b_id"))
-               .distinct())
-    drop_base = (verified_pairs(vs_base, delta_sh, base_sh)
-                 .select(F.col("a_id").alias("doc_id")).distinct())
-    within = (delta_bands.alias("a")
-              .join(delta_bands.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-              .select(F.col("a.doc_id").alias("a_id"),
-                      F.col("b.doc_id").alias("b_id"))
-              .distinct())
-    drop_within = (verified_pairs(within, delta_sh, delta_sh)
-                   .select(F.col("b_id").alias("doc_id")).distinct())
-    d2 = (d1.join(drop_base, "doc_id", "left_anti")
-          .join(drop_within, "doc_id", "left_anti"))
+    d2 = _near_dup_admission(d1, delta_bands, base_bands, delta_sh, base_sh)
 
     # 3. decontamination vs an explicit benchmark frame
     if bench is not None:

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window as W
 
 from ..sources import (create_or_replace_view, create_schema_if_not_exists,
                        scan_csv, write_table_replace)
-from ..sources.gpkg import ingest_gpkg, list_feature_tables
+from ..sources.gpkg import ingest_gpkg
 
 LU_CSV_SCHEMA = T.StructType([
     T.StructField("TEMA", T.StringType()),
@@ -73,14 +73,6 @@ def run_etl(spark: SparkSession, gpkg_path: str, csv_path: str,
     """
     check_file_exists(gpkg_path)
     check_file_exists(csv_path)
-
-    if feature_table is None:
-        tables = list_feature_tables(gpkg_path)
-        if len(tables) != 1:
-            raise ValueError(
-                f"GeoPackage has {len(tables)} feature tables {tables}; "
-                "pass feature_table= explicitly")
-        feature_table = tables[0]
 
     lu_raw = ingest_gpkg(spark, gpkg_path, feature_table)
     lu = add_id_column(lu_raw, order_key or lu_raw.columns[0])

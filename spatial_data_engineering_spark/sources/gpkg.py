@@ -49,40 +49,55 @@ def gpb_srs_id(blob: bytes) -> int:
     return struct.unpack_from("<i" if little else ">i", blob, 4)[0]
 
 
+def _feature_tables(con: sqlite3.Connection) -> list[str]:
+    return [r[0] for r in con.execute(
+        "SELECT table_name FROM gpkg_contents WHERE data_type='features'")]
+
+
 def list_feature_tables(gpkg_path: str) -> list[str]:
     con = sqlite3.connect(gpkg_path)
     try:  # sqlite3's context manager commits but does NOT close
-        rows = con.execute(
-            "SELECT table_name FROM gpkg_contents WHERE data_type='features'"
-        ).fetchall()
+        return _feature_tables(con)
     finally:
         con.close()
-    return [r[0] for r in rows]
 
 
-def ingest_gpkg(spark: SparkSession, gpkg_path: str, table: str,
+def feature_table(con: sqlite3.Connection,
+                  table: str | None) -> tuple[str, str, int]:
+    """``(table, geometry column, srs_id)`` of a feature table in an open
+    GeoPackage; ``table=None`` means the file's single feature table
+    (like the reference's layer-agnostic ``gpd.read_file``).  Raises on
+    an ambiguous default, an unregistered table, or an undefined CRS
+    (load_data.py:51-57: abort the load)."""
+    if table is None:
+        names = _feature_tables(con)
+        if len(names) != 1:
+            raise ValueError(f"GeoPackage has {len(names)} feature tables "
+                             f"{names}; name one explicitly")
+        table = names[0]
+    row = con.execute(
+        "SELECT column_name, srs_id FROM gpkg_geometry_columns "
+        "WHERE table_name = ?", (table,)).fetchone()
+    if row is None:
+        raise ValueError(
+            f"table {table!r} is not a registered feature table; "
+            f"known feature tables: {_feature_tables(con)}")
+    geom_col, srs_id = row
+    if srs_id is None or srs_id in (0, -1):
+        raise ValueError(f"CRS is not defined for {table!r} — aborting load "
+                         "(load_data.py:51-57 semantics)")
+    return table, geom_col, srs_id
+
+
+def ingest_gpkg(spark: SparkSession, gpkg_path: str, table: str | None,
                 geom_out: str = "geom") -> DataFrame:
-    """Read one feature table into a DataFrame with WKB geometry + CRS
-    metadata — the engine's ingest convention (SURVEY.md §1.1).
-
-    Validates CRS presence like load_data.py:51-57 (abort if undefined).
+    """Read one feature table (None: the single one) into a DataFrame
+    with WKB geometry + CRS metadata — the engine's ingest convention
+    (SURVEY.md §1.1).  Validates CRS presence via ``feature_table``.
     """
     con = sqlite3.connect(gpkg_path)
     try:  # sqlite3's context manager commits but does NOT close
-        row = con.execute(
-            "SELECT column_name, srs_id FROM gpkg_geometry_columns "
-            "WHERE table_name = ?", (table,)
-        ).fetchone()
-        if row is None:
-            raise ValueError(
-                f"table {table!r} is not a registered feature table; "
-                f"known feature tables: {list_feature_tables(gpkg_path)}")
-        geom_col, srs_id = row
-        if srs_id is None or srs_id in (0, -1):
-            raise ValueError(
-                f"CRS is not defined for {table!r} — aborting load "
-                "(load_data.py:51-57 semantics)"
-            )
+        table, geom_col, srs_id = feature_table(con, table)
         pdf = pd.read_sql_query(f'SELECT * FROM "{table}"', con)
     finally:
         con.close()

@@ -25,7 +25,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
 from pyspark.sql import types as T
 
-from .gpkg import parse_gpb
+from .gpkg import feature_table, parse_gpb
 
 _SQLITE_TO_SPARK = {
     "INTEGER": T.LongType(), "INT": T.LongType(),
@@ -99,25 +99,8 @@ class GeoPackageDataSource(DataSource):
             raise ValueError("gpkg datasource requires option 'path'")
         con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
         try:
-            table = self.options.get("table")
-            if not table:
-                names = [r[0] for r in con.execute(
-                    "SELECT table_name FROM gpkg_contents "
-                    "WHERE data_type='features'")]
-                if len(names) != 1:
-                    raise ValueError(
-                        f"option 'table' required (found {names})")
-                table = names[0]
-            row = con.execute(
-                "SELECT column_name, srs_id FROM gpkg_geometry_columns "
-                "WHERE table_name = ?", (table,)).fetchone()
-            if row is None:
-                raise ValueError(f"{table!r} is not a feature table")
-            geom_col, srs_id = row
-            if srs_id is None or srs_id in (0, -1):
-                raise ValueError(
-                    f"CRS is not defined for {table!r} — aborting load "
-                    "(load_data.py:51-57 semantics)")
+            table, geom_col, srs_id = feature_table(
+                con, self.options.get("table") or None)
             info = con.execute(f'PRAGMA table_info("{table}")').fetchall()
             cols = [(c[1], _spark_type(c[2])) for c in info
                     if c[1] != geom_col]

@@ -174,14 +174,28 @@ def stream_dedup_against_corpus(stream_df: DataFrame,
                           key_col, "left_anti")
 
 
+def _exact_tiers(docs: DataFrame, eh: DataFrame, fh: DataFrame) -> DataFrame:
+    """``docs`` rows whose md5(text) is absent from the one-column key
+    set ``eh`` and whose token-sort fingerprint is absent from ``fh`` —
+    q82's two anti joins.  The fingerprint is ``dedup._fp_spark``, shared
+    with q46/q54/q82, so streaming and batch admission cannot
+    desynchronize key-wise."""
+    from ..operators.dedup import _fp_spark
+
+    return (docs.withColumn("__eh", F.md5("text"))
+            .withColumn("__fh", _fp_spark())
+            .join(eh.toDF("__eh"), "__eh", "left_anti")
+            .join(fh.toDF("__fh"), "__fh", "left_anti")
+            .drop("__eh", "__fh"))
+
+
 def stream_admit_documents(stream_docs: DataFrame,
                            corpus_docs: DataFrame) -> DataFrame:
     """Two-tier streaming admission against a standing document corpus —
     the streaming twin of the batch incremental dedup (dedup.q82): a
     streamed document is admitted only if neither its exact content hash
     (md5(text)) NOR its token-sort fingerprint already exists in the
-    corpus.  Both tiers share ``dedup._fp_spark`` with q46/q54/q82, so
-    streaming and batch admission cannot desynchronize key-wise.
+    corpus.
 
     Plan shape mirrors q82 at scale: the corpus reduces to its distinct
     key sets (never its text), each tier is a stream-static LEFT ANTI
@@ -192,15 +206,124 @@ def stream_admit_documents(stream_docs: DataFrame,
     """
     from ..operators.dedup import _fp_spark
 
-    keyed = (stream_docs
-             .withColumn("__eh", F.md5("text"))
-             .withColumn("__fh", _fp_spark()))
-    corpus_eh = corpus_docs.select(F.md5("text").alias("__eh")).distinct()
-    corpus_fh = corpus_docs.select(_fp_spark().alias("__fh")).distinct()
-    return (keyed
-            .join(corpus_eh, "__eh", "left_anti")
-            .join(corpus_fh, "__fh", "left_anti")
-            .drop("__eh", "__fh"))
+    return _exact_tiers(stream_docs,
+                        corpus_docs.select(F.md5("text")).distinct(),
+                        corpus_docs.select(_fp_spark()).distinct())
+
+
+def _partitions(spark: SparkSession, path: str) -> set[str] | None:
+    """``batch=N`` partition names under ``path``; None if it is absent."""
+    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hp):
+        return None
+    return {st.getPath().getName() for st in fs.listStatus(hp)
+            if st.getPath().getName().startswith("batch=")}
+
+
+def _state_tables(docs: DataFrame, names) -> dict[str, DataFrame]:
+    """The named state tables of ``docs``: ``sh``/``bands`` from
+    ``dedup.shingle_bands``, ``eh`` the distinct md5(text) set."""
+    from ..operators.dedup import shingle_bands
+
+    kt = docs.select("doc_id", "text")
+    sh, bands = shingle_bands(kt)
+    tables = {"sh": sh, "bands": bands,
+              "eh": kt.select(F.md5("text").alias("eh")).distinct()}
+    return {n: tables[n] for n in names}
+
+
+def _effective_state(spark: SparkSession, base: dict, docs_dir: str,
+                     sigs_dir: str, batch_id: int) -> dict[str, DataFrame]:
+    """``base`` unioned, table by table, with the state of every batch
+    already under ``docs_dir`` except ``batch_id`` itself.
+
+    Coverage is PER BATCH PARTITION: a batch counts as covered only if
+    every table under ``sigs_dir`` has its ``batch=N``, and those rows
+    are parquet scans.  An uncovered batch — a crash landed between its
+    docs write and its sig writes, or the dataset predates sig
+    persistence — has its tables rebuilt from its docs, the source of
+    truth, instead of silently shrinking the dedup base.  Excluding the
+    batch's own partitions keeps a replay from self-rejecting.  An
+    existing ``docs_dir`` with no earlier partition is still read, so a
+    directory that is not the admitted dataset (stray files, wrong
+    layout) fails LOUDLY instead of falling back to ``base``."""
+    from functools import reduce
+
+    done = _partitions(spark, docs_dir)
+    if done is None:
+        return base
+    done.discard(f"batch={batch_id}")
+    covered = set(done)
+    for n in base:
+        covered &= _partitions(spark, f"{sigs_dir}/{n}") or set()
+    parts = [base]
+    if covered:
+        keep = F.col("batch").isin(
+            sorted(int(b.split("=", 1)[1]) for b in covered))
+        parts.append({n: spark.read.parquet(f"{sigs_dir}/{n}")
+                      .filter(keep).drop("batch") for n in base})
+    missing = sorted(done - covered)
+    if missing:
+        parts.append(_state_tables(spark.read.parquet(
+            *[f"{docs_dir}/{b}" for b in missing]), base))
+    elif not done:
+        parts.append(_state_tables(spark.read.parquet(docs_dir)
+                                   .filter(F.col("batch") != batch_id), base))
+    return {n: reduce(DataFrame.unionByName, [p[n] for p in parts])
+            for n in base}
+
+
+def _drive_admission(stream_docs: DataFrame, out_dir: str,
+                     checkpoint_dir: str, base: dict, admit,
+                     state_rows=None) -> None:
+    """The one foreachBatch driver of incremental streaming admission.
+
+    ``base`` names the standing corpus's state tables (``sh``, ``bands``
+    and optionally ``eh``); every micro-batch persists the same tables
+    for its own state rows, and later batches see ``base`` unioned with
+    them (``_effective_state``).  ``admit(rows, eff, own)`` returns the
+    admitted rows, written to ``out_dir/batch=N``.
+
+    Which rows are state: with ``state_rows`` None, the admitted docs
+    themselves (layout ``batch=N`` + ``_sigs/<table>/batch=N``, ``own``
+    is None); otherwise ``state_rows(micro_batch)`` — persisted first
+    under ``_t1/batch=N`` with tables under ``_t1sigs/<table>/batch=N``,
+    then read back and handed to ``admit`` as ``rows`` with ``own`` its
+    tables.  Every write overwrites its batch's directory, so a replayed
+    batch rewrites instead of duplicating (the write_stream_idempotent
+    contract).  Underscore-prefixed dirs are invisible to a plain
+    ``spark.read.parquet(out_dir)`` of the admitted dataset."""
+    docs_dir, sigs_dir = ((out_dir, f"{out_dir}/_sigs") if state_rows is None
+                          else (f"{out_dir}/_t1", f"{out_dir}/_t1sigs"))
+
+    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        part = f"batch={batch_id}"
+        eff = _effective_state(spark, base, docs_dir, sigs_dir, batch_id)
+        rows, own = batch_df, None
+        if state_rows is not None:
+            # admit off the written copy: the admission DAG reads
+            # truncated lineage
+            state_rows(batch_df).write.mode("overwrite").parquet(
+                f"{docs_dir}/{part}")
+            rows = spark.read.parquet(f"{docs_dir}/{part}")
+            own = _state_tables(rows, base)
+        admit(rows, eff, own).write.mode("overwrite").parquet(
+            f"{out_dir}/{part}")
+        if own is None:
+            # off the just-written parquet, so the admission DAG is not
+            # re-evaluated
+            own = _state_tables(spark.read.parquet(f"{out_dir}/{part}"),
+                                base)
+        for n, table in own.items():
+            table.write.mode("overwrite").parquet(f"{sigs_dir}/{n}/{part}")
+
+    q = (stream_docs.writeStream.foreachBatch(admit_batch)
+         .option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
 
 
 def admit_stream(base: DataFrame, stream_docs: DataFrame, out_dir: str,
@@ -213,13 +336,19 @@ def admit_stream(base: DataFrame, stream_docs: DataFrame, out_dir: str,
     against base ∪ everything previously admitted, then lands in a
     batch-id-named parquet directory.
 
+    One of the two entry points of the streaming admission core
+    (``_drive_admission``; the other is ``stream_admit_near_dedup``).
+    Here the state is the ADMITTED docs: their signatures and exact
+    hashes persist per batch under ``out_dir/_sigs/{sh,bands,eh}``, so
+    per-batch signature compute is bounded by that batch's admissions,
+    and a batch whose sigs a crash lost is rebuilt from its docs.
+
     Why foreachBatch and not stream-static joins: the near-dup tier
     needs per-doc minhash signatures (explode + groupBy) and a
     candidate verify join — blocking operators that streaming append
     mode cannot host, but that are ordinary batch work inside a
     micro-batch closure.  ``stream_admit_documents`` stays the
-    state-free fast path for exact/fingerprint tiers; this is the full
-    pipeline-admission twin.
+    state-free fast path for exact/fingerprint tiers.
 
     ``base_signatures`` / ``base_exact_hashes`` accept the stored
     tables (``dedup.persisted_shingle_bands`` /
@@ -230,170 +359,39 @@ def admit_stream(base: DataFrame, stream_docs: DataFrame, out_dir: str,
     Semantics are ARRIVAL-ORDER keep-first: a doc near-duplicating one
     admitted in an earlier batch is rejected, exactly like a later
     doc_id within one batch.  Replay-safe: a recomputed batch excludes
-    its OWN previous output from the effective base (else every row of
-    a replayed batch would self-reject as an exact dup and the rewrite
-    would silently empty it) and overwrites its directories — the
-    write_stream_idempotent contract.
-
-    Admitted-doc SIGNATURES and EXACT HASHES are persisted per batch
-    under ``out_dir/_sigs/`` (underscore-hidden, so the admitted-
-    dataset read never sees them) and read back by later batches:
-    per-batch signature COMPUTE is bounded by that batch's admissions,
-    not by everything admitted so far.  Coverage is checked PER BATCH
-    PARTITION, not per table: every ``batch=N`` under ``out_dir`` must
-    have a matching partition under all three ``_sigs`` tables, and
-    any uncovered batch — a crash landed between its docs write and
-    its sig writes, or ``out_dir`` predates the sig persistence — has
-    its state RECOMPUTED from its admitted docs (the source of truth)
-    instead of failing or, worse, silently shrinking the dedup base;
-    a batch's own uncommitted partitions are excluded either way, so
-    replay can never self-reject.
+    its own previous output from the effective base and overwrites its
+    directories.
     """
     from ..operators.dedup import shingle_bands
     from ..plans.curation import admit_delta
 
     base_kt = base.select("doc_id", "text")
-    # base-side state: the stored tables when given, else built ONCE
-    # for the whole stream — the stored-table amortization admit_delta
-    # exists for; per micro-batch only the (small, admitted-so-far)
-    # prev frames' persisted signatures/hashes are unioned on top
-    base_sigs = base_signatures or shingle_bands(base_kt)
+    sh, bands = base_signatures or shingle_bands(base_kt)
     # persist, NOT localCheckpoint: local checkpoints discard lineage, so
     # an executor loss mid-stream would poison every later micro-batch
     # with unrecoverable missing-block errors; persist keeps the lineage
     # and just recomputes lost blocks.
-    base_eh = (base_exact_hashes if base_exact_hashes is not None
-               else base_kt.select(F.md5("text").alias("eh")).distinct()
-               .persist(StorageLevel.MEMORY_AND_DISK))
+    eh = (base_exact_hashes if base_exact_hashes is not None
+          else base_kt.select(F.md5("text").alias("eh")).distinct()
+          .persist(StorageLevel.MEMORY_AND_DISK))
 
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eff_sigs, eff_eh = base_sigs, base_eh
-        # Only a genuinely ABSENT out_dir means "first batch".  Probing
-        # existence explicitly (instead of catching AnalysisException
-        # around the read) keeps every other analysis failure — stray
-        # non-parquet files under out_dir, schema-inference conflicts,
-        # permission errors — LOUD: silently falling back to the static
-        # base would drop previously admitted docs from the dedup base
-        # and re-admit their duplicates with no signal.
-        jvm = spark._jvm
-        jsc = spark._jsc
-        conf = jsc.hadoopConfiguration()
+    # base_kt is never evaluated: with signatures and exact hashes
+    # supplied, admit_delta's plan contains no base-corpus scan (pinned
+    # by test_stored_tables_refresh_never_scans_base_corpus)
+    def admit(rows: DataFrame, eff: dict, _own) -> DataFrame:
+        return admit_delta(base_kt, rows, bench,
+                           base_signatures=(eff["sh"], eff["bands"]),
+                           base_exact_hashes=eff["eh"])
 
-        def _exists(p: str) -> bool:
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            return hp.getFileSystem(conf).exists(hp)
-
-        def _batches(p: str) -> set[str]:
-            """``batch=N`` partition names under ``p`` ({} if absent)."""
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            fs = hp.getFileSystem(conf)
-            if not fs.exists(hp):
-                return set()
-            return {st.getPath().getName() for st in fs.listStatus(hp)
-                    if st.getPath().getName().startswith("batch=")}
-
-        not_this_batch = F.col("batch") != batch_id
-        if _exists(out_dir):
-            sig_paths = {t: f"{out_dir}/_sigs/{t}" for t in
-                         ("sh", "bands", "eh")}
-            doc_batches = _batches(out_dir) - {f"batch={batch_id}"}
-            if not doc_batches:
-                # out_dir exists but holds no prior admitted partitions.
-                # Validate it the same way the pre-sig fallback always
-                # did — an out_dir that cannot be read as the admitted
-                # dataset (stray files, wrong layout) must fail LOUDLY,
-                # never silently fall back to the static base.
-                prev = (spark.read.parquet(out_dir)
-                        .filter(not_this_batch)
-                        .select("doc_id", "text"))
-                prev_sh, prev_bands = shingle_bands(prev)
-                prev_eh = prev.select(F.md5("text").alias("eh")).distinct()
-            else:
-                # Sig coverage is PER BATCH, not per table: a crash
-                # between the docs write and the sig writes leaves
-                # batch=N committed under out_dir with no partitions
-                # under _sigs/* — while OTHER batches' sig dirs exist.
-                # A per-table existence probe would then take the
-                # sigs-read path and silently drop batch N from the
-                # effective dedup base (its duplicates re-admit with no
-                # signal — e.g. recovery under a fresh checkpoint, where
-                # no new batch_id ever equals N).  Compare the batch
-                # partition sets instead (cheap FileSystem listings) and
-                # rebuild ONLY the uncovered batches from their admitted
-                # docs, the source of truth.
-                covered = doc_batches
-                for p in sig_paths.values():
-                    covered = covered & _batches(p)
-                missing = sorted(doc_batches - covered)
-                prev_sh = prev_bands = prev_eh = None
-                if covered:
-                    # covered batches' signatures/hashes: parquet scans,
-                    # not recompute (each batch wrote its own under
-                    # _sigs below).  A batch whose sigs were written but
-                    # whose checkpoint did not commit is this batch
-                    # itself on replay — excluded from `covered` above.
-                    keep = F.col("batch").isin(
-                        [int(b.split("=", 1)[1]) for b in covered])
-                    prev_sh = (spark.read.parquet(sig_paths["sh"])
-                               .filter(keep).drop("batch"))
-                    prev_bands = (spark.read.parquet(sig_paths["bands"])
-                                  .filter(keep).drop("batch"))
-                    prev_eh = (spark.read.parquet(sig_paths["eh"])
-                               .filter(keep).drop("batch"))
-                if missing:
-                    # rebuild bounded by the crashed batches' size,
-                    # never a full prev-state recompute
-                    gap = (spark.read.parquet(
-                        *[f"{out_dir}/{b}" for b in missing])
-                        .select("doc_id", "text"))
-                    g_sh, g_bands = shingle_bands(gap)
-                    g_eh = gap.select(F.md5("text").alias("eh")).distinct()
-                    prev_sh = (g_sh if prev_sh is None
-                               else prev_sh.unionByName(g_sh))
-                    prev_bands = (g_bands if prev_bands is None
-                                  else prev_bands.unionByName(g_bands))
-                    prev_eh = (g_eh if prev_eh is None
-                               else prev_eh.unionByName(g_eh))
-            eff_sigs = (base_sigs[0].unionByName(prev_sh),
-                        base_sigs[1].unionByName(prev_bands))
-            eff_eh = base_eh.unionByName(prev_eh)
-        # base_kt is never evaluated here: with signatures and exact
-        # hashes supplied, admit_delta's plan contains no base-corpus
-        # scan (pinned by test_stored_tables_refresh_never_scans_base_corpus)
-        admitted = admit_delta(base_kt, batch_df, bench,
-                               base_signatures=eff_sigs,
-                               base_exact_hashes=eff_eh)
-        admitted.write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}")
-        # signatures + exact hashes of THIS batch's admissions, for
-        # later batches to scan instead of rebuild — computed off the
-        # just-written parquet so the admission DAG is not re-evaluated
-        adm = (spark.read.parquet(f"{out_dir}/batch={batch_id}")
-               .select("doc_id", "text"))
-        a_sh, a_bands = shingle_bands(adm)
-        a_sh.write.mode("overwrite").parquet(
-            f"{out_dir}/_sigs/sh/batch={batch_id}")
-        a_bands.write.mode("overwrite").parquet(
-            f"{out_dir}/_sigs/bands/batch={batch_id}")
-        (adm.select(F.md5("text").alias("eh")).distinct()
-         .write.mode("overwrite").parquet(
-             f"{out_dir}/_sigs/eh/batch={batch_id}"))
-
-    q = (stream_docs.writeStream.foreachBatch(admit_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drive_admission(stream_docs, out_dir, checkpoint_dir,
+                     {"sh": sh, "bands": bands, "eh": eh}, admit)
 
 
 def stream_admit_near_dedup(stream_docs: DataFrame, corpus_docs: DataFrame,
                             out_dir: str, checkpoint_dir: str) -> None:
     """Streaming twin of the MinHash-tier incremental admission
-    (dedup.q226_incremental_near_dedup) — the curation tier the
-    exact/fingerprint-only ``stream_admit_documents`` lacks.  Each
-    micro-batch applies the same three tiers against the STANDING
-    corpus:
+    (dedup.q226_incremental_near_dedup).  Each micro-batch applies the
+    same three tiers against the STANDING corpus:
 
       1. exact md5(text) + token-sort fingerprint anti joins vs the
          corpus key sets (computed once per stream, never per batch);
@@ -402,109 +400,36 @@ def stream_admit_near_dedup(stream_docs: DataFrame, corpus_docs: DataFrame,
       3. within-micro-batch keep-first (drop the higher doc_id of a
          verified pair).
 
-    PARITY CONTRACT (pinned in test_streaming): when the q226 batch
-    arrives as micro-batches in doc_id order, the admitted union
-    equals the batch form exactly — q226 drops a batch doc that
+    The other entry point of the streaming admission core
+    (``_drive_admission``, shared with ``admit_stream``).  Here the
+    state is the TIER-1 SURVIVORS, not the admitted docs: they persist
+    under ``out_dir/_t1/batch=N`` with their (sh, bands) under
+    ``out_dir/_t1sigs``, and tiers 2-3 are ``dedup._near_dup_admission``.
+
+    PARITY CONTRACT (pinned in test_incremental_near_dedup): when the
+    q226 batch arrives as micro-batches in doc_id order, the admitted
+    union equals the batch form exactly — q226 drops a batch doc that
     verifies against ANY lower-id tier-1 survivor (whether or not that
     survivor is itself later dropped), and tier-1 survivors are
     precisely what tiers 2-3 see here: earlier batches via the
-    persisted ``_t1sigs`` tables, the current batch via its own band
-    self-join.  Dedup state therefore accumulates TIER-1 SURVIVORS,
-    not admitted docs.
-
-    foreachBatch, not stream-static joins: the near-dup tier needs
-    blocking operators (signature groupBy + candidate verify join) —
-    ordinary batch work inside the micro-batch closure, impossible in
-    append-mode streaming (the admit_stream rationale).
-
-    Crash consistency mirrors admit_stream: each batch persists its
-    tier-1 survivor DOCS under ``out_dir/_t1/batch=N`` (the source of
-    truth) and their derived (sh, bands) under ``out_dir/_t1sigs``;
-    coverage is checked per batch partition, and an uncovered batch —
-    a crash between the docs write and the sigs write — has its
-    signatures rebuilt from its ``_t1`` docs instead of silently
-    shrinking the dedup base.  A replayed batch excludes its own
-    partitions, so replay is idempotent.  Underscore-prefixed dirs are
-    invisible to a plain ``spark.read.parquet(out_dir)`` of the
-    admitted dataset."""
+    persisted state, the current batch via its own band self-join."""
     from ..operators.dedup import (_fp_spark, _near_dup_admission,
                                    shingle_bands)
 
     corpus_kt = corpus_docs.select("doc_id", "text")
-    c_eh = (corpus_kt.select(F.md5("text").alias("eh")).distinct()
+    c_eh = (corpus_kt.select(F.md5("text")).distinct()
             .persist(StorageLevel.MEMORY_AND_DISK))
-    c_fh = (corpus_docs.select(_fp_spark().alias("fh")).distinct()
+    c_fh = (corpus_docs.select(_fp_spark()).distinct()
             .persist(StorageLevel.MEMORY_AND_DISK))
     c_sh, c_bands = shingle_bands(corpus_kt)
 
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
+    def admit(t1: DataFrame, eff: dict, own: dict) -> DataFrame:
+        return _near_dup_admission(t1, own["bands"], eff["bands"],
+                                   own["sh"], eff["sh"])
 
-        def _batches(p: str) -> set[str]:
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            fs = hp.getFileSystem(conf)
-            if not fs.exists(hp):
-                return set()
-            return {st.getPath().getName() for st in fs.listStatus(hp)
-                    if st.getPath().getName().startswith("batch=")}
-
-        keyed = (batch_df.withColumn("__eh", F.md5("text"))
-                 .withColumn("__fh", _fp_spark()))
-        t1 = (keyed.join(c_eh.withColumnRenamed("eh", "__eh"),
-                         "__eh", "left_anti")
-              .join(c_fh.withColumnRenamed("fh", "__fh"),
-                    "__fh", "left_anti")
-              .drop("__eh", "__fh"))
-        # persist THIS batch's tier-1 survivors first (source of truth
-        # for later batches' dedup base), then admit off the written
-        # copy so the admission DAG reads truncated lineage
-        t1.write.mode("overwrite").parquet(f"{out_dir}/_t1/batch={batch_id}")
-        t1 = spark.read.parquet(f"{out_dir}/_t1/batch={batch_id}")
-        b_sh, b_bands = shingle_bands(t1.select("doc_id", "text"))
-
-        # earlier batches' tier-1 survivors: sigs where covered, docs
-        # rebuilt where a crash left a gap — never silently dropped
-        own = {f"batch={batch_id}"}
-        doc_batches = _batches(f"{out_dir}/_t1") - own
-        eff_sh, eff_bands = c_sh, c_bands
-        if doc_batches:
-            covered = doc_batches
-            for t in ("sh", "bands"):
-                covered = covered & _batches(f"{out_dir}/_t1sigs/{t}")
-            missing = sorted(doc_batches - covered)
-            if covered:
-                keep = F.col("batch").isin(
-                    [int(b.split("=", 1)[1]) for b in covered])
-                eff_sh = eff_sh.unionByName(
-                    spark.read.parquet(f"{out_dir}/_t1sigs/sh")
-                    .filter(keep).drop("batch"))
-                eff_bands = eff_bands.unionByName(
-                    spark.read.parquet(f"{out_dir}/_t1sigs/bands")
-                    .filter(keep).drop("batch"))
-            if missing:
-                gap = (spark.read.parquet(
-                    *[f"{out_dir}/_t1/{b}" for b in missing])
-                    .select("doc_id", "text"))
-                g_sh, g_bands = shingle_bands(gap)
-                eff_sh = eff_sh.unionByName(g_sh)
-                eff_bands = eff_bands.unionByName(g_bands)
-
-        admitted = _near_dup_admission(t1, b_bands, eff_bands, b_sh,
-                                       eff_sh)
-        admitted.write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}")
-        b_sh.write.mode("overwrite").parquet(
-            f"{out_dir}/_t1sigs/sh/batch={batch_id}")
-        b_bands.write.mode("overwrite").parquet(
-            f"{out_dir}/_t1sigs/bands/batch={batch_id}")
-
-    q = (stream_docs.writeStream.foreachBatch(admit_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drive_admission(stream_docs, out_dir, checkpoint_dir,
+                     {"sh": c_sh, "bands": c_bands}, admit,
+                     state_rows=lambda b: _exact_tiers(b, c_eh, c_fh))
 
 
 def run_to_completion(stream_df: DataFrame, query_name: str,

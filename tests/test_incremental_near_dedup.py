@@ -169,3 +169,54 @@ def test_stream_near_dedup_cross_batch_rejection(spark, tmp_path):
     got = sorted(r.doc_id
                  for r in spark.read.parquet(out_dir).collect())
     assert got == [100, 201], got
+
+
+def test_stream_near_dedup_recovers_partial_sig_batch(spark, tmp_path):
+    """Crash window for the tier-1 state: batch=1's survivors are
+    committed under ``_t1`` but its ``_t1sigs`` partitions are lost,
+    while batch=0's keep both sig tables in existence.  Coverage is per
+    batch partition, so a replay under a fresh checkpoint must rebuild
+    batch 1's signatures from its ``_t1`` docs and still reject a
+    planted near-dup of its survivor."""
+    import glob
+    import shutil
+
+    from spatial_data_engineering_spark.streaming.windows import (
+        stream_admit_near_dedup)
+
+    corpus = spark.createDataFrame(
+        [(i, _text(i)) for i in range(1, 5)], "doc_id long, text string")
+    stream_dir = tmp_path / "incoming"
+    os.makedirs(stream_dir)
+
+    def put(name, rows):
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1).write.parquet(str(stream_dir / name))
+        time.sleep(1.1)  # distinct mtimes => deterministic batch order
+
+    def run(ckpt, **opts):
+        stream = (spark.readStream.schema("doc_id long, text string")
+                  .options(recursiveFileLookup="true", **opts)
+                  .parquet(str(stream_dir)))
+        stream_admit_near_dedup(stream, corpus, out_dir,
+                                str(tmp_path / ckpt))
+        return sorted(r.doc_id
+                      for r in spark.read.parquet(out_dir).collect())
+
+    out_dir = str(tmp_path / "admitted")
+    put("f1", [(100, _text(50))])
+    put("f2", [(201, _text(60))])
+    assert run("ckpt1", maxFilesPerTrigger=1) == [100, 201]
+    # the crash state: batch=1's sig PARTITIONS gone, tables still exist
+    for d in glob.glob(os.path.join(out_dir, "_t1sigs", "*", "batch=1")):
+        shutil.rmtree(d)
+    assert os.path.isdir(os.path.join(out_dir, "_t1sigs", "sh", "batch=0"))
+
+    # f2 leaves the stream, so 300 can only be rejected through batch
+    # 1's persisted tier-1 state; f1 + f3 replay as one batch 0
+    shutil.rmtree(stream_dir / "f2")
+    put("f3", [(300, _text(60) + " tail"), (301, _text(70))])
+    # 100 re-admitted (own replayed partition excluded), 201 still in
+    # batch=1, 300 near-dup of 201 (the batch whose sigs were lost),
+    # 301 fresh
+    assert run("ckpt2") == [100, 201, 301]

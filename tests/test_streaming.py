@@ -423,42 +423,6 @@ def test_stream_cms_matches_batch_sketch(spark, tmp_path):
     assert (got_s["cnt"].to_numpy() == exp_s["cnt"].to_numpy()).all()
 
 
-def test_transform_with_state_sessionizer_parity(spark, tmp_path):
-    """The transformWithState sessionizer must emit exactly what the
-    applyInPandasWithState one emits on the same single-trigger replay
-    (closed sessions == batch sessions minus each user's open tail).
-
-    Gated on google.protobuf: transformWithStateInPandas serializes its
-    state protocol with protobuf, which this container lacks a working
-    install of (same policy as the Pillow-gated multimodal decode) —
-    the operator code ships, the parity proof runs wherever protobuf
-    exists."""
-    pytest.importorskip("google.protobuf.descriptor",
-                        reason="transformWithState needs protobuf")
-    from spatial_data_engineering_spark.catalog import load
-    from spatial_data_engineering_spark.streaming.stateful import (
-        sessionize_tws, sessionize_with_timeout)
-    from spatial_data_engineering_spark.streaming.windows import (
-        run_to_completion)
-
-    events = load(spark, SF_SMOKE, "events").select("user_id", "ts", "value")
-    src = str(tmp_path / "tws_events")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def emitted(factory, name):
-        stream = spark.readStream.schema(schema).parquet(src)
-        got = run_to_completion(factory(stream, gap="2 days"), name) \
-            .toPandas()
-        return {(r.user_id, r.session_start_us, r.session_end_us,
-                 r.n_events, round(r.sum_value, 6))
-                for r in got.itertuples()}
-
-    a = emitted(sessionize_with_timeout, "t_tws_a")
-    b = emitted(sessionize_tws, "t_tws_b")
-    assert a == b and len(a) > 0
-
-
 def test_stream_moments_match_batch_q99_stats(spark, events_dir):
     """The incrementally maintained moments (and the finalized mu/sigma)
     must equal the batch computation on the same rows — the contract

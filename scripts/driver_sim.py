@@ -33,15 +33,6 @@ def main() -> int:
     n_window = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     start = int(sys.argv[2]) if len(sys.argv) > 2 else 0
 
-    # ADVICE r10: q51's bucket values depend on SPARK_GRAFT_SRP_PLANES;
-    # a stray non-default value would make this sim pass in-process
-    # while diverging from the driver's stored expectations.
-    srp = os.environ.get("SPARK_GRAFT_SRP_PLANES")
-    if srp is not None and srp != "12":
-        raise SystemExit(
-            f"SPARK_GRAFT_SRP_PLANES={srp} != fixture default 12; unset "
-            "it for driver-sim runs")
-
     from pyspark.sql import SparkSession
 
     spark = (SparkSession.builder.master("local[8]")

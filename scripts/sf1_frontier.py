@@ -194,7 +194,6 @@ def _run_bench(queries: list[str], runs: str, label: str,
         env.pop("SPARK_GRAFT_WARMUP_SUITE", None)
         env["SPARK_GRAFT_PAIR_CACHE"] = tempfile.mkdtemp(
             prefix="sf1-coldprobe-")
-    env.pop("SPARK_GRAFT_SRP_PLANES", None)  # gates run fixture defaults
     proc = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")],
                           env=env, cwd=REPO, capture_output=True, text=True)
     sys.stderr.write(proc.stderr[-2000:])

@@ -663,13 +663,15 @@ def ssj_candidate_pairs(spark: SparkSession, sf_dir: str):
     session-tier memo pinned by one localCheckpoint."""
     # The shingle frame is deliberately NOT memoized: rebuilding it is one
     # shuffle-free scan, and the verify-join sides need the scan-derived
-    # frame.  A localCheckpoint-backed LogicalRDD has no statistics (it
-    # estimates at spark.sql.defaultSizeInBytes), so feeding it to the
-    # verify joins flipped the planner to shuffling the array payloads —
+    # frame.  Feeding a localCheckpointed shingle frame to the verify
+    # joins flipped the planner to shuffling the array payloads —
     # measured in-suite r17: q76 0.76 -> 9.98 s, q88 0.95 -> 4.90 s,
-    # REVERTED same round.  The scan-derived frame keeps honest size
-    # estimates and its duplication rides ReuseExchange (the standing
-    # q76 note above).
+    # REVERTED same round.  Missing size statistics do not explain that
+    # flip: a localCheckpoint keeps its origin plan's estimate (PySpark
+    # 4.1.2, sf0.1: this frame's optimized plan reads 254,814 bytes
+    # plain and localCheckpointed eagerly or lazily).  The scan-derived
+    # frame's duplication rides ReuseExchange (the standing q76 note
+    # above).
     sh, _ = _ssj_candidates(load_spread(spark, sf_dir, "documents"))
     cand = memo(spark, "ssj_candidates",
                 (os.path.join(sf_dir, "documents.parquet"),),

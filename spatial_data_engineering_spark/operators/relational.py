@@ -370,111 +370,45 @@ def q09_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "deterministic alternative") — the reference's current-row-order variant
 # is order-dependent and unreproducible at scale.
 #
-# Two physical strategies, auto-selected on a pre-count:
+# The global-order kernel behind it also serves the exact-rank family:
+# `row_number() / ntile(n) / lag(x) / running sum OVER (ORDER BY ...)`
+# with no partitionBy.  Such a window funnels the whole input through ONE
+# task — correct and even fastest below ~1M rows, a scale-killer above
+# it.  A bounded limit(T+1) probe (`_probe_small`; callers that know the
+# row count pass `n_rows` and skip it) picks one of two paths:
 #
-# * Small inputs (<= window_threshold rows): a plain
-#   `row_number().over(Window.orderBy(key))`.  Yes, that collapses onto
-#   one partition — which is exactly right when the whole input fits one
-#   task; the two-pass machinery below costs hundreds of empty-task
-#   launches for nothing at this size (measured 6.4 s on 500 rows).
+# * Small path (`_over`): the plain window, one `W.orderBy` spec and the
+#   caller's window columns.  The two-pass machinery below costs hundreds
+#   of empty-task launches for nothing at this size (measured 6.4 s on
+#   500 rows).
 #
-# * Large inputs: range-repartition on the key (parallel sampled
-#   exchange), sort within partitions, count rows per partition (tiny
-#   P-row collect), and enumerate inside mapInPandas with
-#   TaskContext.partitionId() — the same two-pass scheme as RDD
-#   zipWithIndex, but staying in DataFrame/Arrow land.  The
-#   localCheckpoint pins the range partitioning so the count job and the
-#   enumeration job see identical partition ids, and (unlike persist) its
-#   storage is released when the plan is garbage-collected instead of
-#   pinning a full table copy in executor cache for the session lifetime.
-#   (localCheckpoint output is unrecoverable on executor loss; at 100 TB
-#   use reliable `checkpoint()` against the cluster checkpoint dir.)
-#   The strategy probe is a bounded limit(T+1) count (early-exit scan),
-#   so an expensive upstream plan is never fully evaluated just to pick a
-#   path; tiny frames take the window and never pay the exchange.  The
-#   cumulative-offset dict is O(nparts) ints and rides the task closure —
-#   no broadcast to leak (a per-call broadcast was never unpersisted in
-#   an earlier revision).
+# * Big path, the same two-pass scheme as RDD zipWithIndex in
+#   DataFrame/Arrow land:
+#   1. `_range_sorted`: repartitionByRange on the full sort spec (a
+#      parallel sampled exchange that keeps the total order ACROSS
+#      partitions), sortWithinPartitions, and an eager localCheckpoint
+#      that pins partition ids between jobs (unlike persist, its storage
+#      is released with the plan; at 100 TB use reliable `checkpoint()`).
+#      One P-row job then yields per-partition row offsets and running-sum
+#      prefixes — O(nparts) values riding the task closure, no broadcast
+#      to leak.
+#   2. `_enumerate`: one mapInPandas pass numbers rows from the partition
+#      offset (TaskContext.partitionId()) and, when asked, carries the
+#      running sum.  NTILE is arithmetic on that row number and the total
+#      (`_ntile_from_rn`); LAG instead collects each partition's last
+#      value (P rows) and injects it into the next partition's first row.
+#
+# Outputs are bit-identical on both paths because every caller supplies a
+# DETERMINISTIC total order (tiebreaker columns) — asserted by
+# tests/test_global_rank.py.  order_by is a list of (column_name,
+# ascending) pairs naming real columns of df.
 # --------------------------------------------------------------------------
 _ROW_ID_WINDOW_THRESHOLD = 1_000_000  # rows; below this one task wins
-
-
-def sequential_row_id(df: DataFrame, key: str, out_col: str = "id",
-                      nparts: int | None = None) -> DataFrame:
-    return global_row_number(df, [(key, True)], out_col=out_col,
-                             nparts=nparts, id_first=True)
-
-
-# --------------------------------------------------------------------------
-# Generalized global-order kernel (round-7 verdict task 2).
-#
-# `row_number() / ntile(n) / lag(x) OVER (ORDER BY ...)` with no
-# partitionBy funnels the entire input through ONE task — correct and
-# even fastest below ~1M rows, a scale-killer above it.  These helpers
-# keep the plain window on small inputs (same bounded limit(T+1) probe
-# as sequential_row_id) and switch to the two-pass range-partitioned
-# scheme above the threshold:
-#
-#   1. repartitionByRange on the full sort spec (parallel sampled
-#      exchange — Spark's range partitioner preserves the total order
-#      ACROSS partitions), sortWithinPartitions, localCheckpoint to pin
-#      partition identity between jobs.
-#   2. a P-row per-partition count -> cumulative offsets (driver-side,
-#      O(nparts) ints riding the task closure).
-#   3. enumerate / bucket / shift inside mapInPandas with
-#      TaskContext.partitionId().
-#
-# Outputs are bit-identical to the window form because every caller
-# supplies a DETERMINISTIC total order (tiebreaker columns) — asserted
-# by tests/test_global_rank.py on both paths.  NTILE bucket boundaries
-# use the exact SQL-standard rule (first c%n buckets get one extra
-# row), derived from the global row number plus the total count the
-# offset pass already produced.  LAG crosses partition boundaries by
-# collecting each partition's last value (P rows) and injecting
-# partition p-1's into partition p's first row.
-#
-# order_by is a list of (column_name, ascending) pairs; names must be
-# real columns of df (the range exchange partitions on them).
-# --------------------------------------------------------------------------
 
 
 def _sort_exprs(order_by):
     return [F.col(c).asc() if asc else F.col(c).desc()
             for c, asc in order_by]
-
-
-def _range_sorted(df: DataFrame, order_by, nparts: int,
-                  sum_col: str | None = None):
-    """Range-partition + sort by the total order; pin partition ids.
-
-    Returns (part, offsets, total) where offsets[pid] = number of rows
-    in partitions before pid (ascending pid == ascending sort order).
-    With ``sum_col``, the same single P-row job also accumulates that
-    column's per-partition sums and the return gains a fourth element:
-    prefixes[pid] = sum over all partitions before pid (the running-sum
-    carry global_rank_cumsum injects).
-    """
-    exprs = _sort_exprs(order_by)
-    part = (df.repartitionByRange(nparts, *exprs)
-            .sortWithinPartitions(*exprs)
-            .localCheckpoint(eager=True))
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if sum_col is not None:
-        aggs.append(F.sum(sum_col).alias("s"))
-    stats = {r["pid"]: r for r in
-             part.select(F.spark_partition_id().alias("pid"),
-                         *([sum_col] if sum_col else []))
-             .groupBy("pid").agg(*aggs).collect()}
-    offsets, prefixes, acc, acc_s = {}, {}, 0, 0
-    for pid in sorted(stats):
-        offsets[pid] = acc
-        acc += stats[pid]["n"]
-        if sum_col is not None:
-            prefixes[pid] = acc_s
-            acc_s += stats[pid]["s"]
-    if sum_col is not None:
-        return part, offsets, acc, prefixes
-    return part, offsets, acc
 
 
 def _probe_small(df: DataFrame, n_rows: int | None) -> bool:
@@ -492,42 +426,85 @@ def _probe_small(df: DataFrame, n_rows: int | None) -> bool:
     return df.limit(t + 1).count() <= t
 
 
-def global_row_number(df: DataFrame, order_by, out_col: str = "rn",
-                      nparts: int | None = None,
-                      id_first: bool = False,
-                      n_rows: int | None = None) -> DataFrame:
-    """row_number() OVER (ORDER BY order_by) — scale-safe above 1M rows."""
+def _over(df: DataFrame, order_by, *cols) -> DataFrame:
+    """The small path: ``df`` plus each ``col(w)`` for the one window
+    spec ``w`` ordered by ``order_by``."""
+    w = W.orderBy(*_sort_exprs(order_by))
+    return df.select("*", *(col(w) for col in cols))
+
+
+def _row_number(w):
+    return F.row_number().over(w).cast("bigint")
+
+
+def _schema(df: DataFrame, *extra: str) -> str:
+    return ", ".join([f"`{f.name}` {f.dataType.simpleString()}"
+                      for f in df.schema.fields] + list(extra))
+
+
+def _range_sorted(df: DataFrame, order_by, sum_col: str | None = None):
+    """Range-partition + sort by the total order; pin partition ids.
+
+    Returns (part, offsets, total, prefixes): offsets[pid] is the number
+    of rows and prefixes[pid] the sum of ``sum_col`` (0 without it) in
+    the partitions before pid (ascending pid == ascending sort order).
+    Both come from one P-row job.  At >1M rows every core has >=30k rows
+    to enumerate, so the exchange always uses full parallelism.
+    """
+    exprs = _sort_exprs(order_by)
+    nparts = df.sparkSession.sparkContext.defaultParallelism
+    part = (df.repartitionByRange(nparts, *exprs)
+            .sortWithinPartitions(*exprs)
+            .localCheckpoint(eager=True))
+    stats = (part.select(F.spark_partition_id().alias("pid"),
+                         (F.col(sum_col) if sum_col else F.lit(0)).alias("v"))
+             .groupBy("pid")
+             .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
+             .collect())
+    offsets, prefixes, total, acc = {}, {}, 0, 0
+    for r in sorted(stats, key=lambda r: r["pid"]):
+        offsets[r["pid"]], prefixes[r["pid"]] = total, acc
+        total, acc = total + r["n"], acc + r["s"]
+    return part, offsets, total, prefixes
+
+
+def _enumerate(df: DataFrame, order_by, rn_col: str,
+               sum_col: str | None = None, cum_col: str | None = None):
+    """The big path: ``df`` in sort order plus its global row number in
+    ``rn_col`` and, with ``sum_col``, the running sum of that column in
+    ``cum_col``.  Returns (frame, total row count)."""
     import pandas as pd
     from pyspark import TaskContext
 
-    if nparts is None:
-        if _probe_small(df, n_rows):
-            w = W.orderBy(*_sort_exprs(order_by))
-            rn = F.row_number().over(w).cast("bigint").alias(out_col)
-            cols = [rn, "*"] if id_first else ["*", rn]
-            return df.select(*cols)
-        # big path (>threshold rows): full parallelism is always right —
-        # at >=1M rows every core has >=30k rows to enumerate
-        nparts = df.sparkSession.sparkContext.defaultParallelism
-    part, offsets, _ = _range_sorted(df, order_by, nparts)
-
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    out_fields = (f"`{out_col}` bigint, {fields}" if id_first
-                  else f"{fields}, `{out_col}` bigint")
+    part, offsets, total, prefixes = _range_sorted(df, order_by, sum_col)
+    extra = [f"`{rn_col}` bigint"]
+    if sum_col is not None:
+        sum_type = df.select(F.sum(sum_col)).schema[0].dataType
+        extra.append(f"`{cum_col}` {sum_type.simpleString()}")
 
     def number(batches):
-        base = offsets.get(TaskContext.get().partitionId(), 0)
-        seen = 0
+        pid = TaskContext.get().partitionId()
+        nxt, run = offsets.get(pid, 0) + 1, prefixes.get(pid, 0)
         for pdf in batches:
-            ids = pd.Series(range(base + seen + 1, base + seen + 1 + len(pdf)),
-                            dtype="int64")
-            seen += len(pdf)
-            pdf = pdf.copy()
-            pdf.insert(0 if id_first else len(pdf.columns), out_col, ids)
+            pdf[rn_col] = pd.Series(range(nxt, nxt + len(pdf)),
+                                    dtype="int64")
+            nxt += len(pdf)
+            if sum_col is not None:
+                cum = pdf[sum_col].cumsum() + run
+                if len(pdf):
+                    run = cum.iloc[-1]
+                pdf[cum_col] = cum
             yield pdf
 
-    return part.mapInPandas(number, schema=out_fields)
+    return part.mapInPandas(number, schema=_schema(df, *extra)), total
+
+
+def global_row_number(df: DataFrame, order_by, out_col: str = "rn",
+                      n_rows: int | None = None) -> DataFrame:
+    """row_number() OVER (ORDER BY order_by) — scale-safe above 1M rows."""
+    if _probe_small(df, n_rows):
+        return _over(df, order_by, lambda w: _row_number(w).alias(out_col))
+    return _enumerate(df, order_by, out_col)[0]
 
 
 def _ntile_from_rn(rn, total: int, n: int):
@@ -550,30 +527,8 @@ def global_ntile(df: DataFrame, n: int, order_by,
                  n_rows: int | None = None) -> DataFrame:
     """ntile(n) OVER (ORDER BY order_by) — scale-safe above 1M rows."""
     if _probe_small(df, n_rows):
-        w = W.orderBy(*_sort_exprs(order_by))
-        return df.select("*", F.ntile(n).over(w).alias(out_col))
-    nparts = df.sparkSession.sparkContext.defaultParallelism
-    # reuse the row-number big path, then bucket arithmetically — the
-    # total count falls out of the offset pass for free
-    import pandas as pd  # noqa: F401  (kept: parity with row_number path)
-    from pyspark import TaskContext
-
-    part, offsets, total = _range_sorted(df, order_by, nparts)
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                      for f in df.schema.fields)
-
-    def number(batches):
-        base = offsets.get(TaskContext.get().partitionId(), 0)
-        seen = 0
-        for pdf in batches:
-            ids = pd.Series(range(base + seen + 1, base + seen + 1 + len(pdf)),
-                            dtype="int64")
-            seen += len(pdf)
-            pdf = pdf.copy()
-            pdf.insert(len(pdf.columns), "__rn", ids)
-            yield pdf
-
-    numbered = part.mapInPandas(number, schema=f"{fields}, `__rn` bigint")
+        return _over(df, order_by, lambda w: F.ntile(n).over(w).alias(out_col))
+    numbered, total = _enumerate(df, order_by, "__rn")
     return (numbered
             .select("*", _ntile_from_rn(F.col("__rn"), total, n)
                     .alias(out_col))
@@ -590,17 +545,14 @@ def global_lag(df: DataFrame, value_col: str, order_by,
     row's predecessor is the last row of the nearest non-empty partition
     before p — collected as P scalars, injected in mapInPandas.
     """
+    out_col = out_col or f"lag_{value_col}"
+    if _probe_small(df, n_rows):
+        return _over(df, order_by,
+                     lambda w: F.lag(value_col).over(w).alias(out_col))
     import pandas as pd
     from pyspark import TaskContext
 
-    out_col = out_col or f"lag_{value_col}"
-    if _probe_small(df, n_rows):
-        w = W.orderBy(*_sort_exprs(order_by))
-        return df.select(
-            "*", F.lag(value_col).over(w).alias(out_col))
-    nparts = df.sparkSession.sparkContext.defaultParallelism
-    part, offsets, _ = _range_sorted(df, order_by, nparts)
-
+    part = _range_sorted(df, order_by)[0]
     vtype = df.schema[value_col].dataType.simpleString()
 
     # pass 1: each partition's LAST value (sorted order), P tiny rows
@@ -616,19 +568,13 @@ def global_lag(df: DataFrame, value_col: str, order_by,
              part.mapInPandas(last_of, schema=f"pid int, v {vtype}")
              .collect()}
     boundary, carry = {}, None
-    for pid in range(max(offsets, default=-1) + 1):
-        boundary[pid] = carry
-        if pid in lasts:
-            carry = lasts[pid]
-
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
+    for pid in sorted(lasts):
+        boundary[pid], carry = carry, lasts[pid]
     is_int = vtype in ("tinyint", "smallint", "int", "bigint")
 
     def shift(batches):
         prev = boundary.get(TaskContext.get().partitionId())
         for pdf in batches:
-            pdf = pdf.copy()
             shifted = pdf[value_col].shift(1)
             if len(pdf):
                 shifted.iloc[0] = prev
@@ -638,7 +584,7 @@ def global_lag(df: DataFrame, value_col: str, order_by,
             pdf[out_col] = shifted
             yield pdf
 
-    return part.mapInPandas(shift, schema=f"{fields}, `{out_col}` {vtype}")
+    return part.mapInPandas(shift, schema=_schema(df, f"`{out_col}` {vtype}"))
 
 
 def global_rank_cumsum(df: DataFrame, value_col: str, order_by,
@@ -649,10 +595,8 @@ def global_rank_cumsum(df: DataFrame, value_col: str, order_by,
 
     The coverage-curve shape (q169: rank token types by frequency, read
     the cumulative token mass at each rank) needs both outputs over the
-    same total order; computing them separately would range-exchange
-    twice.  Here the offset pass collects (count, sum) per partition in
-    one P-row job, so the big path costs exactly one sampled range
-    exchange + one mapInPandas like global_row_number.
+    same total order; the big path takes both from one range exchange
+    and one enumeration, the sum carried across partitions.
 
     ``value_col`` must be an integral or floating column (the
     per-partition cumulative runs in pandas); the output cum column
@@ -660,45 +604,13 @@ def global_rank_cumsum(df: DataFrame, value_col: str, order_by,
     window form.  Nulls in value_col are not supported (no caller has
     them; pandas cumsum would propagate NaN across the partition).
     """
-    import pandas as pd
-    from pyspark import TaskContext
-
     if _probe_small(df, n_rows):
-        w = W.orderBy(*_sort_exprs(order_by))
-        return df.select(
-            "*", F.row_number().over(w).cast("bigint").alias(rn_col),
-            F.sum(value_col)
+        return _over(
+            df, order_by, lambda w: _row_number(w).alias(rn_col),
+            lambda w: F.sum(value_col)
             .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
             .alias(cum_col))
-    nparts = df.sparkSession.sparkContext.defaultParallelism
-    # the shared range-exchange kernel; one P-row job yields BOTH the
-    # row-number offsets and the running value prefix per partition
-    part, offsets, _, prefixes = _range_sorted(
-        df, order_by, nparts, sum_col=value_col)
-    sum_type = (part.select(F.sum(value_col).alias("s"))
-                .schema[0].dataType.simpleString())
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-
-    def enum_cum(batches):
-        pid = TaskContext.get().partitionId()
-        base_rn, run = offsets.get(pid, 0), prefixes.get(pid, 0)
-        seen = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[rn_col] = pd.Series(
-                range(base_rn + seen + 1, base_rn + seen + 1 + len(pdf)),
-                dtype="int64")
-            cum = pdf[value_col].cumsum() + run
-            if len(pdf):
-                run = cum.iloc[-1]
-            seen += len(pdf)
-            pdf[cum_col] = cum
-            yield pdf
-
-    return part.mapInPandas(
-        enum_cum,
-        schema=f"{fields}, `{rn_col}` bigint, `{cum_col}` {sum_type}")
+    return _enumerate(df, order_by, rn_col, value_col, cum_col)[0]
 
 
 @query(
@@ -711,7 +623,8 @@ def global_rank_cumsum(df: DataFrame, value_col: str, order_by,
 def q10_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (load(spark, sf_dir, "orders")
          .filter(F.col("o_orderkey") <= 500).select("o_orderkey"))
-    return sequential_row_id(o, "o_orderkey")
+    return (global_row_number(o, [("o_orderkey", True)], "id")
+            .select("id", "o_orderkey"))
 
 
 # --------------------------------------------------------------------------

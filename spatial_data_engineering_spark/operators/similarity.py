@@ -275,44 +275,15 @@ def q50_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs for 10x vectors at b=12 — so a deployment sizes b ~ log2(n) + c
 # to hold expected bucket occupancy constant, exactly like every
 # production LSH (the reference point: FAISS's nlist ∝ sqrt(n) plays
-# the same role for IVF).  b is read once at import from
-# SPARK_GRAFT_SRP_PLANES (default 12, matching the correctness-gate
-# fixtures); the oracle SQL is built from the same constant so the two
-# sides can never disagree.  Measured at sf1 (20k vectors, unrolled
+# the same role for IVF).  b is fixed at 12: the stored correctness
+# hashes of q51's bucket values and admitted pairs were taken at b=12,
+# and the oracle SQL is built from the same constant so the two sides
+# can never disagree.  Measured at sf1 (20k vectors, unrolled
 # plane dots, warm): b=12 -> 1.04M pairs / 4.7 s; b=16 -> 297k pairs /
 # 3.3 s (the surviving pairs are genuinely similar cluster-mates —
 # LSH concentrates real near-dups no matter how many bits).
 # --------------------------------------------------------------------------
-import os as _os
-
-_N_PLANES_DEFAULT = 12  # the correctness-gate fixture value
-
-
-def _read_n_planes() -> int:
-    """Validated once-at-import read of the SRP bucket-width knob.
-
-    b is a deployment knob (pairs ~ n^2 / 2^b), but the DRIVER gates
-    store value hashes computed at the default: a stray env var changes
-    q51's bucket values and admitted pairs, and the oracle co-moves only
-    within the same process, so stored expectations would silently
-    drift (ADVICE r10).  Out-of-range values fail loudly here; the
-    correctness/driver paths additionally pin the default via
-    tests/test_plan_invariants.py.
-    """
-    raw = _os.environ.get("SPARK_GRAFT_SRP_PLANES", str(_N_PLANES_DEFAULT))
-    try:
-        val = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_SRP_PLANES={raw!r} is not an integer") from None
-    if not 1 <= val <= 32:
-        raise ValueError(
-            f"SPARK_GRAFT_SRP_PLANES={val} outside the supported 1..32 "
-            "(the band key packs into a 32-bit bucket id)")
-    return val
-
-
-_N_PLANES = _read_n_planes()
+_N_PLANES = 12
 
 
 def _plane_dot(engine: str, emb: str, p: int, dim64: bool = False) -> str:

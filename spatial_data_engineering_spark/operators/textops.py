@@ -4163,28 +4163,6 @@ _BLM_REF_LANG = "en"
 # repr(1/3) / repr(2/3): parse to the same double in both engines
 _BLM_P1, _BLM_P2 = "0.3333333333333333", "0.6666666666666666"
 
-# Fleet-scale tertile mode (round 15; VERDICT r14 task 4 — the swap the
-# r14 plan-shape note documented is now a tested code path, the
-# SPARK_GRAFT_SRP_PLANES env pattern).  "exact" (default, oracle-
-# matched) computes per-language thresholds with Spark's exact
-# percentile() — per-group-memory-bounded, correct at any tested SF;
-# "approx" swaps in approx_percentile(nll, ..., accuracy) so a
-# billion-doc language never materializes its full nll set in one
-# aggregation buffer.  CCNet's buckets are statistical by design, so
-# the approximate thresholds are within the operator's own tolerance —
-# tests/test_q222_pct_modes.py pins bucket-count stability between the
-# two modes at sf0.01.
-_Q222_PCT_ACCURACY = 10000
-
-
-def _q222_pct_mode() -> str:
-    import os as _os
-
-    raw = _os.environ.get("SPARK_GRAFT_Q222_PCT", "exact")
-    if raw not in ("exact", "approx"):
-        raise ValueError(
-            f"SPARK_GRAFT_Q222_PCT={raw!r}: expected 'exact' or 'approx'")
-    return raw
 
 _ORACLE_Q222 = f"""
     WITH doc AS (
@@ -4280,14 +4258,10 @@ def q222_bigram_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rule 6, SCALE_NOTES r14).  At fleet scale the documented swap is
     # persisting scored (3 narrow columns) alongside the
     # approx_percentile threshold swap.
-    pct_fn = ("percentile" if _q222_pct_mode() == "exact"
-              else "approx_percentile")
-    acc = ("" if _q222_pct_mode() == "exact"
-           else f", {_Q222_PCT_ACCURACY}")
     thr = (scored.groupBy("lang")
            .agg(F.expr(
-               f"{pct_fn}(nll, array(cast({_BLM_P1} as double),"
-               f" cast({_BLM_P2} as double)){acc})").alias("_ps"))
+               f"percentile(nll, array(cast({_BLM_P1} as double),"
+               f" cast({_BLM_P2} as double)))").alias("_ps"))
            .select("lang", F.col("_ps")[0].alias("t1"),
                    F.col("_ps")[1].alias("t2")))
     bucket = (F.when(F.col("nll") <= F.col("t1"), "head")

@@ -250,8 +250,7 @@ def global_window_violations(df) -> list[str]:
             if not r["ok"]]
 
 
-def audit_registry(spark, sf_dir: str, names=None,
-                   force_big_paths: bool = True) -> dict:
+def audit_registry(spark, sf_dir: str, names=None) -> dict:
     """Sweep the full query registry and return the committed-per-round
     audit artifact: every global window per query with its bounding
     evidence (``global_windows``), plus ``n_checked``/``n_flagged``.
@@ -260,8 +259,8 @@ def audit_registry(spark, sf_dir: str, names=None,
     tests/test_plan_invariants.py (the per-round refresh: pytest
     regenerates GLOBAL_WINDOW_AUDIT.json and gates on 0 flagged, so the
     artifact can never go stale against the shipped plans — VERDICT r9
-    task 7).  ``force_big_paths`` zeroes the row-id kernel threshold for
-    the sweep so small-input auto-switches can't mask a missing reroute.
+    task 7).  The sweep zeroes the global-order kernel's threshold so
+    small-input auto-switches can't mask a missing reroute.
     """
     from ..operators import relational as R
     from ..queries_registry import all_queries
@@ -270,8 +269,7 @@ def audit_registry(spark, sf_dir: str, names=None,
     if names is None:
         names = list(qs)
     saved = R._ROW_ID_WINDOW_THRESHOLD
-    if force_big_paths:
-        R._ROW_ID_WINDOW_THRESHOLD = 0
+    R._ROW_ID_WINDOW_THRESHOLD = 0
     flagged, table = {}, {}
     try:
         for name in names:

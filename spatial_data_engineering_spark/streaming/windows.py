@@ -243,13 +243,14 @@ def _effective_state(spark: SparkSession, base: dict, docs_dir: str,
     are parquet scans.  An uncovered batch — a crash landed between its
     docs write and its sig writes, or the dataset predates sig
     persistence — has its tables rebuilt from its docs, the source of
-    truth, instead of silently shrinking the dedup base.  Excluding the
-    batch's own partitions keeps a replay from self-rejecting.  An
-    existing ``docs_dir`` with no earlier partition is still read, so a
-    directory that is not the admitted dataset (stray files, wrong
-    layout) fails LOUDLY instead of falling back to ``base``."""
-    from functools import reduce
-
+    truth, instead of silently shrinking the dedup base; the rebuilt
+    tables are written under its ``batch=N`` and then read like any
+    covered batch, so the rebuild happens once, not in every later
+    micro-batch.  Excluding the batch's own partitions keeps a replay
+    from self-rejecting.  An existing ``docs_dir`` with no earlier
+    partition is still read, so a directory that is not the admitted
+    dataset (stray files, wrong layout) fails LOUDLY instead of falling
+    back to ``base``."""
     done = _partitions(spark, docs_dir)
     if done is None:
         return base
@@ -257,21 +258,19 @@ def _effective_state(spark: SparkSession, base: dict, docs_dir: str,
     covered = set(done)
     for n in base:
         covered &= _partitions(spark, f"{sigs_dir}/{n}") or set()
-    parts = [base]
-    if covered:
+    for b in sorted(done - covered):
+        rebuilt = _state_tables(spark.read.parquet(f"{docs_dir}/{b}"), base)
+        for n, table in rebuilt.items():
+            table.write.mode("overwrite").parquet(f"{sigs_dir}/{n}/{b}")
+    if done:
         keep = F.col("batch").isin(
-            sorted(int(b.split("=", 1)[1]) for b in covered))
-        parts.append({n: spark.read.parquet(f"{sigs_dir}/{n}")
-                      .filter(keep).drop("batch") for n in base})
-    missing = sorted(done - covered)
-    if missing:
-        parts.append(_state_tables(spark.read.parquet(
-            *[f"{docs_dir}/{b}" for b in missing]), base))
-    elif not done:
-        parts.append(_state_tables(spark.read.parquet(docs_dir)
-                                   .filter(F.col("batch") != batch_id), base))
-    return {n: reduce(DataFrame.unionByName, [p[n] for p in parts])
-            for n in base}
+            sorted(int(b.split("=", 1)[1]) for b in done))
+        state = {n: spark.read.parquet(f"{sigs_dir}/{n}")
+                 .filter(keep).drop("batch") for n in base}
+    else:
+        state = _state_tables(spark.read.parquet(docs_dir)
+                              .filter(F.col("batch") != batch_id), base)
+    return {n: base[n].unionByName(state[n]) for n in base}
 
 
 def _drive_admission(stream_docs: DataFrame, out_dir: str,

@@ -208,7 +208,9 @@ def test_stream_near_dedup_recovers_partial_sig_batch(spark, tmp_path):
     put("f2", [(201, _text(60))])
     assert run("ckpt1", maxFilesPerTrigger=1) == [100, 201]
     # the crash state: batch=1's sig PARTITIONS gone, tables still exist
-    for d in glob.glob(os.path.join(out_dir, "_t1sigs", "*", "batch=1")):
+    lost = glob.glob(os.path.join(out_dir, "_t1sigs", "*", "batch=1"))
+    assert len(lost) == 2
+    for d in lost:
         shutil.rmtree(d)
     assert os.path.isdir(os.path.join(out_dir, "_t1sigs", "sh", "batch=0"))
 
@@ -220,3 +222,5 @@ def test_stream_near_dedup_recovers_partial_sig_batch(spark, tmp_path):
     # batch=1, 300 near-dup of 201 (the batch whose sigs were lost),
     # 301 fresh
     assert run("ckpt2") == [100, 201, 301]
+    # the rebuilt state was written back, so no later batch rebuilds it
+    assert all(os.path.isdir(d) for d in lost), lost

@@ -248,38 +248,6 @@ def test_audit_artifact_ids_are_stable():
     assert out["global_windows"][0]["evidence"] is None
 
 
-def test_srp_planes_env_is_default_under_the_gates():
-    # round-10 ADVICE: q51's bucket values (and therefore the driver's
-    # stored value hashes) depend on SPARK_GRAFT_SRP_PLANES.  The knob
-    # is legitimate for deployments, but the correctness/driver gates
-    # must run at the fixture default or expectations silently drift.
-    import os
-
-    from spatial_data_engineering_spark.operators.similarity import (
-        _N_PLANES, _N_PLANES_DEFAULT, _read_n_planes)
-    raw = os.environ.get("SPARK_GRAFT_SRP_PLANES")
-    assert raw is None or int(raw) == _N_PLANES_DEFAULT, (
-        f"SPARK_GRAFT_SRP_PLANES={raw} would desynchronize stored "
-        "driver expectations; unset it for gate runs")
-    assert _N_PLANES == _N_PLANES_DEFAULT == 12
-    # and the import-time read validates its domain loudly
-    import pytest as _pytest
-    os.environ["SPARK_GRAFT_SRP_PLANES"] = "0"
-    try:
-        with _pytest.raises(ValueError, match="1..32"):
-            _read_n_planes()
-        os.environ["SPARK_GRAFT_SRP_PLANES"] = "nope"
-        with _pytest.raises(ValueError, match="not an integer"):
-            _read_n_planes()
-        os.environ["SPARK_GRAFT_SRP_PLANES"] = "16"
-        assert _read_n_planes() == 16
-    finally:
-        if raw is None:
-            del os.environ["SPARK_GRAFT_SRP_PLANES"]
-        else:
-            os.environ["SPARK_GRAFT_SRP_PLANES"] = raw
-
-
 def test_q175_calendar_bucket_attribution(spark):
     # VERDICT r9 task 7: the one non-top-K excuse in the committed
     # global-window audit is q175's calendar bucket.  Pin it: every

@@ -75,22 +75,18 @@ def test_semi_anti_never_materialize(spark, name):
     assert ("LeftSemi" in plan) or ("LeftAnti" in plan)
 
 
-def test_q10_row_id_scale_path_no_single_partition(spark):
-    # F1 at scale: the two-pass partition-offset row id (forced here via an
-    # explicit nparts — auto mode short-circuits small inputs to a plain
-    # window) must not collapse the table onto one partition the way a
-    # global window would.  The eager localCheckpoint truncates the
+def test_q10_row_id_scale_path_no_single_partition(spark, monkeypatch):
+    # F1 at scale: the two-pass partition-offset row id (forced here by a
+    # zero kernel threshold — auto mode short-circuits small inputs to a
+    # plain window) must not collapse the table onto one partition the
+    # way a global window would.  The eager localCheckpoint truncates the
     # explained lineage (the range exchange runs at construction), so pin
     # the property itself: output stays spread across partitions and is
     # enumerated by MapInPandas.
-    from pyspark.sql import functions as F
+    from spatial_data_engineering_spark.operators import relational as R
 
-    from spatial_data_engineering_spark.operators.relational import (
-        load, sequential_row_id)
-
-    o = (load(spark, SF_ORACLE, "orders")
-         .filter(F.col("o_orderkey") <= 500).select("o_orderkey"))
-    df = sequential_row_id(o, "o_orderkey", nparts=8)
+    monkeypatch.setattr(R, "_ROW_ID_WINDOW_THRESHOLD", 0)
+    df = R.q10_row_number(spark, SF_ORACLE)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
@@ -99,18 +95,14 @@ def test_q10_row_id_scale_path_no_single_partition(spark):
     assert df.rdd.getNumPartitions() > 1
 
 
-def test_q10_row_id_paths_agree(spark):
+def test_q10_row_id_paths_agree(spark, monkeypatch):
     # The auto-selected small-input window path and the forced two-pass
     # scale path must enumerate identically.
-    from pyspark.sql import functions as F
+    from spatial_data_engineering_spark.operators import relational as R
 
-    from spatial_data_engineering_spark.operators.relational import (
-        load, sequential_row_id)
-
-    o = (load(spark, SF_ORACLE, "orders")
-         .filter(F.col("o_orderkey") <= 500).select("o_orderkey"))
-    small = sequential_row_id(o, "o_orderkey")
-    scale = sequential_row_id(o, "o_orderkey", nparts=8)
+    small = R.q10_row_number(spark, SF_ORACLE)
+    monkeypatch.setattr(R, "_ROW_ID_WINDOW_THRESHOLD", 0)
+    scale = R.q10_row_number(spark, SF_ORACLE)
     assert sorted(map(tuple, small.collect())) == \
         sorted(map(tuple, scale.collect()))
 

@@ -731,7 +731,9 @@ def test_admit_stream_recovers_partial_sig_batch(spark, tmp_path):
     assert sorted(r.doc_id for r in
                   spark.read.parquet(out_dir).collect()) == [100, 201]
     # the crash state: batch=1's sig PARTITIONS gone, tables still exist
-    for d in glob.glob(os.path.join(out_dir, "_sigs", "*", "batch=1")):
+    lost = glob.glob(os.path.join(out_dir, "_sigs", "*", "batch=1"))
+    assert len(lost) == 3
+    for d in lost:
         shutil.rmtree(d)
     assert os.path.isdir(os.path.join(out_dir, "_sigs", "sh", "batch=0"))
 
@@ -751,3 +753,5 @@ def test_admit_stream_recovers_partial_sig_batch(spark, tmp_path):
     # dup, 201 exact dup of the standing batch=1, 300 near-dup of 201
     # (the partition whose sigs were lost), 301 fresh
     assert got == [100, 201, 301], got
+    # the rebuilt state was written back, so no later batch rebuilds it
+    assert all(os.path.isdir(d) for d in lost), lost

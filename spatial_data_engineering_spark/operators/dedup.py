@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load, load_spread, spread
+from ..catalog import load, load_spread
 from ..memo import legacy_counter, memo
 from ..queries_registry import registrar
 
@@ -235,12 +235,31 @@ def q47_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified_pairs(cand, sh, sh, prune=False)
 
 
-def shingle_bands(d: DataFrame,
-                  eager: bool = False) -> tuple[DataFrame, DataFrame]:
-    """The q47 signature machinery over an ARBITRARY (doc_id, text)
-    frame: returns (sh, bands) where sh = (doc_id, tl shingle list) and
-    bands = (doc_id, band key), both checkpoint-pinned (sh feeds the
-    verify joins; bands the candidate join — the q47 pin rationale).
+def _minhash_frames(d: DataFrame, eager: bool
+                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The q47 signature machinery over a (doc_id, text) frame: (sh, sig,
+    bands), each localCheckpoint-pinned.  sh = (doc_id, tl shingle list)
+    feeds the verify joins, sig = the 16 minhash columns, bands =
+    (doc_id, band key) the candidate join.  ``eager`` pins sh at once
+    (for a caller whose first action reads it three times); sig and
+    bands materialize inside whichever consumer runs first."""
+    sh = d.select(
+        "doc_id", F.expr(_SHINGLES_SPARK.format(col="text")).alias("tl")
+    ).localCheckpoint(eager=eager)
+    hx = (sh.select("doc_id", F.explode("tl").alias("t"))
+          .select("doc_id", F.expr(_hex_fold("spark", "md5(t)")).alias("h")))
+    sig = hx.groupBy("doc_id").agg(
+        *[F.expr(e) for e in _sig_aggs("spark")]).localCheckpoint(eager=False)
+    bands = sig.select(
+        "doc_id",
+        F.explode(F.expr(f"array({', '.join(_band_keys('spark'))})"))
+        .alias("band")).localCheckpoint(eager=False)
+    return sh, sig, bands
+
+
+def shingle_bands(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sh, bands) of ``_minhash_frames`` over an ARBITRARY (doc_id,
+    text) frame, sh pinned lazily (it may never run).
 
     This is the frame-parameterized building block shared by q47, the
     pair-table build and incremental admission
@@ -249,25 +268,8 @@ def shingle_bands(d: DataFrame,
     between the pair table and the admission path.  A delta batch's
     bands join a BASE corpus's bands without re-running the base LSH —
     at 100 TB the (sh, bands) pair is the stored signature table,
-    written once alongside the pair table and read back per delta.
-
-    ``eager`` pins sh immediately (q47's choice: sh feeds three
-    consumers in one action); the lazy default materializes on first
-    use — same values, one fewer job when the caller may not run."""
-    sh = d.select(
-        "doc_id", F.expr(_SHINGLES_SPARK.format(col="text")).alias("tl")
-    ).localCheckpoint(eager=eager)
-    hx = (
-        sh.select("doc_id", F.explode("tl").alias("t"))
-        .select("doc_id", F.expr(_hex_fold("spark", "md5(t)")).alias("h"))
-    )
-    sig = hx.groupBy("doc_id").agg(
-        *[F.expr(e) for e in _sig_aggs("spark")])
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.expr(f"array({', '.join(_band_keys('spark'))})"))
-        .alias("band"),
-    ).localCheckpoint(eager=False)
+    written once alongside the pair table and read back per delta."""
+    sh, _sig, bands = _minhash_frames(d, eager=False)
     return sh, bands
 
 
@@ -284,7 +286,7 @@ def verified_pairs(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
     and without the prune the verify join SHUFFLES that whole table to
     match a handful of rows (measured in the admit_delta stress at 400k
     base docs: 104 s -> seconds for a 4k-doc delta).  Corpus-wide
-    callers (q47 itself, the pair-table build) pass ``prune=False``:
+    callers (q47, q76, the pair-table build) pass ``prune=False``:
     their candidate ID set is corpus-bounded, so broadcasting it would
     be the anti-pattern the prune exists to avoid."""
     if prune:
@@ -382,41 +384,24 @@ def __getattr__(name: str):
 
 def shingle_frames_cached(spark: SparkSession, sf_dir: str
                           ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Session-memoized (sh, sig, bands) for sf_dir's documents — the
-    q47 signature machinery plus the 16-column minhash signature frame
-    q156's estimator audit reads.  Definitions are byte-for-byte the
-    shingle_bands pipeline (one extra handle on its internal sig), so
-    q47 and q156 consume the same values they built standalone."""
-    def build():
-        d = load_spread(spark, sf_dir, "documents")
-        # sh eager: it feeds three consumers in the FIRST caller's one
-        # action (q47's measured pin rationale); sig/bands lazy — they
-        # materialize inside whichever consumer runs first
-        sh = d.select(
-            "doc_id",
-            F.expr(_SHINGLES_SPARK.format(col="text")).alias("tl")
-        ).localCheckpoint(eager=True)
-        hx = (sh.select("doc_id", F.explode("tl").alias("t"))
-              .select("doc_id",
-                      F.expr(_hex_fold("spark", "md5(t)")).alias("h")))
-        sig = hx.groupBy("doc_id").agg(
-            *[F.expr(e) for e in _sig_aggs("spark")]
-        ).localCheckpoint(eager=False)
-        bands = sig.select(
-            "doc_id",
-            F.explode(F.expr(f"array({', '.join(_band_keys('spark'))})"))
-            .alias("band")).localCheckpoint(eager=False)
-        return sh, sig, bands
-
-    return _doc_frame_memo(spark, sf_dir, "minhash_frames", build)
+    """Session-memoized ``_minhash_frames`` (sh, sig, bands) of sf_dir's
+    documents — q47's bands plus the 16-column minhash signature frame
+    q156's estimator audit reads.  sh is pinned eagerly: it feeds three
+    consumers in the FIRST caller's one action (q47's measured pin
+    rationale)."""
+    return _doc_frame_memo(
+        spark, sf_dir, "minhash_frames",
+        lambda: _minhash_frames(load_spread(spark, sf_dir, "documents"),
+                                eager=True))
 
 
 def simhash_sig_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized 16-bit SimHash signature of sf_dir's documents
-    (the _simhash_sig frame q48 and q167 both consume)."""
+    """Session-memoized (doc_id, simhash): the one-word ``_simhash_words``
+    signature of sf_dir's documents, which q48, q128 and q167 consume."""
     return _doc_frame_memo(
         spark, sf_dir, "simhash16",
-        lambda: _simhash_sig(load(spark, sf_dir, "documents"))
+        lambda: _simhash_words(load_spread(spark, sf_dir, "documents"), 1)
+        .select("doc_id", F.col("w0").alias("simhash"))
         .localCheckpoint(eager=False))
 
 
@@ -478,69 +463,64 @@ def q54_dedup_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sharing a signature are duplicate candidates (hamming-0 buckets).
 # Bit arithmetic is div/mod on hex-digit values — portable to the oracle.
 # --------------------------------------------------------------------------
-def _digit(engine: str, c: int) -> str:
-    # value 0..15 of hex char c (1-based) of md5(t)
-    if engine == "spark":
-        return f"(locate(substring(md5(t), {c}, 1), '0123456789abcdef') - 1)"
-    return f"(strpos('0123456789abcdef', substr(md5(t), {c}, 1)) - 1)"
+def _vote_name(w: int, k: int, n_words: int) -> str:
+    return f"s{k}" if n_words == 1 else f"s{w}_{k}"
 
 
-def _bit_sum_exprs(engine: str) -> list[str]:
-    div = "div" if engine == "spark" else "//"
-    out = []
-    for b in range(16):
-        c, k = b // 4 + 1, b % 4
-        d = _digit(engine, c)
-        if engine == "spark":
-            out.append(f"SUM(2 * (({d} div {2 ** k}) % 2) - 1) AS s{b}")
-        else:
-            out.append(f"SUM(2 * (({d} {div} {2 ** k}) % 2) - 1) AS s{b}")
-    return out
+def _vote_sums_sql(n_words: int) -> list[str]:
+    """DuckDB per-bit vote sums of an n_words x 16-bit SimHash over
+    md5(t): word w bit k is bit k%4 of hex char 4w + k//4 + 1."""
+    return [
+        f"SUM(2 * (((strpos('0123456789abcdef', substr(md5(t), "
+        f"{4 * w + k // 4 + 1}, 1)) - 1) // {2 ** (k % 4)}) % 2) - 1)"
+        f" AS {_vote_name(w, k, n_words)}"
+        for w in range(n_words) for k in range(16)]
 
 
-_SIMHASH_RECOMBINE = " + ".join(
-    f"(CASE WHEN s{b} > 0 THEN {2 ** b} ELSE 0 END)" for b in range(16)
-)
+def _simhash_words_expr(n_words: int) -> list[str]:
+    """Each word's majority-vote recombination of its 16 vote sums."""
+    return [" + ".join(
+        f"(CASE WHEN {_vote_name(w, k, n_words)} > 0 THEN {2 ** k} ELSE 0 END)"
+        for k in range(16)) for w in range(n_words)]
 
 
-def _bit_sum_exprs_from_word() -> list[str]:
-    """Spark-side twin of _bit_sum_exprs over one conv()-parsed 16-bit
-    value h0 (hex chars 1-4 of the token md5, one parse per token):
-    hex char c sits at bit offset 4*(4-c), so bit k of digit c is
-    (h0 >> (4*(4-c)+k)) & 1 == (d div 2^k) % 2 — identical values (the
-    q153 microbench proves the shift/mask == div/mod identity on the
-    wider 64-bit variant)."""
-    out = []
-    for b in range(16):
-        c, k = b // 4 + 1, b % 4
-        bit = f"(shiftright(h0, {4 * (4 - c) + k}) & 1)"
-        out.append(f"SUM(2 * CAST({bit} AS BIGINT) - 1) AS s{b}")
-    return out
+_SIMHASH_RECOMBINE = _simhash_words_expr(1)[0]
 
 
-def _simhash_sig(d: DataFrame) -> DataFrame:
-    """(doc_id, simhash BIGINT) — the 16-bit majority-vote SimHash
-    signature shared by q48/q128/q167.
+def _simhash_words(d: DataFrame, n_words: int) -> DataFrame:
+    """(doc_id, w0 .. w{n_words-1} BIGINT): the majority-vote SimHash of
+    each document's distinct space-split tokens, 16 bits per word.  One
+    word is the 16-bit signature q48/q128/q167 bucket on; q153 joins on
+    four.
 
     Per-doc DISTINCT tokens are computed row-locally (array_distinct),
     which gives the same token set as a corpus-wide (doc_id, t)
-    DISTINCT with zero shuffle; md5 is conv()-parsed once per token into
-    one 16-bit integer so the 16 vote sums are pure shift/mask
-    reductions.
-    With the doc_id spread upstream the vote groupBy reuses that
-    exchange — the whole signature phase runs shuffle-free.
-    """
-    tok = spread(d, "doc_id").select("doc_id", F.explode(
+    DISTINCT with zero shuffle; with ``d`` spread by doc_id upstream the
+    vote groupBy reuses that exchange, so the signature phase runs
+    shuffle-free.  Each token's md5 is conv()-parsed once per 8 hex
+    chars into h0, h1, ... and every vote reads one bit by shift+mask:
+    the c-th (0-based) hex char of a half sits at bit offset 4*(7-c), so
+    bit j of that digit d is (h >> 4*(7-c)+j) & 1 == (d div 2^j) % 2,
+    the DuckDB oracle's arithmetic (measured 1.30s -> 0.70s for the
+    64-bit signature stage on 270k tokens, zero mismatches)."""
+    tok = d.select("doc_id", F.explode(
         F.array_distinct(F.split("text", " "))).alias("t"))
     dig = tok.select("doc_id", F.md5("t").alias("hh")).select(
         "doc_id",
-        F.expr("CAST(conv(substring(hh, 1, 4), 16, 10) AS BIGINT)")
-        .alias("h0"))
-    sums = dig.groupBy("doc_id").agg(
-        *[F.expr(e) for e in _bit_sum_exprs_from_word()])
-    return sums.select(
-        "doc_id",
-        F.expr(f"CAST({_SIMHASH_RECOMBINE} AS BIGINT)").alias("simhash"))
+        *[F.expr(f"CAST(conv(substring(hh, {8 * i + 1}, 8), 16, 10)"
+                 f" AS BIGINT)").alias(f"h{i}")
+          for i in range((n_words + 1) // 2)])
+    votes = []
+    for w in range(n_words):
+        for k in range(16):
+            half, c = divmod(4 * w + k // 4, 8)
+            bit = f"(shiftright(h{half}, {4 * (7 - c) + k % 4}) & 1)"
+            votes.append(F.expr(f"SUM(2 * CAST({bit} AS BIGINT) - 1)")
+                         .alias(_vote_name(w, k, n_words)))
+    return dig.groupBy("doc_id").agg(*votes).select(
+        "doc_id", *[F.expr(f"CAST({e} AS BIGINT)").alias(f"w{w}")
+                    for w, e in enumerate(_simhash_words_expr(n_words))])
+
 
 _ORACLE_Q48 = f"""
     WITH tok AS (
@@ -548,7 +528,7 @@ _ORACLE_Q48 = f"""
         FROM documents
     ),
     sums AS (
-        SELECT doc_id, {', '.join(_bit_sum_exprs('duckdb'))}
+        SELECT doc_id, {', '.join(_vote_sums_sql(1))}
         FROM tok GROUP BY doc_id
     ),
     sig AS (
@@ -622,45 +602,33 @@ _ORACLE_Q76 = f"""
 """
 
 
-def _ssj_candidates(d: DataFrame):
-    """Shared df-capped inverted-index candidate generator for the exact
-    set-similarity family (q76 Jaccard, q88 containment): returns the
-    (shingle-set frame, candidate-pair frame) pair.  The cap bounds
-    every index block to <= cap docs so candidates stay sub-quadratic;
-    the recall-by-contract trade is documented at q76."""
-    sh = d.select(
-        "doc_id", F.expr(_SHINGLES_SPARK.format(col="text")).alias("tl")
-    )
-    return sh, _ssj_candidates_from_sh(sh)
-
-
-def _ssj_candidates_from_sh(sh: DataFrame) -> DataFrame:
-    """Candidate pairs from an existing (doc_id, tl) shingle frame —
-    split out (r17 opt) so the registry path can feed the session-
-    memoized checkpointed shingle table instead of re-running the gram
-    walk; the frame-parameterized ``_ssj_candidates`` stays for the
-    planted-corpus property tests."""
-    tok = sh.select("doc_id", F.explode("tl").alias("t"))
-    # df filter as a window-free agg + join: HAVING over the index keeps
-    # the partial-aggregated path (no per-row window over the token list)
-    rare = tok.groupBy("t").agg(F.count(F.lit(1)).alias("df")) \
-        .filter(F.col("df") <= _SSJ_DF_CAP).select("t")
-    rt = tok.join(rare, "t")
-    a, b = rt.alias("a"), rt.alias("b")
-    cand = (
-        a.join(b, (F.col("a.t") == F.col("b.t"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    return cand
+def dfcap_shared_key_pairs(keyed: DataFrame, key: str, df_cap: int,
+                           min_shared: int, out_col: str) -> DataFrame:
+    """(doc_id, key) -> (a_id, b_id, out_col) pairs, a_id < b_id, sharing
+    >= min_shared keys, through the df-capped inverted index: count the
+    documents per key, drop keys held by more than ``df_cap`` documents
+    (the q76 block-size bound, which keeps the self-join sub-quadratic),
+    self-join on the key.  ``keyed`` must hold each (doc_id, key) once,
+    and it is read three times, so callers whose upstream is expensive
+    pin it."""
+    counts = keyed.groupBy(key).agg(F.count(F.lit(1)).alias("n_docs"))
+    keep = (keyed.join(counts.filter(F.col("n_docs") <= df_cap), key)
+            .select("doc_id", key))
+    a, b = keep.alias("a"), keep.alias("b")
+    return (a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("a_id"),
+                     F.col("b.doc_id").alias("b_id"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias(out_col))
+            .filter(F.col(out_col) >= min_shared))
 
 
 def ssj_candidate_pairs(spark: SparkSession, sf_dir: str):
     """(shingle frame, candidate pairs) for the exact set-similarity
     family.  q76 and q88 share the same df-capped inverted-index
-    candidates; the list is df-cap-bounded (~edge-sized), so it is a
-    session-tier memo pinned by one localCheckpoint."""
+    candidates (docs sharing >= 1 rare shingle); the list is
+    df-cap-bounded (~edge-sized), so it is a session-tier memo pinned by
+    one localCheckpoint."""
     # The shingle frame is deliberately NOT memoized: rebuilding it is one
     # shuffle-free scan, and the verify-join sides need the scan-derived
     # frame.  Feeding a localCheckpointed shingle frame to the verify
@@ -672,29 +640,23 @@ def ssj_candidate_pairs(spark: SparkSession, sf_dir: str):
     # plain and localCheckpointed eagerly or lazily).  The scan-derived
     # frame's duplication rides ReuseExchange (the standing q76 note
     # above).
-    sh, _ = _ssj_candidates(load_spread(spark, sf_dir, "documents"))
+    def shingles():
+        return load_spread(spark, sf_dir, "documents").select(
+            "doc_id", F.expr(_SHINGLES_SPARK.format(col="text")).alias("tl"))
+
     cand = memo(spark, "ssj_candidates",
                 (os.path.join(sf_dir, "documents.parquet"),),
-                lambda: _ssj_candidates(
-                    load_spread(spark, sf_dir, "documents"))[1]
-                .localCheckpoint(eager=True))
-    return sh, cand
+                lambda: dfcap_shared_key_pairs(
+                    shingles().select("doc_id", F.explode("tl").alias("t")),
+                    "t", _SSJ_DF_CAP, 1, "n_shared")
+                .select("a_id", "b_id").localCheckpoint(eager=True))
+    return shingles(), cand
 
 
 @query("q76_ngram_jaccard_join", _ORACLE_Q76)
 def q76_ngram_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh, cand = ssj_candidate_pairs(spark, sf_dir)
-    ta, tb = sh.alias("ta"), sh.alias("tb")
-    j = (F.size(F.array_intersect(F.col("ta.tl"), F.col("tb.tl"))) * 1.0
-         / F.size(F.array_distinct(F.concat(F.col("ta.tl"), F.col("tb.tl")))))
-    # materialize Jaccard once pre-filter (HOF exprs are not CSE'd)
-    return (
-        cand.join(ta, F.col("ta.doc_id") == F.col("a_id"))
-        .join(tb, F.col("tb.doc_id") == F.col("b_id"))
-        .select("a_id", "b_id", j.alias("__j"))
-        .filter(F.col("__j") >= _SSJ_THETA)
-        .select("a_id", "b_id", F.round("__j", 6).alias("jaccard"))
-    )
+    return verified_pairs(cand, sh, sh, _SSJ_THETA, prune=False)
 
 
 # --------------------------------------------------------------------------
@@ -1060,55 +1022,35 @@ def q226_incremental_near_dedup(spark: SparkSession,
 _HAM_WORDS = 4   # 4 words x 16 bits = 64-bit signature
 _HAM_MAX = 3     # pigeonhole: ham <= 3 pairs share >= 1 of 4 words
 
-
-def _q153_word_sums(engine: str) -> list[str]:
-    """64 per-bit vote sums: word w bit k <- md5 hex char 4w + k//4 + 1,
-    bit k%4 — the q48 _digit arithmetic extended to 16 hex chars."""
-    div = "div" if engine == "spark" else "//"
-    out = []
-    for w in range(_HAM_WORDS):
-        for k in range(16):
-            c = 4 * w + k // 4 + 1
-            j = k % 4
-            d = _digit(engine, c)
-            out.append(f"SUM(2 * (({d} {div} {2 ** j}) % 2) - 1) AS s{w}_{k}")
-    return out
-
-
-def _q153_word_sums_from_words() -> list[str]:
-    """Spark-side twin of _q153_word_sums over two conv()-parsed 32-bit
-    halves h1/h2 of the token md5 (hex chars 1-8 and 9-16): each of the
-    64 vote sums reads one bit by shift+mask instead of re-deriving
-    md5 -> substring -> locate per row inside the aggregate.  Hex char c
-    sits at bit offset 4*(8-c) of h1 (or 4*(16-c) of h2), and bit j of
-    digit d is (h >> (4*(8-c)+j)) & 1 == (d div 2^j) % 2 — identical
-    values, measured at 1.30s -> 0.70s for the signature stage on 270k
-    tokens with zero mismatches."""
-    out = []
-    for w in range(_HAM_WORDS):
-        for k in range(16):
-            c = 4 * w + k // 4 + 1
-            j = k % 4
-            if c <= 8:
-                bit = f"(shiftright(h1, {4 * (8 - c) + j}) & 1)"
-            else:
-                bit = f"(shiftright(h2, {4 * (16 - c) + j}) & 1)"
-            out.append(f"SUM(2 * CAST({bit} AS BIGINT) - 1) AS s{w}_{k}")
-    return out
-
-
-def _q153_words() -> list[str]:
-    return [
-        " + ".join(f"(CASE WHEN s{w}_{k} > 0 THEN {2 ** k} ELSE 0 END)"
-                   for k in range(16))
-        for w in range(_HAM_WORDS)
-    ]
-
-
 _Q153_HAM_SQL = " + ".join(
     f"bit_count(xor(a.w{w}, c.w{w}))" for w in range(_HAM_WORDS))
-_Q153_HAM_SPARK = " + ".join(
-    f"bit_count(aw{w} ^ bw{w})" for w in range(_HAM_WORDS))
+
+
+def hamming_band_pairs(sig: DataFrame,
+                       max_hamming: int = _HAM_MAX) -> DataFrame:
+    """(doc_id, w0..w3 16-bit words) -> distinct (a_id, b_id, hamming)
+    pairs, a_id < b_id, within ``max_hamming`` bits of each other.
+
+    The pigeonhole band self-join: any pair within Hamming 3 agrees
+    exactly on >= 1 of the 4 words, so candidates come from an
+    equi-join on (band, word value) and only candidates pay the
+    bit_count(xor) verification.  ``sig`` is read twice; callers pin
+    it."""
+    bands = (sig.withColumn("band", F.explode(
+                 F.expr(f"sequence(0, {_HAM_WORDS - 1})")))
+             .withColumn("bv", F.expr(
+                 "CASE band WHEN 0 THEN w0 WHEN 1 THEN w1"
+                 " WHEN 2 THEN w2 ELSE w3 END")))
+    a, b = [bands.select(F.col("doc_id").alias(f"{s}_id"), "band", "bv",
+                         *[F.col(f"w{w}").alias(f"{s}w{w}")
+                           for w in range(_HAM_WORDS)]) for s in "ab"]
+    ham = " + ".join(f"bit_count(aw{w} ^ bw{w})" for w in range(_HAM_WORDS))
+    return (a.join(b, ["band", "bv"])
+            .filter(F.col("a_id") < F.col("b_id"))
+            .withColumn("hamming", F.expr(ham))
+            .filter(F.col("hamming") <= max_hamming)
+            .select("a_id", "b_id", "hamming").distinct())
+
 
 _ORACLE_Q153 = f"""
     WITH tok AS (
@@ -1116,13 +1058,14 @@ _ORACLE_Q153 = f"""
         FROM documents
     ),
     sums AS (
-        SELECT doc_id, {', '.join(_q153_word_sums('duckdb'))}
+        SELECT doc_id, {', '.join(_vote_sums_sql(_HAM_WORDS))}
         FROM tok GROUP BY doc_id
     ),
     sig AS (
         SELECT doc_id,
                {', '.join(f'CAST({e} AS BIGINT) AS w{w}'
-                          for w, e in enumerate(_q153_words()))}
+                          for w, e in enumerate(
+                              _simhash_words_expr(_HAM_WORDS)))}
         FROM sums
     ),
     bands AS (
@@ -1146,49 +1089,14 @@ _ORACLE_Q153 = f"""
 
 @query("q153_simhash_hamming_join", _ORACLE_Q153)
 def q153_simhash_hamming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _build_sig() -> DataFrame:
-        d = load_spread(spark, sf_dir, "documents")
-        # per-doc DISTINCT tokens computed row-locally (array_distinct) —
-        # the same token set as the corpus-wide (doc_id, t) DISTINCT but
-        # with zero shuffle, and the vote groupBy can then reuse the
-        # doc_id-spread exchange, so the whole signature phase is local
-        tok = d.select("doc_id", F.explode(
-            F.array_distinct(F.split("text", " "))).alias("t"))
-        dig = tok.select("doc_id", F.md5("t").alias("hh")).select(
-            "doc_id",
-            F.expr("CAST(conv(substring(hh, 1, 8), 16, 10) AS BIGINT)")
-            .alias("h1"),
-            F.expr("CAST(conv(substring(hh, 9, 8), 16, 10) AS BIGINT)")
-            .alias("h2"))
-        sums = dig.groupBy("doc_id").agg(
-            *[F.expr(e) for e in _q153_word_sums_from_words()])
-        return sums.select(
-            "doc_id",
-            *[F.expr(f"CAST({e} AS BIGINT)").alias(f"w{w}")
-              for w, e in enumerate(_q153_words())]
-        ).localCheckpoint(eager=False)
-
     # session memo (r15): the 64-bit signature is the query's expensive
     # phase and is deterministic per corpus — the doc-count-sized sig
     # frame pins once per session instead of per run
-    sig = _doc_frame_memo(spark, sf_dir, "simhash64", _build_sig)
-    bands = (sig.withColumn("band", F.explode(
-                 F.expr(f"sequence(0, {_HAM_WORDS - 1})")))
-             .withColumn("bv", F.expr(
-                 "CASE band WHEN 0 THEN w0 WHEN 1 THEN w1"
-                 " WHEN 2 THEN w2 ELSE w3 END")))
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bv",
-                     *[F.col(f"w{w}").alias(f"aw{w}")
-                       for w in range(_HAM_WORDS)])
-    c = bands.select(F.col("doc_id").alias("b_id"), "band", "bv",
-                     *[F.col(f"w{w}").alias(f"bw{w}")
-                       for w in range(_HAM_WORDS)])
-    cand = (a.join(c, ["band", "bv"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .withColumn("hamming", F.expr(_Q153_HAM_SPARK))
-            .filter(F.col("hamming") <= _HAM_MAX)
-            .select("a_id", "b_id", "hamming").distinct())
-    return cand.groupBy("hamming").agg(
+    sig = _doc_frame_memo(
+        spark, sf_dir, "simhash64",
+        lambda: _simhash_words(load_spread(spark, sf_dir, "documents"),
+                               _HAM_WORDS).localCheckpoint(eager=False))
+    return hamming_band_pairs(sig).groupBy("hamming").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
 
 
@@ -1316,7 +1224,7 @@ def _q167_oracle() -> str:
     ),
     sig AS (
         SELECT doc_id, CAST({_SIMHASH_RECOMBINE} AS BIGINT) AS sh FROM (
-            SELECT doc_id, {', '.join(_bit_sum_exprs('duckdb'))}
+            SELECT doc_id, {', '.join(_vote_sums_sql(1))}
             FROM (SELECT DISTINCT doc_id,
                          unnest(string_split(text, ' ')) AS t
                   FROM documents)

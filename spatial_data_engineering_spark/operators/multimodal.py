@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from ..catalog import load, load_spread
 from ..queries_registry import registrar
 from .common import sql_davg
+from .dedup import (_HAM_MAX, _HAM_WORDS, dfcap_shared_key_pairs,
+                    hamming_band_pairs)
 
 QUERIES, ORACLES, query = registrar()
 
@@ -365,34 +367,6 @@ _FRAME_DF_CAP = 20   # max assets per checksum block (the q76 knob)
 _MIN_SHARED = 2
 
 
-def _dfcap_shared_key_pairs(keyed: DataFrame, key: str, df_cap: int,
-                            min_shared: int, out_col: str) -> DataFrame:
-    """(doc_id, key) -> (a_id, b_id, out_col) pairs sharing >= min_shared
-    distinct keys, through the df-capped inverted index (keys held by
-    > df_cap docs are dropped — the q76 block-size bound).
-
-    The input relation is materialized ONCE via an eager localCheckpoint
-    (r16 optimization): the index needs it three ways (the df counts,
-    the probe side, and both halves of the self-join), and without the
-    checkpoint each consumer re-evaluated the whole upstream pipeline —
-    for the multimodal family that upstream is the mapInPandas DECODE,
-    so one logical decode pass executed 4x per query (guide §8: decide
-    on the small proxy, decode once).  The (doc_id, key) table is
-    frames-sized — orders smaller than payload bytes — so pinning it is
-    bounded; values are unchanged (same relation, one evaluation)."""
-    keyed = keyed.localCheckpoint(eager=True)
-    counts = keyed.groupBy(key).agg(F.count(F.lit(1)).alias("n_docs"))
-    keep = (keyed.join(counts.filter(F.col("n_docs") <= df_cap), key)
-            .select("doc_id", key))
-    a, b = keep.alias("a"), keep.alias("b")
-    return (a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("a_id"),
-                     F.col("b.doc_id").alias("b_id"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias(out_col))
-            .filter(F.col(out_col) >= min_shared))
-
-
 @query(
     "q133_video_neardup",
     f"""
@@ -425,10 +399,19 @@ def q133_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     payloads = d.select("doc_id",
                         F.encode("text", "utf-8").alias("payload"))
+    # The (doc_id, key) relation is pinned ONCE (r16 optimization): the
+    # df-capped index reads it three ways (the df counts, the probe side,
+    # and both halves of the self-join), and without the pin each
+    # consumer re-evaluated the whole upstream pipeline — for the
+    # multimodal family that upstream is the mapInPandas DECODE, so one
+    # logical decode pass executed 4x per query (guide §8: decide on the
+    # small proxy, decode once).  The table is frames-sized — orders
+    # smaller than payload bytes — so pinning it is bounded.
     frames = (sample_frames(payloads)
-              .select("doc_id", "frame_checksum").distinct())
-    return _dfcap_shared_key_pairs(frames, "frame_checksum", _FRAME_DF_CAP,
-                                   _MIN_SHARED, "n_shared_frames")
+              .select("doc_id", "frame_checksum").distinct()
+              .localCheckpoint(eager=True))
+    return dfcap_shared_key_pairs(frames, "frame_checksum", _FRAME_DF_CAP,
+                                  _MIN_SHARED, "n_shared_frames")
 
 
 # --------------------------------------------------------------------------
@@ -446,8 +429,6 @@ def q133_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verification touches candidates only.
 # --------------------------------------------------------------------------
 PHASH_IMG_SCHEMA = "doc_id bigint, phash bigint"
-_PH_WORDS = 4  # 4 x 16-bit bands over the 64-bit hash
-_PH_MAX_DEFAULT = 3  # < _PH_WORDS so the pigeonhole guarantee holds
 
 
 def image_phashes(df: DataFrame) -> DataFrame:
@@ -497,41 +478,22 @@ def image_phashes(df: DataFrame) -> DataFrame:
 
 
 def image_near_dup(df: DataFrame,
-                   max_hamming: int = _PH_MAX_DEFAULT) -> DataFrame:
+                   max_hamming: int = _HAM_MAX) -> DataFrame:
     """(doc_id, payload) -> (a_id, b_id, hamming) confirmed near-dup
     image pairs.  max_hamming must stay < 4 for the 4-band pigeonhole
     guarantee; raise the band count before raising the radius."""
-    if not 0 <= max_hamming < _PH_WORDS:
+    if not 0 <= max_hamming < _HAM_WORDS:
         raise ValueError(
-            f"max_hamming must be in [0, {_PH_WORDS}) for the "
-            f"{_PH_WORDS}-band pigeonhole guarantee")
+            f"max_hamming must be in [0, {_HAM_WORDS}) for the "
+            f"{_HAM_WORDS}-band pigeonhole guarantee")
     # pin the doc-sized signature frame: the band self-join consumes it
     # twice, and its upstream is the Python-side pixel decode — the
     # expensive per-row transform the q47/q87 policy says to run once
     sig = image_phashes(df).select(
         "doc_id",
         *[F.expr(f"(phash >> {16 * w}) & 65535").alias(f"w{w}")
-          for w in range(_PH_WORDS)]).localCheckpoint()
-    bands = (sig.withColumn("band", F.explode(
-                 F.expr(f"sequence(0, {_PH_WORDS - 1})")))
-             .withColumn("bv", F.expr(
-                 "CASE band WHEN 0 THEN w0 WHEN 1 THEN w1"
-                 " WHEN 2 THEN w2 ELSE w3 END")))
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bv",
-                     *[F.col(f"w{w}").alias(f"aw{w}")
-                       for w in range(_PH_WORDS)])
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bv",
-                     *[F.col(f"w{w}").alias(f"bw{w}")
-                       for w in range(_PH_WORDS)])
-    ham = " + ".join(f"bit_count(aw{w} ^ bw{w})"
-                     for w in range(_PH_WORDS))
-    return (a.join(b, ["band", "bv"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .withColumn("hamming", F.expr(ham))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("a_id", "b_id",
-                    F.col("hamming").cast("int").alias("hamming"))
-            .distinct())
+          for w in range(_HAM_WORDS)]).localCheckpoint()
+    return hamming_band_pairs(sig, max_hamming)
 
 
 # --------------------------------------------------------------------------
@@ -701,10 +663,10 @@ def audio_near_dup(df: DataFrame,
     sub-fingerprints, via the df-capped inverted index (boilerplate
     fingerprints occurring in > df_cap assets are dropped — the q76
     block-size bound, which is also what keeps the pair join linear)."""
-    fps = (audio_fingerprints(df)
-           .select("doc_id", "fp").distinct())
-    return _dfcap_shared_key_pairs(fps, "fp", df_cap, min_shared,
-                                   "n_shared_fp")
+    fps = (audio_fingerprints(df)  # pinned like q133's frames
+           .select("doc_id", "fp").distinct().localCheckpoint(eager=True))
+    return dfcap_shared_key_pairs(fps, "fp", df_cap, min_shared,
+                                  "n_shared_fp")
 
 
 _Q227_FP_SQL = (f"list_sum(list_transform(generate_series(1, {_AF_W}), "
@@ -772,6 +734,7 @@ def q227_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id", F.length("text").alias("__n"),
                   F.expr("transform(split(text, ''), c -> ascii(c))")
                   .alias("__codes"))
-          .select("doc_id", F.explode(F.expr(fps)).alias("fp")))
-    return _dfcap_shared_key_pairs(fp, "fp", _AF_DF_CAP, _AF_MIN_SHARED,
-                                   "n_shared_fp")
+          .select("doc_id", F.explode(F.expr(fps)).alias("fp"))
+          .localCheckpoint(eager=True))  # pinned like q133's frames
+    return dfcap_shared_key_pairs(fp, "fp", _AF_DF_CAP, _AF_MIN_SHARED,
+                                  "n_shared_fp")

@@ -389,14 +389,15 @@ def q09_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      partitions), sortWithinPartitions, and an eager localCheckpoint
 #      that pins partition ids between jobs (unlike persist, its storage
 #      is released with the plan; at 100 TB use reliable `checkpoint()`).
-#      One P-row job then yields per-partition row offsets and running-sum
-#      prefixes — O(nparts) values riding the task closure, no broadcast
-#      to leak.
-#   2. `_enumerate`: one mapInPandas pass numbers rows from the partition
-#      offset (TaskContext.partitionId()) and, when asked, carries the
-#      running sum.  NTILE is arithmetic on that row number and the total
-#      (`_ntile_from_rn`); LAG instead collects each partition's last
-#      value (P rows) and injects it into the next partition's first row.
+#   2. `_enumerate`: `_partition_stats`, one P-row job, yields
+#      per-partition row offsets and running-sum prefixes — O(nparts)
+#      values riding the task closure, no broadcast to leak — then one
+#      mapInPandas pass numbers rows from the partition offset
+#      (TaskContext.partitionId()) and, when asked, carries the running
+#      sum.  NTILE is arithmetic on that row number and the total
+#      (`_ntile_from_rn`).  LAG needs no offsets: it takes the range sort
+#      alone, collects each partition's last value (P rows) and injects
+#      it into the next partition's first row.
 #
 # Outputs are bit-identical on both paths because every caller supplies a
 # DETERMINISTIC total order (tiebreaker columns) — asserted by
@@ -442,20 +443,22 @@ def _schema(df: DataFrame, *extra: str) -> str:
                       for f in df.schema.fields] + list(extra))
 
 
-def _range_sorted(df: DataFrame, order_by, sum_col: str | None = None):
-    """Range-partition + sort by the total order; pin partition ids.
-
-    Returns (part, offsets, total, prefixes): offsets[pid] is the number
-    of rows and prefixes[pid] the sum of ``sum_col`` (0 without it) in
-    the partitions before pid (ascending pid == ascending sort order).
-    Both come from one P-row job.  At >1M rows every core has >=30k rows
-    to enumerate, so the exchange always uses full parallelism.
-    """
+def _range_sorted(df: DataFrame, order_by) -> DataFrame:
+    """Range-partition + sort by the total order; pin partition ids
+    (ascending pid == ascending sort order).  At >1M rows every core has
+    >=30k rows to enumerate, so the exchange always uses full
+    parallelism."""
     exprs = _sort_exprs(order_by)
     nparts = df.sparkSession.sparkContext.defaultParallelism
-    part = (df.repartitionByRange(nparts, *exprs)
+    return (df.repartitionByRange(nparts, *exprs)
             .sortWithinPartitions(*exprs)
             .localCheckpoint(eager=True))
+
+
+def _partition_stats(part: DataFrame, sum_col: str | None):
+    """(offsets, total, prefixes) of a ``_range_sorted`` frame from one
+    P-row job: offsets[pid] is the number of rows and prefixes[pid] the
+    sum of ``sum_col`` (0 without it) in the partitions before pid."""
     stats = (part.select(F.spark_partition_id().alias("pid"),
                          (F.col(sum_col) if sum_col else F.lit(0)).alias("v"))
              .groupBy("pid")
@@ -465,7 +468,7 @@ def _range_sorted(df: DataFrame, order_by, sum_col: str | None = None):
     for r in sorted(stats, key=lambda r: r["pid"]):
         offsets[r["pid"]], prefixes[r["pid"]] = total, acc
         total, acc = total + r["n"], acc + r["s"]
-    return part, offsets, total, prefixes
+    return offsets, total, prefixes
 
 
 def _enumerate(df: DataFrame, order_by, rn_col: str,
@@ -476,7 +479,8 @@ def _enumerate(df: DataFrame, order_by, rn_col: str,
     import pandas as pd
     from pyspark import TaskContext
 
-    part, offsets, total, prefixes = _range_sorted(df, order_by, sum_col)
+    part = _range_sorted(df, order_by)
+    offsets, total, prefixes = _partition_stats(part, sum_col)
     extra = [f"`{rn_col}` bigint"]
     if sum_col is not None:
         sum_type = df.select(F.sum(sum_col)).schema[0].dataType
@@ -552,7 +556,7 @@ def global_lag(df: DataFrame, value_col: str, order_by,
     import pandas as pd
     from pyspark import TaskContext
 
-    part = _range_sorted(df, order_by)[0]
+    part = _range_sorted(df, order_by)
     vtype = df.schema[value_col].dataType.simpleString()
 
     # pass 1: each partition's LAST value (sorted order), P tiny rows

@@ -139,6 +139,7 @@ def grid_spatial_join(
 # than shuffling the raw WKB.  Combine only when it at least halves the
 # batch's row count.
 _COMBINE_MAX_GROUP_RATIO = 0.5
+_TREE_FANIN = 64  # upstream partitions above which union_agg adds a salted round
 
 
 def _dissolve_group_rows(pdf, keep: list[str], in_col: str, out_col: str):
@@ -170,7 +171,7 @@ def _combine_batch(pdf, keep: list[str], geom_col: str, out_col: str):
 
 
 def union_agg(df: DataFrame, group_cols: list[str], geom_col: str = "geom",
-              out_col: str = "geom", tree_fanin: int | None = 64) -> DataFrame:
+              out_col: str = "geom") -> DataFrame:
     """GROUP BY group_cols with geometric union of geom_col (E1).
 
     Two-phase tree aggregation (legal because geometry.union is
@@ -187,15 +188,14 @@ def union_agg(df: DataFrame, group_cols: list[str], geom_col: str = "geom",
     bounded by the upstream partition count P, and the phase-2 task for
     that group dissolves all P partials serially — fine at local scale,
     a single-executor bottleneck for a continental dissolve at 100 TB.
-    When P exceeds ``tree_fanin``, an intermediate dissolve keyed by
+    When P exceeds ``_TREE_FANIN``, an intermediate dissolve keyed by
     (group, salt) with ceil(sqrt(P)) salt buckets runs first, capping
     per-task partial counts at ~sqrt(P) in both rounds (P=10^6 partials
     -> ~1000 unions per task).  The salt is a pure function of the
     partial's bytes (crc32 mod buckets), so the plan stays deterministic;
     associativity + canonical output make the extra round semantically
     free.  At local[32] partition counts sit under the default fan-in and
-    the round never fires — no bench-scale cost.  Pass tree_fanin=None
-    to force the flat two-phase plan.
+    the round never fires — no bench-scale cost.
     """
     keep = [f.name for f in df.schema.fields if f.name in group_cols]
     schema_fields = ", ".join(
@@ -217,7 +217,7 @@ def union_agg(df: DataFrame, group_cols: list[str], geom_col: str = "geom",
         return _dissolve_group_rows(pdf, keep, out_col, out_col)
 
     nparts = df.rdd.getNumPartitions()
-    if tree_fanin is not None and nparts > tree_fanin:
+    if nparts > _TREE_FANIN:
         import math
 
         buckets = int(math.ceil(math.sqrt(nparts)))

@@ -1800,7 +1800,7 @@ def q127_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _q128_oracle() -> str:
     from .dedup import (ORACLES as dedup_oracles, _SIMHASH_RECOMBINE,
-                        _bit_sum_exprs)
+                        _vote_sums_sql)
 
     return f"""
     WITH mh AS (
@@ -1813,7 +1813,7 @@ def _q128_oracle() -> str:
         FROM documents
     ),
     sums128 AS (
-        SELECT doc_id, {', '.join(_bit_sum_exprs('duckdb'))}
+        SELECT doc_id, {', '.join(_vote_sums_sql(1))}
         FROM tok128 GROUP BY doc_id
     ),
     sig128 AS (

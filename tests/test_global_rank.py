@@ -123,6 +123,33 @@ def test_single_row(spark, big_path):
     assert got[0]["t"] == 1
 
 
+def _jobs(spark, group, action):
+    """Number of Spark jobs ``action()`` runs, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lag_big_path_runs_no_partition_stats_job(spark, big_path):
+    # lag reads no row offsets or prefixes: beyond the range sort and pin
+    # it runs only its last-value job and the final action — the P-row
+    # stats job the enumerator needs is not one of its jobs.  n_rows
+    # skips the strategy probe's jobs.
+    df, n = _frame(spark), 5000
+    order = [F.col("k").asc(), F.col("i").desc()]
+    nparts = spark.sparkContext.defaultParallelism
+    n_sort = _jobs(spark, "lag-jobs-sort",
+                   lambda: df.repartitionByRange(nparts, *order)
+                   .sortWithinPartitions(*order).localCheckpoint(eager=True))
+    n_lag = _jobs(spark, "lag-jobs-lag",
+                  lambda: R.global_lag(df, "x", ORDER, n_rows=n).collect())
+    assert n_lag == n_sort + 2
+
+
 # The eight rerouted queries, big path forced, against their oracles —
 # proves the reroute is invisible to the correctness gate even when the
 # two-pass scheme engages (at driver scale it engages for real).

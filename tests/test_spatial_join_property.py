@@ -212,14 +212,15 @@ def test_union_agg_combine_guard_passthrough():
     assert all(bytes(b) != bytes(cw) for b in out2["geom"])  # canonicalized
 
 
-def test_union_agg_tree_reduce_bounds_fanin(spark):
+def test_union_agg_tree_reduce_bounds_fanin(spark, monkeypatch):
     """Depth bounding (SURVEY §7 hard-item #1): when one group's rows
-    arrive from more partitions than tree_fanin, a salted intermediate
+    arrive from more partitions than _TREE_FANIN, a salted intermediate
     dissolve must run so no single task unions all P partials; the
     result stays area-identical to the flat plan."""
     from pyspark.sql import functions as F
 
     from spatial_data_engineering_spark.functions.st_funcs import st_makebox
+    from spatial_data_engineering_spark.operators import spatial_join
     from spatial_data_engineering_spark.operators.spatial_join import union_agg
 
     # ONE group, 300 disjoint unit boxes, spread over 100 partitions ->
@@ -232,8 +233,10 @@ def test_union_agg_tree_reduce_bounds_fanin(spark):
                     .alias("geom"))
             .repartition(100))
 
-    treed = union_agg(base, ["grp"], geom_col="geom", tree_fanin=8)
-    flat = union_agg(base, ["grp"], geom_col="geom", tree_fanin=None)
+    monkeypatch.setattr(spatial_join, "_TREE_FANIN", 8)
+    treed = union_agg(base, ["grp"], geom_col="geom")
+    monkeypatch.setattr(spatial_join, "_TREE_FANIN", 1_000_000)
+    flat = union_agg(base, ["grp"], geom_col="geom")
 
     # plan shape: the salted round adds a second grouped-map stage
     def n_grouped_map(df):

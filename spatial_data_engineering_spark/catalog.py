@@ -143,13 +143,3 @@ def require_unique_doc_ids(spark: SparkSession, sf_dir: str) -> None:
         raise DuplicateKeyError(
             f"documents.doc_id {dup[0].doc_id} is not unique in {sf_dir}")
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register each table as a temp view so SQL-form operators can run.
-
-    Mirrors the reference's CREATE OR REPLACE VIEW usage
-    (query/view_linked_data.sql:1-2) — views are virtual, inlined by
-    Catalyst exactly as Postgres inlines them (SURVEY.md §4).
-    """
-    for name in tables:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

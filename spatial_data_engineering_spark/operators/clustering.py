@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..memo import memo
 from ..queries_registry import registrar
-from .common import np_fround6, sql_fround6
+from .common import np_nearest, sql_fround6
 
 QUERIES, ORACLES, query = registrar()
 
@@ -34,13 +34,15 @@ QUERIES, ORACLES, query = registrar()
 # --------------------------------------------------------------------------
 # Distributed Lloyd k-means over the embedding column.
 #
-# Assignment: broadcast centroid matrix, one BLAS matmul per Arrow batch
-# (mapInPandas) — no shuffle.  Update: per-(cluster, dim) partial sums via
-# posexplode + groupBy — one small shuffle of k*dim partial aggregates per
-# iteration.  Deterministic AND engine-replayable: init = first k corpus
-# vectors, argmin over fround6-rounded d2 with ties to the lowest
-# cluster id, decimal-exact means (see the module docstring / q55's
-# oracle).
+# Assignment: broadcast centroid matrix, one common.np_nearest call per
+# Arrow batch (mapInPandas) — no shuffle.  Update: per-(cluster, dim)
+# partial sums via posexplode + groupBy — one small shuffle of k*dim
+# partial aggregates per iteration.  Deterministic AND engine-replayable:
+# init = first k corpus vectors, argmin over fround6-rounded fold d2 with
+# ties to the lowest cluster id, decimal-exact means (see the module
+# docstring / q55's oracle).  similarity.pq_train_codebooks is the other
+# Lloyd loop: it runs on a bounded driver-side sample rather than over
+# the distributed corpus, so the two share only the assignment kernel.
 # --------------------------------------------------------------------------
 def kmeans_fit_cached(spark: SparkSession, sf_dir: str, k: int = 8,
                       max_iter: int = 5):
@@ -55,9 +57,9 @@ def kmeans_fit_cached(spark: SparkSession, sf_dir: str, k: int = 8,
 
 
 def kmeans_fit(spark: SparkSession, vectors: DataFrame, k: int = 8,
-               max_iter: int = 5, id_col: str = "vec_id",
-               vec_col: str = "embedding"):
-    """Returns (assignments DataFrame [id, cluster], centroids ndarray,
+               max_iter: int = 5):
+    """Lloyd k-means over ``vectors``' (vec_id, embedding) columns.
+    Returns (assignments DataFrame [id, cluster], centroids ndarray,
     inertia history list)."""
     from pyspark import StorageLevel
 
@@ -68,10 +70,10 @@ def kmeans_fit(spark: SparkSession, vectors: DataFrame, k: int = 8,
     # DERIVED frame is persisted — never the caller's, whose own cache
     # policy must not be clobbered — and unpersisted on every exit,
     # after the final assignment is checkpointed off it.
-    v = vectors.select(id_col, vec_col).persist(
+    v = vectors.select("vec_id", "embedding").persist(
         StorageLevel.MEMORY_AND_DISK)
     try:
-        return _kmeans_loop(spark, v, k, max_iter, id_col, vec_col)
+        return _kmeans_loop(spark, v, k, max_iter)
     finally:
         # unpersist on EVERY exit — a Lloyd-iteration failure (job
         # abort, empty-cluster edge) must not leak the MEMORY_AND_DISK
@@ -79,49 +81,29 @@ def kmeans_fit(spark: SparkSession, vectors: DataFrame, k: int = 8,
         v.unpersist()
 
 
-def _kmeans_loop(spark, v, k, max_iter, id_col, vec_col):
+def _kmeans_loop(spark, v, k, max_iter):
     import pandas as pd
 
-    first = (v.orderBy(id_col).limit(k)
-             .select(vec_col).toPandas()[vec_col])
+    first = (v.orderBy("vec_id").limit(k)
+             .select("embedding").toPandas()["embedding"])
     centroids = np.stack(first.to_numpy()).astype(np.float64)
     inertia_hist: list[float] = []
 
     def make_assign(bc, with_dist: bool):
-        # one shared closure: the d2 formula and argmin tie-break must
-        # never diverge between the training and final assignment passes
+        # one shared closure for the training and final assignment
+        # passes; np_nearest is the oracle's own fold + fround6-argmin,
+        # so dist2 (and the inertia) are fold values too
         def assign(batches):
             cent = bc.value
             for pdf in batches:
                 if len(pdf) == 0:  # zero-row Arrow batch guard
                     continue
-                m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                # squared euclidean via ||x||^2 - 2xC^T + ||c||^2
-                d2 = ((m * m).sum(axis=1)[:, None] - 2.0 * (m @ cent.T)
-                      + (cent * cent).sum(axis=1)[None, :])
-                # fround6 BEFORE the argmin (first-min = lowest cluster
-                # id on ties) — the engine-neutral argmax/argmin
-                # contract shared with q55's SQL replay oracle, which
-                # computes d2 as an ordered (x-c)^2 fold.  The expansion
-                # formula above differs from the fold by reassociation
-                # and cancellation noise (~1e-10 worst case near x=c,
-                # where both round to 0.0).  RESIDUAL RISK, not absolute
-                # absorption (ADVICE r13): the device makes a cross-
-                # engine argmin split UNLIKELY (it needs a d2 pair
-                # within ~1e-10 of a 1e-6 floor boundary, ~1e-4
-                # straddle odds per comparison), not impossible — and in
-                # a 5-iteration replay one early split cascades into a
-                # whole-row hash mismatch.  A red driver row on
-                # q55/q219 is therefore triaged as boundary-straddle
-                # FIRST (re-run the q219 contract audit + the
-                # crosscheck24 Decimal replay) before being treated as
-                # a code bug.  dist2 stays RAW — inertia is a sum, not
-                # a ranking.
-                cl = np.argmin(np_fround6(d2), axis=1)
-                out = {"id": pdf[id_col], "cluster": cl.astype("int32")}
+                m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+                cl, d2 = np_nearest(m, cent)
+                out = {"id": pdf["vec_id"], "cluster": cl.astype("int32")}
                 if with_dist:
                     out["dist2"] = d2[np.arange(len(cl)), cl]
-                    out[vec_col] = pdf[vec_col]
+                    out["embedding"] = pdf["embedding"]
                 yield pd.DataFrame(out)
         return assign
 
@@ -129,7 +111,8 @@ def _kmeans_loop(spark, v, k, max_iter, id_col, vec_col):
         bc = spark.sparkContext.broadcast(centroids)
         assigned = v.mapInPandas(
             make_assign(bc, with_dist=True),
-            schema=f"id bigint, cluster int, dist2 double, {vec_col} array<float>",
+            schema="id bigint, cluster int, dist2 double, "
+                   "embedding array<float>",
         )
         # ONE action per iteration: the per-(cluster, dim) centroid
         # partials and the inertia ride the same groupBy — dist2 is
@@ -140,7 +123,7 @@ def _kmeans_loop(spark, v, k, max_iter, id_col, vec_col):
         # values bit-for-bit, half the job count.)
         upd = (
             assigned.select("cluster", "dist2",
-                            F.posexplode(vec_col).alias("pos", "x"))
+                            F.posexplode("embedding").alias("pos", "x"))
             .groupBy("cluster", "pos")
             .agg((F.sum(F.col("x").cast("double").cast("decimal(30,10)"))
                   .cast("double") / F.count(F.lit(1))).alias("m"),
@@ -251,8 +234,8 @@ def _q55_oracle(k: int = 8, iters: int = 5) -> str:
     previous centroid (COALESCE against the prior per-dim rows); after
     ``iters`` updates, one final assignment feeds the cluster-size
     output.  Kosher because every Spark-side step is order-independent
-    (see kmeans_fit) — the only cross-engine float channel is BLAS-vs-
-    fold d2 noise, absorbed by the shared fround6-before-argmin device.
+    (see kmeans_fit), and both sides compute d2 by the same ordered
+    fold (common.np_nearest / _km_d2_sql), so the replay is exact.
     Cost is LINEAR in corpus size (n*k folds per assignment — 8.2 s at
     sf1's 20k vectors), unlike the quadratic all-pairs oracles.
     """
@@ -294,14 +277,14 @@ def q55_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # k x dim centroid broadcast computing assignment + a + b + s per row —
 # no join, no shuffle beyond the k-row final aggregate.
 #
-# Engine contract: the kernel computes d2 as an explicit SEQUENTIAL
+# Engine contract: the kernel is common.np_nearest — d2 as the ordered
 # fold over dims (the oracle's _km_d2_sql order), assignment =
 # fround6-argmin (ties -> lowest cid; identical formula on both sides,
 # and the oracle replays the identical Lloyd chain as q55 via
-# _lloyd_parts, so centroids match bit-for-bit modulo the documented
-# boundary-straddle residual).  sqrt is correctly rounded IEEE on both
-# engines; (b-a)/max(a,b) is plain IEEE on identical bits; the mean
-# goes through the round-9 + decimal-sum device and fround6.
+# _lloyd_parts, so centroids match bit-for-bit).  sqrt is correctly
+# rounded IEEE on both engines; (b-a)/max(a,b) is plain IEEE on
+# identical bits; the mean goes through the round-9 + decimal-sum
+# device and fround6.
 # --------------------------------------------------------------------------
 def _q223_oracle(k: int = 8, iters: int = 5) -> str:
     parts = _lloyd_parts(k, iters)
@@ -330,34 +313,22 @@ FROM sil GROUP BY cluster""")
 
 
 @query("q223_cluster_silhouette", _q223_oracle())
-def q223_cluster_silhouette(spark: SparkSession, sf_dir: str,
-                            k: int = 8, max_iter: int = 5) -> DataFrame:
+def q223_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from .common import fround6
 
     e = load(spark, sf_dir, "embeddings")
-    _, centroids, _ = kmeans_fit_cached(spark, sf_dir, k=k,
-                                        max_iter=max_iter)
+    _, centroids, _ = kmeans_fit_cached(spark, sf_dir, k=8, max_iter=5)
     bc = spark.sparkContext.broadcast(centroids)
 
     def sil_kernel(batches):
         cent = bc.value
-        kk, dim = cent.shape
         for pdf in batches:
             if len(pdf) == 0:  # zero-row Arrow batch guard
                 continue
             m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            # explicit sequential fold over dims — the oracle's
-            # _km_d2_sql order, NOT np.sum/BLAS (whose reassociation
-            # would change the RAW dist bits this query outputs)
-            d2 = np.empty((len(m), kk))
-            for c in range(kk):
-                acc = (m[:, 0] - cent[c, 0]) ** 2
-                for p in range(1, dim):
-                    acc = acc + (m[:, p] - cent[c, p]) ** 2
-                d2[:, c] = acc
-            cl = np.argmin(np_fround6(d2), axis=1)
+            cl, d2 = np_nearest(m, cent)
             dist = np.sqrt(d2)
             rows = np.arange(len(m))
             a = dist[rows, cl]
@@ -1018,6 +989,7 @@ def q171_dup_degree_distribution(spark: SparkSession,
 def q219_kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load
     from .common import dsum
+    from .similarity import _d2_spark
 
     e = load(spark, sf_dir, "embeddings")
     assignments, centroids, hist = kmeans_fit_cached(spark, sf_dir,
@@ -1037,15 +1009,11 @@ def q219_kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = e.sparkSession.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cluster int, cvec array<double>")
-    d2 = ("aggregate(zip_with(embedding, cvec, (x, y) ->"
-          " (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-          " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-          " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
     (final_inertia,) = (
         assignments
         .join(e.select(F.col("vec_id").alias("id"), "embedding"), "id")
         .join(F.broadcast(cdf), "cluster")
-        .select(F.expr(d2).alias("d2"))
+        .select(F.expr(_d2_spark("embedding", "cvec")).alias("d2"))
         .agg(dsum("d2", "inertia")).first())
     final_ok = int(final_inertia <= hist[-1] * (1 + 1e-9))
     return spark.createDataFrame(

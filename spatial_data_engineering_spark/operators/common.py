@@ -1,4 +1,4 @@
-"""Shared helpers for oracle-parity-safe aggregation.
+"""Shared helpers for oracle-parity-safe aggregation and assignment.
 
 The driver compares Spark output against a DuckDB oracle with an
 order-insensitive value hash (BASELINE.md "t2").  Floating-point SUM/AVG is
@@ -127,6 +127,23 @@ def np_fround6(x):
 
     return np.floor(np.asarray(x, dtype=np.float64) * 1000000.0
                     + 0.5) / 1000000.0
+
+
+def np_nearest(x, c):
+    """Nearest-centroid assignment: ``(cluster, d2)`` for rows ``x`` (n,
+    dim) against centroids ``c`` (k, dim), both float64.
+
+    d2 is the ordered left fold ``(x0-c0)^2 + (x1-c1)^2 + ...`` in index
+    order — the exact IEEE sequence of the DuckDB twins ``_km_d2_sql``
+    and ``_pq_d2_sql`` (no BLAS expansion, no numpy pairwise sum), so d2
+    is bit-identical across engines.  The assignment is the argmin of
+    np_fround6(d2); argmin returns the first minimum, so ties go to the
+    lowest centroid id, as the twins' ``ORDER BY fround6(d2), cid``.
+    """
+    acc = (x[:, None, 0] - c[None, :, 0]) ** 2
+    for p in range(1, x.shape[1]):
+        acc = acc + (x[:, None, p] - c[None, :, p]) ** 2
+    return np_fround6(acc).argmin(axis=1), acc
 
 
 def sql_spark_pct(rel: str, val: str, probs, part=None,

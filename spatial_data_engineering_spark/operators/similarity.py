@@ -27,9 +27,8 @@ from pyspark.sql.window import Window as W
 from ..catalog import load, load_spread
 from ..memo import memo
 from ..queries_registry import registrar
-from .common import (davg, dvar_samp, fround6, np_fround6, sql_davg,
-                     sql_dvar_expr, sql_fround6,
-                     sql_spark_pct)
+from .common import (davg, dvar_samp, fround6, np_fround6, np_nearest,
+                     sql_davg, sql_dvar_expr, sql_fround6, sql_spark_pct)
 
 QUERIES, ORACLES, query = registrar()
 
@@ -78,6 +77,16 @@ def _dot_spark(a: str, b: str, dim64: bool = False) -> str:
             f" THEN {unroll} ELSE {fold} END)")
 
 
+def _d2_spark(a: str, b: str) -> str:
+    """Squared euclidean distance as the same strict left fold (the
+    DuckDB side's ordered ``(x-c)^2`` list_reduce, and
+    common.np_nearest's numpy sequence)."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) ->"
+            f" (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+            f" * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
+            f" CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+
+
 def _dot_sql(a: str, b: str) -> str:
     return (f"list_reduce(list_transform(generate_series(1, len({a})),"
             f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"
@@ -90,6 +99,16 @@ def _norm_spark(a: str, dim64: bool = False) -> str:
 
 def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
+
+
+def _query_top3(scored: DataFrame, score) -> DataFrame:
+    """The 3 best rows per ``query_id``, numbered ``rk`` 1..3 by the sort
+    column ``score`` (e.g. ``F.desc("cosine")``) then neighbor_id ASC —
+    the (score, neighbor_id) tie rule every top-k oracle's ROW_NUMBER
+    mirrors."""
+    w = W.partitionBy("query_id").orderBy(score, F.asc("neighbor_id"))
+    return (scored.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= 3))
 
 
 # --------------------------------------------------------------------------
@@ -142,12 +161,9 @@ def q49_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              / (F.col("q_nrm") * F.col("nrm"))).alias("cosine"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "neighbor_id", "rk", F.round("cosine", 6).alias("cosine"))
-    )
+    return (_query_top3(scored, F.desc("cosine"))
+            .select("query_id", "neighbor_id", "rk",
+                    F.round("cosine", 6).alias("cosine")))
 
 
 # --------------------------------------------------------------------------
@@ -360,49 +376,20 @@ def q53_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q52 — IVF-style ANN (coarse quantizer -> probe nprobe cells -> exact
-# re-rank).  The registered query uses training-free deterministic
-# centroids (the n_centroids lowest-vec_id non-zero vectors,
-# unit-normalized) so the driver's rows-only check is reproducible
-# without an iterative job; `ivf_centroids_kmeans` is the offline
-# trained-centroid source for production (pass its output as
-# ``centroids=``) — on clustered corpora first-k centroids collapse into
-# one true cluster and recall degrades, which is exactly the case
-# tests/test_ann.py::test_ivf_trained_centroids_beat_first_k pins.
-#
-# No SQL oracle: cluster assignment argmax over BLAS cosines is not
-# reproducible bit-for-bit in SQL, and an approximate operator's contract
-# is *measured recall*, not value equality — tests/test_ann.py asserts
-# recall vs the exact q49 baseline and that only ~nprobe/n_centroids of
-# the corpus is examined.
+# re-rank).  The centroids are training-free and deterministic: the
+# _IVF_N_CENTROIDS lowest-vec_id non-zero vectors, unit-normalized.  Its
+# metric is cosine, so assignment and probing are a BLAS cosine matmul
+# with a fround6 argmax (below) — not common.np_nearest, which is the
+# squared-distance kernel of k-means and PQ.  tests/test_ann.py pins
+# recall against the exact q49 baseline and that only ~nprobe/
+# n_centroids of the corpus is examined.
 # --------------------------------------------------------------------------
 _IVF_N_CENTROIDS = 16
 _IVF_NPROBE = 4
 
 
-def ivf_centroids_kmeans(spark: SparkSession, vectors: DataFrame,
-                         k: int = _IVF_N_CENTROIDS, max_iter: int = 5):
-    """Offline IVF centroid training: Lloyd k-means (clustering.kmeans_fit)
-    over the corpus, rows-normalized for the cosine coarse quantizer.
-
-    Returns a (k, dim) float64 ndarray — the same bounded driver-side
-    footprint as the training-free path (k rows, never the corpus).  At
-    100 TB this runs as its own occasional job and the centroid matrix is
-    persisted/broadcast; zero-norm rows are excluded up front the same way
-    the training-free path excludes them.
-    """
-    import numpy as np
-
-    from .clustering import kmeans_fit
-
-    nz = vectors.filter(F.expr(_norm_spark("embedding")) > 0)
-    _, cent, _ = kmeans_fit(spark, nz, k=k, max_iter=max_iter)
-    nrm = np.linalg.norm(cent, axis=1)
-    nrm[nrm == 0] = 1.0  # an empty cluster's centroid stays harmless
-    return cent / nrm[:, None]
-
-
-# Round-12 oracle upgrade (shrinks the no-oracle set): the default q52
-# path is FULLY deterministic — centroids are the first
+# Round-12 oracle upgrade (shrinks the no-oracle set): the q52 path is
+# FULLY deterministic — centroids are the first
 # _IVF_N_CENTROIDS nonzero vectors by vec_id, assignment is an exact
 # argmax, probing is top-_IVF_NPROBE by cosine — so the whole IVF
 # algorithm replays in SQL and the driver's hash check applies.  Tie
@@ -464,31 +451,27 @@ _ORACLE_Q52 = f"""
 
 
 @query("q52_ivf_ann", _ORACLE_Q52)
-def q52_ivf_ann(spark: SparkSession, sf_dir: str, n_query: int = 10,
-                k: int = 3, centroids=None) -> DataFrame:
+def q52_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
     e = load(spark, sf_dir, "embeddings")
-    # The ONLY driver-side materialization is bounded: n_centroids + n_query
-    # rows (k x dim floats), never the corpus — the corpus is touched
-    # exclusively by executor-side mapInPandas/applyInPandas below.
-    if centroids is not None:
-        cent = np.asarray(centroids, dtype=np.float64)
-    else:
-        cent_rows = (
-            e.select("vec_id", "embedding")
-            .filter(F.expr(_norm_spark("embedding")) > 0)
-            .orderBy("vec_id").limit(_IVF_N_CENTROIDS).collect())
-        cmat = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                         for r in cent_rows])
-        cent = cmat / np.linalg.norm(cmat, axis=1)[:, None]
+    # The ONLY driver-side materialization is bounded: n_centroids + 10
+    # query rows, never the corpus — the corpus is touched exclusively
+    # by executor-side mapInPandas/applyInPandas below.
+    cent_rows = (
+        e.select("vec_id", "embedding")
+        .filter(F.expr(_norm_spark("embedding")) > 0)
+        .orderBy("vec_id").limit(_IVF_N_CENTROIDS).collect())
+    cmat = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                     for r in cent_rows])
+    cent = cmat / np.linalg.norm(cmat, axis=1)[:, None]
 
     # queries and candidates both exclude zero-norm vectors — the same
     # domain the oracle's nz CTE uses (r12 review: the asymmetry would
     # surface as NaN cosines sorting FIRST on a regenerated corpus)
     q_rows = (e.select("vec_id", "embedding")
-              .filter(F.col("vec_id") < n_query)
+              .filter(F.col("vec_id") < 10)
               .filter(F.expr(_norm_spark("embedding")) > 0)
               .orderBy("vec_id").collect())
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
@@ -563,9 +546,7 @@ def q52_ivf_ann(spark: SparkSession, sf_dir: str, n_query: int = 10,
 
     scored = assigned.groupBy("cluster").applyInPandas(
         rerank, schema="query_id bigint, neighbor_id bigint, cosine double")
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
+    return (_query_top3(scored, F.desc("cosine"))
             .select("query_id", "neighbor_id", "rk", "cosine"))
 
 
@@ -1049,24 +1030,28 @@ SELECT CAST(rank AS INTEGER) AS rank, CAST(vec_id AS BIGINT) AS vec_id,
 FROM sel{k}""")
 
 
-def _mmr_scored(e: DataFrame, query_vec_id: int) -> DataFrame:
-    """(vec_id, embedding, rel): fold-cosine relevance of every nonzero
-    vector to the query — ONE definition shared by q110 and its q220
-    audit, so the audit can never certify against a different candidate
-    pool than the operator used (r12 review)."""
+def _mmr_pool(e: DataFrame, query_vec_id: int, n_cand: int) -> DataFrame:
+    """(vec_id, embedding, rel, rk): the global (rel DESC, vec_id) top
+    n_cand of every nonzero vector by fold-cosine relevance to the query
+    — ONE definition shared by q110 and its q220 audit, so the audit can
+    never certify against a different candidate pool than the operator
+    used (r12 review)."""
     withn = e.select(
         "vec_id", "embedding", F.expr(_norm_spark("embedding")).alias("nrm")
     ).filter(F.col("nrm") > 0)
     q = (withn.filter(F.col("vec_id") == query_vec_id)
          .select(F.col("embedding").alias("q_emb"),
                  F.col("nrm").alias("q_nrm")))
-    return (
+    scored = (
         withn.join(F.broadcast(q))
         .filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "embedding",
                 (F.expr(_dot_spark("q_emb", "embedding"))
                  / (F.col("q_nrm") * F.col("nrm"))).alias("rel"))
     )
+    w = W.orderBy(F.desc("rel"), F.asc("vec_id"))
+    return (scored.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= n_cand))
 
 
 def mmr_cand_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,11 +1065,7 @@ def mmr_cand_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _doc_frame_memo
 
     def build():
-        e = load(spark, sf_dir, "embeddings")
-        scored = _mmr_scored(e, 0)
-        w = W.orderBy(F.desc("rel"), F.asc("vec_id"))
-        cand = (scored.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= _MMR_CAND)
+        cand = (_mmr_pool(load(spark, sf_dir, "embeddings"), 0, _MMR_CAND)
                 .withColumn("nrm", F.expr(_norm_spark("embedding"))))
         return (cand.localCheckpoint(eager=False),)
 
@@ -1101,12 +1082,9 @@ def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
 
     if (query_vec_id, n_cand) == (0, _MMR_CAND):
         cand = mmr_cand_cached(spark, sf_dir)
-    else:  # non-default pool (tests): build uncached, as before
-        e = load(spark, sf_dir, "embeddings")
-        scored = _mmr_scored(e, query_vec_id)
-        w = W.orderBy(F.desc("rel"), F.asc("vec_id"))
-        cand = (scored.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= n_cand))
+    else:  # non-default pool (tests): build uncached
+        cand = _mmr_pool(load(spark, sf_dir, "embeddings"), query_vec_id,
+                         n_cand)
     # BOUNDED collect: n_cand rows of (id, vec, rel) — the re-rank set.
     rows = cand.orderBy("rk").collect()
     if not rows:
@@ -1169,8 +1147,8 @@ def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
 # Codebooks train on a BOUNDED deterministic sample (first 256 vec_ids)
 # with per-subspace Lloyd iterations on the driver — k* x 8 floats per
 # subspace, the same footprint class as the IVF centroid pull.  Encoding
-# is one argmin over 16 centroids per subspace per Arrow batch
-# (mapInPandas, BLAS) — no shuffle; the search scans codes, M gathers per
+# is one common.np_nearest over the k* centroids per subspace per Arrow
+# batch (mapInPandas) — no shuffle; the search scans codes, M gathers per
 # row, then rank.  At 100 TB: codebooks persist offline, codes live
 # columnar (8 bytes/vector — the whole point), scan stays map-side.
 #
@@ -1189,10 +1167,10 @@ def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
 #     CAST(SUM(CAST(v AS DECIMAL(30,10))) AS DOUBLE)/COUNT(*) and q55's
 #     proven Spark<->DuckDB decimal-cast equivalence;
 #   * d2: the same ordered (x-c)^2 fold in index order on both sides
-#     (numpy sums <8 elements sequentially; DuckDB list_reduce is a left
-#     fold), fround6 BEFORE every argmin, ties to the lowest cid — the
-#     shared q52/q55 contract (residual boundary-straddle risk
-#     documented at clustering.py's assignment kernel applies here too);
+#     (common.np_nearest, the one numpy kernel k-means shares; DuckDB's
+#     list_reduce is a left fold), fround6 BEFORE every argmin, ties to
+#     the lowest cid — the shared q55 contract, so training, ADC tables
+#     and encoding are bit-identical to the replay;
 #   * ADC distances: M table gathers accumulated in subspace order on
 #     both sides (list_reduce over list(d ORDER BY s)) — bit-identical
 #     raw doubles, so the final rank needs no rounding device.
@@ -1254,10 +1232,8 @@ def pq_train_codebooks(spark: SparkSession, sf_dir: str,
         xs = x[:, s * sub:(s + 1) * sub]
         cent = xs[:kstar].copy()  # deterministic init: first k* rows
         for _ in range(iters):
-            d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            # fround6 before the argmin (first-min = lowest cid on
-            # ties) — the contract the SQL replay's ROW_NUMBER mirrors
-            assign = np_fround6(d2).argmin(axis=1)
+            # the contract the SQL replay's ROW_NUMBER mirrors
+            assign = np_nearest(xs, cent)[0]
             for c in range(kstar):
                 mask = assign == c
                 if mask.any():
@@ -1270,7 +1246,7 @@ def pq_train_codebooks(spark: SparkSession, sf_dir: str,
 
 def _pq_d2_sql(a: str, b: str) -> str:
     """Ordered (x-c)^2 fold over two DOUBLE sub-lists — the DuckDB twin
-    of the numpy sequential sum over the sub_dim axis."""
+    of common.np_nearest's fold over the sub_dim axis."""
     return (f"list_reduce(list_transform(generate_series(1, len({a})),"
             f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])),"
             f" (x, y) -> x + y)")
@@ -1278,8 +1254,8 @@ def _pq_d2_sql(a: str, b: str) -> str:
 
 def _pq_assign_sql(name: str, src: str, cent: str) -> str:
     """Assignment CTE: per (s, vec_id), the fround6-argmin centroid —
-    ROW_NUMBER over (fround6(d2) ASC, cid ASC), bit-for-bit the numpy
-    np_fround6(d2).argmin(axis=1) contract."""
+    ROW_NUMBER over (fround6(d2) ASC, cid ASC), bit-for-bit
+    common.np_nearest."""
     return f"""{name} AS MATERIALIZED (
     SELECT vec_id, s, cid FROM (
         SELECT v.vec_id, v.s, c.cid,
@@ -1378,31 +1354,29 @@ WHERE rk <= {k}""")
 
 
 @query("q111_pq_adc_topk", _q111_oracle())
-def q111_pq_adc_topk(spark: SparkSession, sf_dir: str, n_query: int = 10,
-                     k: int = 3) -> DataFrame:
+def q111_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
     books = pq_codebooks_cached(spark, sf_dir)
     m, kstar, sub = books.shape
     e = load(spark, sf_dir, "embeddings")
-    q_rows = (e.filter(F.col("vec_id") < n_query)
+    q_rows = (e.filter(F.col("vec_id") < 10)
               .select("vec_id", "embedding").orderBy("vec_id").collect())
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
     q_mat = np.stack([np.asarray(r["embedding"], dtype=np.float64)
                       for r in q_rows])
-    # per-query ADC tables: exact distance from query subvector to every
-    # subspace centroid — (n_query, m, kstar)
+    # per-query ADC tables: exact fold distance from query subvector to
+    # every subspace centroid — (n_query, m, kstar)
     tables = np.empty((len(q_ids), m, kstar))
     for s in range(m):
-        qs = q_mat[:, s * sub:(s + 1) * sub]
-        tables[:, s, :] = (
-            ((qs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2))
+        tables[:, s, :] = np_nearest(q_mat[:, s * sub:(s + 1) * sub],
+                                     books[s])[1]
     bc = spark.sparkContext.broadcast((books, q_ids, tables))
 
     def encode_and_score(batches):
         # Two-phase top-k: each Arrow batch emits only its LOCAL top-k per
-        # query (<= n_query*k rows per batch, vectorized lexsort — no
+        # query (<= 10*3 rows per batch, vectorized lexsort — no
         # per-row Python), and the global rank below merges the partials.
         # The (dist, neighbor_id) tie rule is identical in both phases, so
         # the merge is exact (the q85 two-phase argument).
@@ -1414,11 +1388,10 @@ def q111_pq_adc_topk(spark: SparkSession, sf_dir: str, n_query: int = 10,
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             codes = np.empty((len(x), m_), dtype=np.int64)
             for s in range(m_):
-                xs = x[:, s * sub_:(s + 1) * sub_]
-                d2 = ((xs[:, None, :] - books_[s][None, :, :]) ** 2).sum(axis=2)
-                # fround6-argmin: the same device as training, mirrored
-                # by the oracle's encode CTE
-                codes[:, s] = np_fround6(d2).argmin(axis=1)
+                # the same kernel as training, mirrored by the oracle's
+                # encode CTE
+                codes[:, s] = np_nearest(x[:, s * sub_:(s + 1) * sub_],
+                                         books_[s])[0]
             # ADC: approx dist of every row to every query via table gather
             # (n_q, n_rows) = sum over subspaces of table[q, s, code[row, s]]
             approx = np.zeros((len(q_ids_), len(x)))
@@ -1429,7 +1402,7 @@ def q111_pq_adc_topk(spark: SparkSession, sf_dir: str, n_query: int = 10,
             for qi in range(len(q_ids_)):
                 keep = vec_ids != q_ids_[qi]
                 ids_k, d_k = vec_ids[keep], approx[qi, keep]
-                order = np.lexsort((ids_k, d_k))[:k]
+                order = np.lexsort((ids_k, d_k))[:3]
                 qcol.append(np.full(len(order), q_ids_[qi]))
                 ncol.append(ids_k[order])
                 dcol.append(d_k[order])
@@ -1442,15 +1415,12 @@ def q111_pq_adc_topk(spark: SparkSession, sf_dir: str, n_query: int = 10,
     scored = e.select("vec_id", "embedding").mapInPandas(
         encode_and_score,
         schema="query_id bigint, neighbor_id bigint, adc_dist double")
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"),
-                                          F.asc("neighbor_id"))
     # fround6 device on the emitted distance (was F.round, which rounds
     # the shortest decimal repr — the q44 halfway split); adc_dist >= 0
     # so the device matches ROUND's display convention too.  The RANK
     # stays on the raw double: both engines compute it by the identical
     # fold, bit-for-bit.
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
+    return (_query_top3(scored, F.asc("adc_dist"))
             .select("query_id", "neighbor_id", "rk",
                     fround6(F.col("adc_dist")).alias("adc_dist")))
 
@@ -1512,9 +1482,7 @@ def q129_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (coded.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.bit_count(F.expr("qcode ^ code")).alias("hamming")))
-    w = W.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 3)
+    return (_query_top3(scored, F.asc("hamming"))
             .select("query_id", "neighbor_id", "rk",
                     F.col("hamming").cast("bigint").alias("hamming")))
 
@@ -2287,17 +2255,13 @@ def q218_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.filter(F.col("vec_id") < 10)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qemb")))
-    d2 = ("aggregate(zip_with(qemb, embedding, (x, y) ->"
-          " (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-          " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-          " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
     scored = (e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
               .join(F.broadcast(q))
               .filter(F.col("neighbor_id") != F.col("query_id"))
-              .select("query_id", "neighbor_id", F.expr(d2).alias("d2")))
-    w = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    exact = (scored.withColumn("rk", F.row_number().over(w))
-             .filter(F.col("rk") <= 3).select("query_id", "neighbor_id"))
+              .select("query_id", "neighbor_id",
+                      F.expr(_d2_spark("qemb", "embedding")).alias("d2")))
+    exact = (_query_top3(scored, F.asc("d2"))
+             .select("query_id", "neighbor_id"))
     adc = q111_pq_adc_topk(spark, sf_dir).select("query_id", "neighbor_id")
     hits = exact.join(adc, ["query_id", "neighbor_id"]).count()
     agg = exact.agg(

@@ -227,10 +227,6 @@ def _bounding_evidence(window_node) -> str | None:
     return None
 
 
-def _subtree_bounded(window_node) -> bool:
-    return _bounding_evidence(window_node) is not None
-
-
 def global_window_report(df) -> list[dict]:
     """One row per partitionBy-less Window in df's physical plan:
     {"window": <simpleString>, "evidence": <str|None>, "ok": bool}."""

@@ -17,7 +17,6 @@ files, distribute paths and run this parser inside ``mapInPandas`` over
 from __future__ import annotations
 
 import sqlite3
-import struct
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -42,11 +41,6 @@ def parse_gpb(blob: bytes) -> bytes:
         raise ValueError(f"invalid GPB envelope indicator {envelope_code}")
     header_len = 8 + 8 * _ENVELOPE_DOUBLES[envelope_code]
     return blob[header_len:]
-
-
-def gpb_srs_id(blob: bytes) -> int:
-    little = blob[3] & 0x01
-    return struct.unpack_from("<i" if little else ">i", blob, 4)[0]
 
 
 def _feature_tables(con: sqlite3.Connection) -> list[str]:

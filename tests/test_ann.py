@@ -56,56 +56,6 @@ def _recall(approx_rows, exact_rows):
     return hits / sum(len(v) for v in ex.values())
 
 
-def test_ivf_trained_centroids_beat_first_k(spark, tmp_path):
-    """kmeans-trained centroids must match the training-free quantizer on
-    the near-orthogonal fixture and strictly beat it on a clustered
-    corpus, where the first-k seeds all fall inside ONE cluster and its
-    neighbors fragment across arbitrary Voronoi cells.
-
-    Everything here is deterministic (fixed RandomState, deterministic
-    kmeans init, exact argmin) — the measured recalls are stable, so the
-    assertions are exact, not tolerances."""
-    import numpy as np
-    import pandas as pd
-
-    from spatial_data_engineering_spark.catalog import load
-    from spatial_data_engineering_spark.operators.similarity import (
-        ivf_centroids_kmeans, q49_cosine_topk, q52_ivf_ann)
-
-    # same fixture: trained must not lose to training-free
-    exact = q49_cosine_topk(spark, SF_ORACLE).collect()
-    free = _recall(q52_ivf_ann(spark, SF_ORACLE).collect(), exact)
-    cent = ivf_centroids_kmeans(spark, load(spark, SF_ORACLE, "embeddings"))
-    trained = _recall(
-        q52_ivf_ann(spark, SF_ORACLE, centroids=cent).collect(), exact)
-    assert trained >= free, (trained, free)
-
-    # clustered corpus: 8 tight clusters, ids sorted by cluster, so the
-    # 16 first-k seeds (and the 10 queries) all live in cluster 0
-    rng = np.random.RandomState(7)
-    centers = rng.randn(8, 64)
-    centers /= np.linalg.norm(centers, axis=1)[:, None]
-    rows = [(vid, (centers[vid // 100]
-                   + 0.05 * rng.randn(64)).astype(np.float32).tolist())
-            for vid in range(800)]
-    sdf = (spark.createDataFrame(
-               pd.DataFrame(rows, columns=["vec_id", "embedding"]))
-           .selectExpr("vec_id",
-                       "CAST(embedding AS array<float>) AS embedding"))
-    sf_dir = str(tmp_path)
-    sdf.coalesce(1).write.mode("overwrite") \
-       .parquet(f"{sf_dir}/embeddings.parquet")
-
-    exact2 = q49_cosine_topk(spark, sf_dir).collect()
-    free2 = _recall(q52_ivf_ann(spark, sf_dir).collect(), exact2)
-    cent2 = ivf_centroids_kmeans(spark, load(spark, sf_dir, "embeddings"))
-    trained2 = _recall(
-        q52_ivf_ann(spark, sf_dir, centroids=cent2).collect(), exact2)
-    # measured on this deterministic corpus: free2 = 0.866..., trained2 = 1.0
-    assert trained2 > free2, (trained2, free2)
-    assert trained2 == 1.0, trained2
-
-
 def test_q50_multi_block_equals_single_block(spark, monkeypatch):
     """The block-pair matmul must return the same pair set whether the
     corpus fits one block or is hash-split across many (regression: the

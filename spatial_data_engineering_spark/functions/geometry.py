@@ -335,19 +335,21 @@ def _segments(rings):
             yield r[i], r[i + 1]
 
 
-def _seg_intersect(p1, p2, p3, p4) -> bool:
-    def orient(a, b, c):
-        v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-        if abs(v) < 1e-12:
-            return 0
-        return 1 if v > 0 else -1
+def _orient(a, b, c) -> int:
+    """Sign of the turn a -> b -> c (0 within the 1e-12 tolerance)."""
+    v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
+    if abs(v) < 1e-12:
+        return 0
+    return 1 if v > 0 else -1
 
+
+def _seg_intersect(p1, p2, p3, p4) -> bool:
     def on_seg(a, b, c):
         return (min(a[0], b[0]) - 1e-12 <= c[0] <= max(a[0], b[0]) + 1e-12
                 and min(a[1], b[1]) - 1e-12 <= c[1] <= max(a[1], b[1]) + 1e-12)
 
-    o1, o2 = orient(p1, p2, p3), orient(p1, p2, p4)
-    o3, o4 = orient(p3, p4, p1), orient(p3, p4, p2)
+    o1, o2 = _orient(p1, p2, p3), _orient(p1, p2, p4)
+    o3, o4 = _orient(p3, p4, p1), _orient(p3, p4, p2)
     if o1 != o2 and o3 != o4:
         return True
     if o1 == 0 and on_seg(p1, p2, p3):
@@ -395,14 +397,8 @@ def _seg_cross_strict(p1, p2, p3, p4) -> bool:
     """True iff the OPEN segments properly cross (touching endpoints and
     collinear overlap do not count — boundary contact is allowed for
     containment)."""
-    def orient(a, b, c):
-        v = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-        if abs(v) < 1e-12:
-            return 0
-        return 1 if v > 0 else -1
-
-    o1, o2 = orient(p1, p2, p3), orient(p1, p2, p4)
-    o3, o4 = orient(p3, p4, p1), orient(p3, p4, p2)
+    o1, o2 = _orient(p1, p2, p3), _orient(p1, p2, p4)
+    o3, o4 = _orient(p3, p4, p1), _orient(p3, p4, p2)
     return o1 * o2 < 0 and o3 * o4 < 0
 
 
@@ -943,132 +939,3 @@ def grid_cells(geom_bounds, cell: float):
     iy0, iy1 = math.floor(ymin / cell), math.floor(ymax / cell)
     return [(ix, iy) for ix in range(ix0, ix1 + 1) for iy in range(iy0, iy1 + 1)]
 
-
-# ----------------------------------------------------------- simplify --
-
-def _pt_seg_dist(px, py, ax, ay, bx, by) -> float:
-    """Distance from point (px,py) to closed segment (a,b)."""
-    dx, dy = bx - ax, by - ay
-    L2 = dx * dx + dy * dy
-    if L2 == 0.0:
-        return math.hypot(px - ax, py - ay)
-    t = ((px - ax) * dx + (py - ay) * dy) / L2
-    t = 0.0 if t < 0.0 else (1.0 if t > 1.0 else t)
-    return math.hypot(px - (ax + t * dx), py - (ay + t * dy))
-
-
-def _dp_keep(pts, tol):
-    """Douglas-Peucker keep-flags for an open polyline (endpoints kept)."""
-    n = len(pts)
-    keep = [False] * n
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i, j = stack.pop()
-        if j <= i + 1:
-            continue
-        ax, ay = pts[i]
-        bx, by = pts[j]
-        dmax, imax = -1.0, -1
-        for k in range(i + 1, j):
-            d = _pt_seg_dist(pts[k][0], pts[k][1], ax, ay, bx, by)
-            if d > dmax:
-                dmax, imax = d, k
-        if dmax > tol:
-            keep[imax] = True
-            stack.append((i, imax))
-            stack.append((imax, j))
-    return keep
-
-
-def simplify(geom, tol: float):
-    """Douglas-Peucker simplification (ST_Simplify semantics: vertices
-    within ``tol`` of the simplified edge are dropped; endpoints and ring
-    closure preserved).  A ring that would collapse below 4 points
-    (triangle + closure) is kept unsimplified — the engine's contract is
-    validity-preserving, unlike PostGIS's default which may emit
-    degenerate rings.  tol <= 0 is the identity."""
-    kind, body = geom
-    if kind == "Point" or tol <= 0:
-        return geom
-
-    def ring_simpl(ring):
-        r = list(ring)
-        closed = r[0] == r[-1]
-        if not closed:
-            r.append(r[0])
-        if len(r) <= 4:
-            return list(ring)
-        keep = _dp_keep(r, tol)
-        out = [p for p, k in zip(r, keep) if k]
-        if len(out) < 4:
-            return list(ring)
-        return out
-
-    if kind == "Polygon":
-        return ("Polygon", [ring_simpl(rg) for rg in body])
-    return ("MultiPolygon", [[ring_simpl(rg) for rg in rings]
-                             for rings in body])
-
-
-# ----------------------------------------------------------- distance --
-
-def _geom_vertices(geom):
-    kind, body = geom
-    if kind == "Point":
-        yield body
-        return
-    for rings in _iter_polys(geom):
-        for ring in rings:
-            yield from ring
-
-
-def _geom_segments(geom):
-    if geom[0] == "Point":
-        return []
-    return list(_segments([r for rings in _iter_polys(geom) for r in rings]))
-
-
-def distance(ga, gb) -> float:
-    """Minimum planar distance (ST_Distance): 0 when the geometries
-    intersect (including containment — `intersects` probes vertex
-    containment both ways); otherwise the minimum over vertex-to-segment
-    distances in both directions, which is exact for polygon/point
-    operands because the closest approach of disjoint polygons is always
-    attained at a vertex of one of them."""
-    if intersects(ga, gb):
-        return 0.0
-    if ga[0] == "Point" and gb[0] == "Point":
-        return math.hypot(ga[1][0] - gb[1][0], ga[1][1] - gb[1][1])
-    best = math.inf
-    segs_a, segs_b = _geom_segments(ga), _geom_segments(gb)
-    for vx, vy in _geom_vertices(ga):
-        if segs_b:
-            for (x1, y1), (x2, y2) in segs_b:
-                d = _pt_seg_dist(vx, vy, x1, y1, x2, y2)
-                if d < best:
-                    best = d
-        else:
-            bx, by = gb[1]
-            best = min(best, math.hypot(vx - bx, vy - by))
-    for vx, vy in _geom_vertices(gb):
-        if segs_a:
-            for (x1, y1), (x2, y2) in segs_a:
-                d = _pt_seg_dist(vx, vy, x1, y1, x2, y2)
-                if d < best:
-                    best = d
-        else:
-            ax, ay = ga[1]
-            best = min(best, math.hypot(vx - ax, vy - ay))
-    return best
-
-
-def dwithin(ga, gb, d: float) -> bool:
-    """ST_DWithin: distance(ga, gb) <= d, with the bbox prefilter PostGIS
-    uses (expanded-bbox reject is exact for the <= test)."""
-    axmin, aymin, axmax, aymax = bounds(ga)
-    bxmin, bymin, bxmax, bymax = bounds(gb)
-    if (axmax + d < bxmin or bxmax + d < axmin
-            or aymax + d < bymin or bymax + d < aymin):
-        return False
-    return distance(ga, gb) <= d

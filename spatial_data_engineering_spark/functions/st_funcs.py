@@ -13,9 +13,6 @@ queries can use them, mirroring how PostGIS exposes ST_ into SQL.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-from itertools import repeat
-
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -145,25 +142,6 @@ def st_envelope(wkb: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-def _point_coord(b: bytes, idx: int) -> float:
-    g = G.wkb_loads(bytes(b))
-    if g[0] != "Point":
-        # subtype policy (module docstring): clean error, not an opaque
-        # Arrow cast failure on a ring structure
-        raise ValueError(f"ST_X/ST_Y require Point geometry, got {g[0]}")
-    return g[1][idx]
-
-
-@F.pandas_udf(T.DoubleType())
-def st_x(wkb: pd.Series) -> pd.Series:
-    return _map(wkb, lambda b: _point_coord(b, 0))
-
-
-@F.pandas_udf(T.DoubleType())
-def st_y(wkb: pd.Series) -> pd.Series:
-    return _map(wkb, lambda b: _point_coord(b, 1))
-
-
 # -------------------------------------------------------------- transform
 
 @F.pandas_udf(T.BinaryType())
@@ -222,71 +200,21 @@ def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Minimum planar distance (PostGIS ST_Distance surface; the reference
-    delegates distance predicates to PostGIS — SURVEY §4)."""
-    return pd.Series(
-        [None if x is None or y is None
-         else G.distance(_loads_cached(bytes(x)), _loads_cached(bytes(y)))
-         for x, y in zip(a, b)]
-    )
-
-
-@F.pandas_udf(T.BooleanType())
-def st_dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
-    """ST_DWithin with the expanded-bbox fast reject."""
-    return pd.Series(
-        [None if x is None or y is None
-         else G.dwithin(_loads_cached(bytes(x)), _loads_cached(bytes(y)),
-                        float(dd))
-         for x, y, dd in zip(a, b, d)]
-    )
-
-
-@F.pandas_udf(T.BinaryType())
-def st_simplify(wkb: pd.Series, tol: pd.Series) -> pd.Series:
-    """Douglas-Peucker, validity-preserving (rings never collapse below
-    a closed triangle — see geometry.simplify)."""
-    return pd.Series(
-        [None if b is None
-         else G.wkb_dumps(G.simplify(G.wkb_loads(bytes(b)), float(t)))
-         for b, t in zip(wkb, tol)]
-    )
-
-
 # ------------------------------------------------- grid bucketing (join) --
-
-def _grid_cell_ids(wkb: pd.Series, cell: pd.Series,
-                   pad: Iterable[float]) -> pd.Series:
-    out = []
-    for b, c, p in zip(wkb, cell, pad):
-        if b is None:
-            out.append(None)
-            continue
-        xmin, ymin, xmax, ymax = G.bounds(G.wkb_loads(bytes(b)))
-        p = float(p)
-        bb = (xmin - p, ymin - p, xmax + p, ymax + p)
-        out.append([f"{ix}_{iy}" for ix, iy in G.grid_cells(bb, float(c))])
-    return pd.Series(out)
-
 
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def st_grid_cells(wkb: pd.Series, cell: pd.Series) -> pd.Series:
     """Grid-cell ids ("ix_iy") whose cell intersects the geometry's bbox —
     the §4 custom physical strategy: equi-join on these ids replaces the
     n^2 cross join; an exact predicate refines the candidates."""
-    return _grid_cell_ids(wkb, cell, repeat(0.0))
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def st_grid_cells_pad(wkb: pd.Series, cell: pd.Series,
-                      pad: pd.Series) -> pd.Series:
-    """Grid-cell ids for the geometry's bbox EXPANDED by ``pad`` on every
-    side — the probe-side key generator for the distance join: two
-    geometries within distance d have bbox gap <= d, so padding one
-    side's bbox by d guarantees the pair shares a cell."""
-    return _grid_cell_ids(wkb, cell, pad)
+    out = []
+    for b, c in zip(wkb, cell):
+        if b is None:
+            out.append(None)
+            continue
+        bb = G.bounds(G.wkb_loads(bytes(b)))
+        out.append([f"{ix}_{iy}" for ix, iy in G.grid_cells(bb, float(c))])
+    return pd.Series(out)
 
 
 @F.pandas_udf(T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))))
@@ -309,14 +237,9 @@ _ALL = {
     "ST_Area": st_area,
     "ST_Centroid": st_centroid,
     "ST_Envelope": st_envelope,
-    "ST_X": st_x,
-    "ST_Y": st_y,
     "ST_Transform": st_transform,
     "ST_Contains": st_contains,
     "ST_Intersects": st_intersects,
-    "ST_Distance": st_distance,
-    "ST_DWithin": st_dwithin,
-    "ST_Simplify": st_simplify,
     "ST_GridCells": st_grid_cells,
     "ST_ExteriorCoords": st_exterior_coords,
 }

@@ -44,16 +44,15 @@ QUERIES, ORACLES, query = registrar()
 # Lloyd loop: it runs on a bounded driver-side sample rather than over
 # the distributed corpus, so the two share only the assignment kernel.
 # --------------------------------------------------------------------------
-def kmeans_fit_cached(spark: SparkSession, sf_dir: str, k: int = 8,
-                      max_iter: int = 5):
-    """Session-memoized ``kmeans_fit`` of sf_dir's embeddings.  q55, q219
-    and q223 consume the same deterministic fit (bit-identical by the
-    contract test_clustering pins); re-training per query cost 3 x ~3.3 s
-    at sf0.1.  The assignments frame is two ints per vector."""
+def kmeans_fit_cached(spark: SparkSession, sf_dir: str):
+    """Session-memoized ``kmeans_fit`` (k=8, max_iter=5) of sf_dir's
+    embeddings.  q55, q219 and q223 consume the same deterministic fit
+    (bit-identical by the contract test_clustering pins); re-training per
+    query cost 3 x ~3.3 s at sf0.1.  The assignments frame is two ints
+    per vector."""
     return memo(spark, "kmeans_fit", (f"{sf_dir}/embeddings.parquet",),
                 lambda: kmeans_fit(spark, load(spark, sf_dir, "embeddings"),
-                                   k=k, max_iter=max_iter),
-                params=(k, max_iter))
+                                   k=8, max_iter=5))
 
 
 def kmeans_fit(spark: SparkSession, vectors: DataFrame, k: int = 8,
@@ -254,7 +253,7 @@ def q55_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks 3 -> 2); triangulated by a from-scratch numpy+Decimal Lloyd
     replay in tests/test_numpy_crosscheck24.py.
     """
-    assignments, _, _ = kmeans_fit_cached(spark, sf_dir, k=8, max_iter=5)
+    assignments, _, _ = kmeans_fit_cached(spark, sf_dir)
     return (assignments.groupBy("cluster")
             .agg(F.count(F.lit(1)).alias("n_vectors"),
                  F.min("id").alias("min_vec_id")))
@@ -319,7 +318,7 @@ def q223_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .common import fround6
 
     e = load(spark, sf_dir, "embeddings")
-    _, centroids, _ = kmeans_fit_cached(spark, sf_dir, k=8, max_iter=5)
+    _, centroids, _ = kmeans_fit_cached(spark, sf_dir)
     bc = spark.sparkContext.broadcast(centroids)
 
     def sil_kernel(batches):
@@ -992,8 +991,7 @@ def q219_kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _d2_spark
 
     e = load(spark, sf_dir, "embeddings")
-    assignments, centroids, hist = kmeans_fit_cached(spark, sf_dir,
-                                                     k=8, max_iter=5)
+    assignments, centroids, hist = kmeans_fit_cached(spark, sf_dir)
     n_points = assignments.count()
     # float-noise tolerance: partial re-aggregation order can wiggle the
     # reported inertia by ~1e-9 relative; Lloyd violations are orders of

@@ -1209,10 +1209,9 @@ def q30_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q31 — sliding event-time window in batch (F.window with slide; the batch
-# twin of streaming sliding_activity).  Each event lands in
-# size/slide = 2 windows; the oracle reproduces Spark's epoch-aligned
-# window arithmetic with integer math.
+# q31 — sliding event-time window in batch (F.window with slide).  Each
+# event lands in size/slide = 2 windows; the oracle reproduces Spark's
+# epoch-aligned window arithmetic with integer math.
 # --------------------------------------------------------------------------
 @query(
     "q31_sliding_window",

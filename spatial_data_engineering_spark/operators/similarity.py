@@ -1075,17 +1075,15 @@ def mmr_cand_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q110_mmr_diversify", _q110_oracle())
 def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
-                       query_vec_id: int = 0, k: int = _MMR_K,
-                       n_cand: int = _MMR_CAND,
-                       lam: float = _MMR_LAMBDA) -> DataFrame:
+                       query_vec_id: int = 0) -> DataFrame:
     import numpy as np
 
-    if (query_vec_id, n_cand) == (0, _MMR_CAND):
+    if query_vec_id == 0:
         cand = mmr_cand_cached(spark, sf_dir)
     else:  # non-default pool (tests): build uncached
         cand = _mmr_pool(load(spark, sf_dir, "embeddings"), query_vec_id,
-                         n_cand)
-    # BOUNDED collect: n_cand rows of (id, vec, rel) — the re-rank set.
+                         _MMR_CAND)
+    # BOUNDED collect: _MMR_CAND rows of (id, vec, rel) — the re-rank set.
     rows = cand.orderBy("rk").collect()
     if not rows:
         # empty candidate pool (corpus without the query vector, or all
@@ -1105,7 +1103,7 @@ def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
 
     selected: list[int] = []
     remaining = list(range(len(ids)))
-    while remaining and len(selected) < k:
+    while remaining and len(selected) < _MMR_K:
         if not selected:
             best = max(remaining, key=lambda i: (rel[i], -ids[i]))
         else:
@@ -1116,8 +1114,8 @@ def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
             # candidates in the same 1e-6 bucket could make the
             # operator and the audit oracle legitimately disagree)
             def mmr(i):
-                raw = (lam * rel[i]
-                       - (1 - lam) * max(sim[i][j] for j in selected))
+                raw = (_MMR_LAMBDA * rel[i] - (1 - _MMR_LAMBDA)
+                       * max(sim[i][j] for j in selected))
                 return float(np.floor(raw * 1000000.0 + 0.5) / 1000000.0)
             best = max(remaining, key=lambda i: (mmr(i), -ids[i]))
         selected.append(best)
@@ -1201,40 +1199,35 @@ def _dec_mean(vals) -> float:
     return float(s) / len(vals)
 
 
-def pq_codebooks_cached(spark: SparkSession, sf_dir: str,
-                        m: int = _PQ_M, kstar: int = _PQ_KSTAR,
-                        n_train: int = _PQ_TRAIN_N, iters: int = 10):
+def pq_codebooks_cached(spark: SparkSession, sf_dir: str):
     """Session-memoized ``pq_train_codebooks``: q111 and its audit twin
     q218 train the same deterministic codebooks."""
     return memo(spark, "pq_codebooks", (f"{sf_dir}/embeddings.parquet",),
-                lambda: pq_train_codebooks(spark, sf_dir, m, kstar, n_train,
-                                           iters),
-                params=(m, kstar, n_train, iters))
+                lambda: pq_train_codebooks(spark, sf_dir))
 
 
-def pq_train_codebooks(spark: SparkSession, sf_dir: str,
-                       m: int = _PQ_M, kstar: int = _PQ_KSTAR,
-                       n_train: int = _PQ_TRAIN_N, iters: int = 10):
-    """(m, kstar, sub_dim) float64 codebooks from per-subspace Lloyd on the
-    first n_train vectors (pure function of the corpus — deterministic,
+def pq_train_codebooks(spark: SparkSession, sf_dir: str):
+    """(_PQ_M, _PQ_KSTAR, sub_dim) float64 codebooks from per-subspace
+    Lloyd (10 iterations, as ``_q111_oracle`` replays) on the first
+    _PQ_TRAIN_N vectors (pure function of the corpus — deterministic,
     and since round 14 engine-REPLAYABLE: decimal-exact means + the
     fround6-argmin contract, see the block comment above)."""
     import numpy as np
 
     e = load(spark, sf_dir, "embeddings")
     rows = (e.select("vec_id", "embedding").orderBy("vec_id")
-            .limit(n_train).collect())
+            .limit(_PQ_TRAIN_N).collect())
     x = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
     dim = x.shape[1]
-    sub = dim // m
-    books = np.empty((m, kstar, sub))
-    for s in range(m):
+    sub = dim // _PQ_M
+    books = np.empty((_PQ_M, _PQ_KSTAR, sub))
+    for s in range(_PQ_M):
         xs = x[:, s * sub:(s + 1) * sub]
-        cent = xs[:kstar].copy()  # deterministic init: first k* rows
-        for _ in range(iters):
+        cent = xs[:_PQ_KSTAR].copy()  # deterministic init: first k* rows
+        for _ in range(10):
             # the contract the SQL replay's ROW_NUMBER mirrors
             assign = np_nearest(xs, cent)[0]
-            for c in range(kstar):
+            for c in range(_PQ_KSTAR):
                 mask = assign == c
                 if mask.any():
                     # decimal-exact per-dim means (NOT numpy mean, whose

@@ -3,11 +3,12 @@ custom operators (SURVEY.md §4 "custom vs built-in summary").
 
 ``grid_spatial_join`` implements D2/D3 (zonal-stats join, intersection
 join): each side emits the grid cells its bbox overlaps, candidates come
-from an **equi-join on the cell id** (shuffle-friendly, uniform md5-free
-integer-grid keys), duplicate candidate pairs from multi-cell spans are
-dropped before the exact predicate refine (ST_Contains / ST_Intersects
-pandas UDF) runs — so the expensive Python predicate only sees each
-candidate once.
+from an **equi-join on the cell id** (``_grid_candidates``, the one
+candidate generator; shuffle-friendly, uniform md5-free integer-grid
+keys), duplicate candidate pairs from multi-cell spans are dropped before
+the exact predicate refine (ST_Contains / ST_Intersects pandas UDF, the
+reference's two spatial predicates) runs — so the expensive Python
+predicate only sees each candidate once.
 
 Scale notes (100 TB): cell size trades shuffle fan-out (small cells -> more
 duplicate candidates) against refine selectivity (big cells -> more false
@@ -33,22 +34,18 @@ from pyspark.sql import functions as F
 
 from ..functions import geometry as G
 from ..functions.st_funcs import (st_contains, st_envelope, st_grid_cells,
-                                  st_grid_cells_pad, st_intersects)
+                                  st_intersects)
 
 
 def _grid_candidates(left: DataFrame, right: DataFrame, cell: float,
-                     left_geom: str, right_geom: str,
-                     pad: float = 0.0) -> DataFrame:
+                     left_geom: str, right_geom: str) -> DataFrame:
     """Candidate pairs from the cell-id equi-join, PRE-dedup — factored
     out so the skew test can measure raw candidate duplication directly
-    (the public joins dedupe and refine on top of this).  ``pad`` expands
-    the left side's bbox on every side before it is bucketed."""
+    (``grid_spatial_join`` dedupes and refines on top of this)."""
     lg, rg = "__lg", "__rg"
     l = left.withColumnRenamed(left_geom, lg)
     r = right.withColumnRenamed(right_geom, rg)
-    lcells = (st_grid_cells_pad(F.col(lg), F.lit(cell), F.lit(float(pad)))
-              if pad else st_grid_cells(F.col(lg), F.lit(cell)))
-    l = l.withColumn("__cell", F.explode(lcells))
+    l = l.withColumn("__cell", F.explode(st_grid_cells(F.col(lg), F.lit(cell))))
     r = r.withColumn("__cell", F.explode(st_grid_cells(F.col(rg), F.lit(cell))))
     return l.join(r, "__cell").drop("__cell")
 
@@ -228,80 +225,3 @@ def union_agg(df: DataFrame, group_cols: list[str], geom_col: str = "geom",
 
     return partials.groupBy(*group_cols).applyInPandas(final, schema=out_schema)
 
-
-def distance_join(
-    left: DataFrame,
-    right: DataFrame,
-    d: float,
-    left_keys: list[str],
-    right_keys: list[str],
-    cell: float | None = None,
-    left_geom: str = "geom",
-    right_geom: str = "geom",
-) -> DataFrame:
-    """Inner distance join (ST_DWithin join): pairs whose minimum planar
-    distance is <= d.
-
-    Same grid-bucket physical strategy as ``grid_spatial_join`` with one
-    twist: the LEFT side emits cells for its bbox expanded by d, so any
-    pair within distance d (bbox gap <= d) is guaranteed to share a cell;
-    the exact ST_DWithin refine (expanded-bbox reject + vertex-segment
-    minimum) then decides.  Cell pitch defaults to the build side's
-    adaptive pitch, floored at d so the padding adds at most one ring of
-    cells per side rather than d/cell of them.
-
-    Scale: identical shuffle shape to the spatial join — equi-join on
-    uniform integer-grid keys, dedupe before the Python refine.  The
-    padding multiplies build-side duplication by ((E+2d)/(E))-ish, which
-    is the inherent candidate cost of a distance predicate.
-    """
-    from ..functions.st_funcs import st_dwithin
-
-    if cell is None:
-        cell = max(adaptive_cell(right, right_geom), float(d))
-    lg, rg = "__lg", "__rg"
-    cand = _grid_candidates(left, right, cell, left_geom, right_geom, pad=d)
-    cand = cand.dropDuplicates(left_keys + right_keys)
-    out = cand.filter(st_dwithin(F.col(lg), F.col(rg), F.lit(float(d))))
-    out = out.withColumnRenamed(lg, left_geom)
-    name = right_geom if right_geom != left_geom else f"{right_geom}_right"
-    return out.withColumnRenamed(rg, name)
-
-
-def nearest_join(
-    left: DataFrame,
-    right: DataFrame,
-    d_max: float,
-    left_keys: list[str],
-    right_keys: list[str],
-    cell: float | None = None,
-    left_geom: str = "geom",
-    right_geom: str = "geom",
-) -> DataFrame:
-    """Nearest-neighbor spatial join (PostGIS `<->` KNN, distributed
-    form): for each left row, the single closest right row within
-    ``d_max``, with the exact distance as ``nn_distance``.
-
-    The radius cutoff is what makes KNN distributable: candidates come
-    from the padded-grid distance join (every within-d_max pair shares a
-    cell), then a per-left-key rank by (exact distance, right key) keeps
-    the closest.  Left rows with no right geometry within d_max drop out
-    (inner semantics) — an unbounded global KNN would need an all-pairs
-    fallback for isolated rows, which is exactly the plan shape that
-    dies at scale; widen d_max instead.  Ties at equal distance break by
-    the right key, so results are deterministic.
-    """
-    from pyspark.sql.window import Window as W
-
-    from ..functions.st_funcs import st_distance
-
-    cand = distance_join(left, right, d_max, left_keys, right_keys,
-                         cell=cell, left_geom=left_geom,
-                         right_geom=right_geom)
-    rname = right_geom if right_geom != left_geom else f"{right_geom}_right"
-    scored = cand.withColumn(
-        "nn_distance", st_distance(F.col(left_geom), F.col(rname)))
-    w = (W.partitionBy(*left_keys)
-         .orderBy(F.col("nn_distance"), *[F.col(k) for k in right_keys]))
-    return (scored.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1).drop("__rk"))

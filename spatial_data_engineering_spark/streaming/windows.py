@@ -69,18 +69,6 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour",
     )
 
 
-def sliding_activity(events: DataFrame, window: str = "1 hour",
-                     slide: str = "30 minutes",
-                     watermark: str = "2 hours") -> DataFrame:
-    """Sliding window per user: overlapping windows, activity counts."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n_events")
-    )
-
-
 def session_windows(events: DataFrame, gap: str = "30 minutes",
                     watermark: str = "2 hours") -> DataFrame:
     """Event-time session windows (gap-based; the streaming analogue of the

@@ -421,76 +421,3 @@ def test_union_all_degenerate_input_returns_collection():
     assert G.area(u) == 0.0
     assert G.union_area([a, b]) == 0.0
 
-
-# ------------------------------------------------- simplify / distance --
-
-def _ngon(cx, cy, r, n=12):
-    ring = [(cx + r * math.cos(2 * math.pi * i / n),
-             cy + r * math.sin(2 * math.pi * i / n)) for i in range(n)]
-    ring.append(ring[0])
-    return ("Polygon", [ring])
-
-
-def test_simplify_identity_and_vertex_subset():
-    g = _ngon(0, 0, 10, n=24)
-    assert G.simplify(g, 0.0) == g
-    s = G.simplify(g, 0.5)
-    orig = set(map(tuple, g[1][0]))
-    for ring in s[1]:
-        assert ring[0] == ring[-1]          # closure preserved
-        assert len(ring) >= 4               # validity preserved
-        assert set(map(tuple, ring)) <= orig  # vertices only dropped
-
-
-def test_simplify_monotone_in_tolerance():
-    g = _ngon(5, 5, 10, n=36)
-    counts = [len(G.simplify(g, t)[1][0]) for t in (0.01, 0.1, 0.5, 2.0, 8.0)]
-    assert counts == sorted(counts, reverse=True)
-    # heavy tolerance still yields a valid ring, not a degenerate one
-    assert counts[-1] >= 4
-
-
-def test_simplify_collinear_chain():
-    # a square with redundant midpoints on every edge: any positive tol
-    # drops the collinear midpoints and keeps the 4 corners
-    sq = [(0, 0), (1, 0), (2, 0), (2, 1), (2, 2), (1, 2), (0, 2), (0, 1),
-          (0, 0)]
-    s = G.simplify(("Polygon", [sq]), 1e-9)
-    assert len(s[1][0]) == 5
-    assert G.area(s) == G.area(("Polygon", [sq])) == 4.0
-
-
-def test_distance_basic_cases():
-    a = ("Polygon", [[(0, 0), (1, 0), (1, 1), (0, 1), (0, 0)]])
-    b = ("Polygon", [[(3, 0), (4, 0), (4, 1), (3, 1), (3, 0)]])
-    assert G.distance(a, b) == 2.0
-    assert G.distance(a, a) == 0.0
-    # diagonal offset: closest approach corner-to-corner
-    c = ("Polygon", [[(4, 4), (5, 4), (5, 5), (4, 5), (4, 4)]])
-    assert math.isclose(G.distance(a, c), math.hypot(3, 3))
-    p = ("Point", (2.0, 0.5))
-    assert G.distance(a, p) == 1.0
-    assert G.distance(p, a) == 1.0
-    q = ("Point", (0.5, 0.5))   # inside a
-    assert G.distance(a, q) == 0.0
-    assert G.distance(p, ("Point", (2.0, 3.5))) == 3.0
-    # containment without edge crossing is distance zero
-    outer = ("Polygon", [[(-5, -5), (6, -5), (6, 6), (-5, 6), (-5, -5)]])
-    assert G.distance(outer, a) == 0.0
-
-
-@given(st.floats(-50, 50), st.floats(-50, 50),
-       st.floats(0.5, 5), st.floats(0.5, 5),
-       st.floats(-50, 50), st.floats(-50, 50))
-@settings(max_examples=60, deadline=None)
-def test_distance_symmetry_and_dwithin_consistency(x1, y1, r1, r2, x2, y2):
-    a, b = _ngon(x1, y1, r1, 8), _ngon(x2, y2, r2, 8)
-    d_ab, d_ba = G.distance(a, b), G.distance(b, a)
-    assert math.isclose(d_ab, d_ba, rel_tol=1e-12, abs_tol=1e-12)
-    # dwithin agrees with distance on both sides of the threshold
-    assert G.dwithin(a, b, d_ab + 1e-9)
-    if d_ab > 1e-9:
-        assert not G.dwithin(a, b, d_ab - 1e-9)
-    # circle-center lower bound: distance >= center gap - radii
-    lb = math.hypot(x1 - x2, y1 - y2) - r1 - r2
-    assert d_ab >= max(0.0, lb) - 1e-9

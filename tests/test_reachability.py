@@ -29,7 +29,7 @@ KEEP = {
     ("functions/phash.py", "hamming64"):
         "scalar twin of the Spark pHash Hamming distance",
     ("functions/st_funcs.py", "register_all"):
-        "SQL ST_ surface registration; unreached, its fate is open",
+        "public SQL ST_ surface; driven by tests/test_spatial_sql.py",
     ("functions/tiff_webp.py", "encode_tiff"):
         "TIFF encoder, the writing half of the tested codec",
     ("functions/tiff_webp.py", "encode_webp_lossless"):
@@ -50,8 +50,6 @@ KEEP = {
         "oracle-shaped covariance twin q93's BLAS path is tested against",
     ("operators/skew.py", "salted_join"):
         "public skew-join entry point",
-    ("operators/spatial_join.py", "nearest_join"):
-        "public nearest-neighbour join; its fate is open",
     ("plans/audit.py", "global_window_violations"):
         "public global-window audit entry point",
     ("plans/curation.py", "materialize_curated"):
@@ -96,8 +94,6 @@ KEEP = {
         "public streaming entry point",
     ("streaming/windows.py", "session_windows"):
         "public streaming entry point",
-    ("streaming/windows.py", "sliding_activity"):
-        "public streaming entry point; unreached, its fate is open",
     ("streaming/windows.py", "stream_admit_documents"):
         "public streaming entry point",
     ("streaming/windows.py", "stream_admit_near_dedup"):

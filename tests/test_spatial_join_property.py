@@ -288,50 +288,3 @@ def test_union_agg_high_cardinality_correct(spark):
     areas = {r["grp"]: G.area(G.wkb_loads(bytes(r["geom"]))) for r in rows}
     assert all(abs(a - 1.0) < 1e-12 for a in areas.values())
 
-
-@pytest.mark.parametrize("seed,d,cell", [(0, 3.0, None), (1, 7.5, 4.0),
-                                         (2, 0.5, 25.0)])
-def test_distance_join_equals_bruteforce(spark, seed, d, cell):
-    """distance_join must equal crossJoin + ST_DWithin for every pitch,
-    including the adaptive default — the padded-cell candidate generation
-    can only add candidates, never lose a within-d pair."""
-    from spatial_data_engineering_spark.functions.st_funcs import st_dwithin
-    from spatial_data_engineering_spark.operators.spatial_join import (
-        distance_join)
-
-    pts, boxes = _random_frames(spark, seed)
-    got = (distance_join(pts, boxes, d, ["pt_id"], ["box_id"], cell=cell)
-           .select("pt_id", "box_id"))
-    brute = (pts.crossJoin(boxes.select("box_id",
-                                        F.col("geom").alias("bgeom")))
-             .filter(st_dwithin(F.col("geom"), F.col("bgeom"), F.lit(d)))
-             .select("pt_id", "box_id"))
-    g = {(r.pt_id, r.box_id) for r in got.collect()}
-    b = {(r.pt_id, r.box_id) for r in brute.collect()}
-    assert g == b and len(b) > 0
-
-
-@pytest.mark.parametrize("seed,d", [(0, 10.0), (1, 25.0)])
-def test_nearest_join_equals_bruteforce(spark, seed, d):
-    """nearest_join must pick exactly the brute-force argmin (distance,
-    box_id) for every point that has any box within d."""
-    from spatial_data_engineering_spark.functions.st_funcs import st_distance
-    from spatial_data_engineering_spark.operators.spatial_join import (
-        nearest_join)
-
-    pts, boxes = _random_frames(spark, seed)
-    got = {(r.pt_id, r.box_id, round(r.nn_distance, 9))
-           for r in nearest_join(pts, boxes, d, ["pt_id"], ["box_id"])
-           .select("pt_id", "box_id", "nn_distance").collect()}
-
-    brute = (pts.crossJoin(boxes.select("box_id",
-                                        F.col("geom").alias("bgeom")))
-             .withColumn("dist", st_distance(F.col("geom"), F.col("bgeom")))
-             .filter(F.col("dist") <= d).collect())
-    best: dict = {}
-    for r in brute:
-        k = (r.dist, r.box_id)
-        if r.pt_id not in best or k < best[r.pt_id]:
-            best[r.pt_id] = k
-    exp = {(p, b, round(dist, 9)) for p, (dist, b) in best.items()}
-    assert got == exp and len(exp) > 0

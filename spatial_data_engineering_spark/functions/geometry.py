@@ -24,6 +24,8 @@ import bisect
 import math
 import struct
 
+import numpy as np
+
 _WKB_POINT = 1
 _WKB_POLYGON = 3
 _WKB_MULTIPOLYGON = 6
@@ -324,6 +326,49 @@ def _point_in_ring(x: float, y: float, ring) -> int:
             if xin > x:
                 inside = not inside
     return 1 if inside else 0
+
+
+def points_in_polygon(xs, ys, geom):
+    """``point_in_polygon`` over numpy coordinate arrays: per point the
+    same IEEE operations in the same order (``_points_in_ring``), and
+    parts and holes decided in the same order, so each element equals
+    the scalar result exactly."""
+    out = np.zeros(len(xs), dtype=bool)
+    for rings in _iter_polys(geom):
+        if not rings:
+            continue
+        idx = np.flatnonzero(~out)  # points no earlier part has taken
+        for i, ring in enumerate(rings):
+            if not len(idx):
+                break
+            hit = _points_in_ring(xs[idx], ys[idx], ring)
+            out[idx[hit == 2]] = True  # on any ring's boundary -> inside
+            # a shell keeps the points inside it; a hole drops them
+            idx = idx[hit == (1 if i == 0 else 0)]
+        out[idx] = True
+    return out
+
+
+def _points_in_ring(xs, ys, ring):
+    """``_point_in_ring`` over numpy arrays: 0 outside, 1 inside, 2 on
+    boundary."""
+    r = list(ring)
+    if r[0] != r[-1]:
+        r.append(r[0])
+    inside = np.zeros(len(xs), dtype=bool)
+    edge = np.zeros(len(xs), dtype=bool)
+    for i in range(len(r) - 1):
+        x1, y1 = r[i]
+        x2, y2 = r[i + 1]
+        cross = (x2 - x1) * (ys - y1) - (y2 - y1) * (xs - x1)
+        edge |= ((np.abs(cross) < 1e-12 * max(1.0, abs(x2 - x1) + abs(y2 - y1)))
+                 & (min(x1, x2) - 1e-12 <= xs) & (xs <= max(x1, x2) + 1e-12)
+                 & (min(y1, y2) - 1e-12 <= ys) & (ys <= max(y1, y2) + 1e-12))
+        if y1 != y2:  # a level edge never straddles the ray
+            with np.errstate(over="ignore"):  # inf, as Python's float gives
+                xin = x1 + (ys - y1) * (x2 - x1) / (y2 - y1)
+            inside ^= ((y1 > ys) != (y2 > ys)) & (xin > xs)
+    return np.where(edge, 2, inside.astype(np.int8))
 
 
 def _segments(rings):

@@ -982,14 +982,14 @@ _MMR_K = 10
 _MMR_CAND = 50
 
 
-def _q110_oracle(k: int = _MMR_K, n_cand: int = _MMR_CAND,
-                 lam: float = _MMR_LAMBDA) -> str:
-    """Full greedy-MMR replay: recall top-n_cand by raw fold rel (the
-    operator's candidate window), pick 1 = relevance argmax, then k-1
+def _q110_oracle() -> str:
+    """Full greedy-MMR replay: recall top-_MMR_CAND by raw fold rel (the
+    operator's candidate window), pick 1 = relevance argmax, then K-1
     rounds of fround6(lam*rel - (1-lam)*MAX sim-to-selected) with
     (score DESC, vec_id) ties — bit-for-bit the operator's selection
     under the r13 rounded-argmax contract.  Cost: one linear rel scan
-    plus K rounds over <= n_cand*K pairs (~0.15 s at sf0.01)."""
+    plus K rounds over <= _MMR_CAND*K pairs (~0.15 s at sf0.01)."""
+    k, n_cand, lam = _MMR_K, _MMR_CAND, _MMR_LAMBDA
     mmr = (f"CAST({lam} AS DOUBLE) * c.rel"
            f" - (CAST(1.0 AS DOUBLE) - CAST({lam} AS DOUBLE)) * mx.s")
     sim = _dot_sql("c2.embedding", "s.emb") + " / (c2.nrm * s.nrm)"
@@ -1030,9 +1030,9 @@ SELECT CAST(rank AS INTEGER) AS rank, CAST(vec_id AS BIGINT) AS vec_id,
 FROM sel{k}""")
 
 
-def _mmr_pool(e: DataFrame, query_vec_id: int, n_cand: int) -> DataFrame:
+def _mmr_pool(e: DataFrame, query_vec_id: int) -> DataFrame:
     """(vec_id, embedding, rel, rk): the global (rel DESC, vec_id) top
-    n_cand of every nonzero vector by fold-cosine relevance to the query
+    _MMR_CAND of every nonzero vector by fold-cosine relevance to the query
     — ONE definition shared by q110 and its q220 audit, so the audit can
     never certify against a different candidate pool than the operator
     used (r12 review)."""
@@ -1051,7 +1051,7 @@ def _mmr_pool(e: DataFrame, query_vec_id: int, n_cand: int) -> DataFrame:
     )
     w = W.orderBy(F.desc("rel"), F.asc("vec_id"))
     return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= n_cand))
+            .filter(F.col("rk") <= _MMR_CAND))
 
 
 def mmr_cand_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,7 +1065,7 @@ def mmr_cand_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _doc_frame_memo
 
     def build():
-        cand = (_mmr_pool(load(spark, sf_dir, "embeddings"), 0, _MMR_CAND)
+        cand = (_mmr_pool(load(spark, sf_dir, "embeddings"), 0)
                 .withColumn("nrm", F.expr(_norm_spark("embedding"))))
         return (cand.localCheckpoint(eager=False),)
 
@@ -1081,8 +1081,7 @@ def q110_mmr_diversify(spark: SparkSession, sf_dir: str,
     if query_vec_id == 0:
         cand = mmr_cand_cached(spark, sf_dir)
     else:  # non-default pool (tests): build uncached
-        cand = _mmr_pool(load(spark, sf_dir, "embeddings"), query_vec_id,
-                         _MMR_CAND)
+        cand = _mmr_pool(load(spark, sf_dir, "embeddings"), query_vec_id)
     # BOUNDED collect: _MMR_CAND rows of (id, vec, rel) — the re-rank set.
     rows = cand.orderBy("rk").collect()
     if not rows:
@@ -1258,9 +1257,7 @@ def _pq_assign_sql(name: str, src: str, cent: str) -> str:
         FROM {src} v JOIN {cent} c ON c.s = v.s) WHERE rk = 1)"""
 
 
-def _q111_oracle(m: int = _PQ_M, kstar: int = _PQ_KSTAR,
-                 n_train: int = _PQ_TRAIN_N, iters: int = 10,
-                 n_query: int = 10, k: int = 3) -> str:
+def _q111_oracle() -> str:
     """Full PQ replay in SQL (round 14 — the q55/q110 precedent closes
     the no-oracle set to zero): per-subspace Lloyd training (all m
     subspaces ride one relation keyed by s; 10 chained
@@ -1272,7 +1269,9 @@ def _q111_oracle(m: int = _PQ_M, kstar: int = _PQ_KSTAR,
     past the argmins), accumulate the M gathers in subspace order, and
     rank (adc_dist ASC, neighbor_id ASC) per query.  Cost is linear in
     corpus size: n*m*k* fold-4 evals for the encode, the training is
-    bounded at n_train rows."""
+    bounded at _PQ_TRAIN_N rows."""
+    m, kstar, n_train = _PQ_M, _PQ_KSTAR, _PQ_TRAIN_N
+    iters, n_query, k = 10, 10, 3
     sub_hi = m - 1
     parts = [f"""x AS (SELECT vec_id, embedding FROM embeddings),
 ss AS (SELECT unnest(generate_series(0, {sub_hi})) AS s),

@@ -1,22 +1,34 @@
-"""Grid-bucketed spatial join + geometric-union UDAF — the two genuinely
-custom operators (SURVEY.md §4 "custom vs built-in summary").
+"""Spatial join + geometric-union UDAF — the two genuinely custom
+operators (SURVEY.md §4 "custom vs built-in summary").
 
 ``grid_spatial_join`` implements D2/D3 (zonal-stats join, intersection
-join): each side emits the grid cells its bbox overlaps, candidates come
-from an **equi-join on the cell id** (``_grid_candidates``, the one
-candidate generator; shuffle-friendly, uniform md5-free integer-grid
-keys), duplicate candidate pairs from multi-cell spans are dropped before
-the exact predicate refine (ST_Contains / ST_Intersects pandas UDF, the
-reference's two spatial predicates) runs — so the expensive Python
-predicate only sees each candidate once.
+join) with the reference's two spatial predicates (ST_Contains /
+ST_Intersects).  It picks its path by Spark's own broadcast rule:
 
-Scale notes (100 TB): cell size trades shuffle fan-out (small cells -> more
-duplicate candidates) against refine selectivity (big cells -> more false
-candidates).  Skew from one huge polygon overlapping many cells is bounded
-by the explode (its candidates spread across many cell-partitions — the
-opposite of key skew).  Points land in exactly one cell, so the dedupe is
-a no-op for point-in-polygon workloads and Catalyst's AQE handles residual
-imbalance.
+* **broadcast** (build side's optimizer size estimate within
+  ``spark.sql.autoBroadcastJoinThreshold``): the build rows are collected once, and one scalar pandas UDF tests
+  each probe batch against all of them in one vectorized pass — point
+  WKB decoded by ``np.frombuffer``, bbox candidates by binary search on
+  the x-sorted points, the exact test by ``G.points_in_polygon`` — then
+  the matches join the build rows back by ordinal.  Only the probe WKB
+  crosses Arrow; there is no per-row cell UDF and no per-candidate
+  refine.  The probe side is hash-partitioned by its keys and
+  deduplicated on them in that one exchange (one probe row per left
+  key).
+* **grid** (a build side too big to collect): each side emits the grid
+  cells its bbox overlaps, candidates come from an **equi-join on the
+  cell id** (``_grid_candidates``, shuffle-friendly integer-grid keys),
+  duplicate candidate pairs from multi-cell spans are dropped (one
+  candidate per key pair), and the exact predicate pandas UDF refines
+  them.
+
+Scale notes (100 TB): the broadcast path scales with the probe side
+alone (no shuffle beyond the probe's dedupe exchange).  On the grid
+path cell size trades shuffle fan-out (small cells -> more duplicate
+candidates) against refine selectivity (big cells -> more false
+candidates); skew from one huge polygon overlapping many cells is
+bounded by the explode (its candidates spread across many
+cell-partitions — the opposite of key skew).
 
 ``union_agg`` implements E1 (ST_Union aggregate, load_report.py:472) in
 two phases, exactly like a built-in aggregate with a map-side combiner:
@@ -29,8 +41,11 @@ no single pandas group ever materializes a whole 100 TB group's rows.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import geometry as G
 from ..functions.st_funcs import (st_contains, st_envelope, st_grid_cells,
@@ -101,33 +116,172 @@ def grid_spatial_join(
     predicate(right_geom, left_geom) holds ("contains": right contains
     left — the cells-in-polygon zonal shape).
 
-    left_keys/right_keys must uniquely identify rows on their side; they
-    key the candidate dedupe.  All non-conflicting columns survive; when
-    both sides use the same geometry column name, the left geometry keeps
-    the name and the right geometry comes back as ``{right_geom}_right``.
+    Two paths, one result set:
 
-    ``cell=None`` (default) derives the grid pitch from the RIGHT (build)
-    side's p95 bbox extent — see ``adaptive_cell``; pass an explicit cell
-    to pin it (results are invariant either way, only candidate counts
-    move).
+    * **broadcast** — when the right (build) side's optimizer size
+      estimate is within ``spark.sql.autoBroadcastJoinThreshold`` (the
+      rule Spark uses to broadcast a join side), the build rows are
+      collected once and each probe batch is tested against all of them
+      in one vectorized pass (``_broadcast_join``);
+    * **grid** — otherwise (or with the threshold set to -1), both sides
+      emit the grid cells their bboxes overlap, candidates come from the
+      cell-id equi-join, and the exact predicate refines them.
+
+    left_keys/right_keys must uniquely identify rows on their side; the
+    output holds at most one row per (left key, right key) pair: the
+    broadcast path keeps one probe row per left key, the grid path one
+    candidate per key pair.  All non-conflicting columns survive; when
+    both sides use the same geometry column name, the left geometry
+    keeps the name and the right geometry comes back as
+    ``{right_geom}_right``.
+
+    ``cell`` only steers the grid path.  ``cell=None`` (default) derives
+    the grid pitch from the build side's p95 bbox extent — see
+    ``adaptive_cell``; pass an explicit cell to pin it (results are
+    invariant either way, only candidate counts move).
     """
+    if predicate not in ("contains", "intersects"):
+        raise ValueError(f"unknown predicate {predicate!r}")
+    right_out = (f"{right_geom}_right" if left_geom == right_geom
+                 else right_geom)
+    if _broadcastable(right):
+        return _broadcast_join(left, right, left_keys, predicate, left_geom,
+                               right_geom, right_out)
+
     if cell is None:
         cell = adaptive_cell(right, right_geom)
     lg, rg = "__lg", "__rg"
     cand = _grid_candidates(left, right, cell, left_geom, right_geom)
     # one candidate per key pair before the (expensive) exact refine
     cand = cand.dropDuplicates(left_keys + right_keys)
-
-    if predicate == "contains":
-        keep = st_contains(F.col(rg), F.col(lg))
-    elif predicate == "intersects":
-        keep = st_intersects(F.col(rg), F.col(lg))
-    else:
-        raise ValueError(f"unknown predicate {predicate!r}")
-    out = cand.filter(keep).withColumnRenamed(lg, left_geom)
-    right_out = (f"{right_geom}_right" if left_geom == right_geom
-                 else right_geom)
+    pred = st_contains if predicate == "contains" else st_intersects
+    out = (cand.filter(pred(F.col(rg), F.col(lg)))
+           .withColumnRenamed(lg, left_geom))
     return out.withColumnRenamed(rg, right_out)
+
+
+def _broadcastable(right: DataFrame) -> bool:
+    """Spark's own test for broadcasting a join side: the optimizer's
+    size estimate is within ``spark.sql.autoBroadcastJoinThreshold``
+    (a negative threshold turns broadcasting off)."""
+    limit = (right.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    size = int(right._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    return 0 <= size <= limit
+
+
+def _broadcast_join(left: DataFrame, right: DataFrame, left_keys: list[str],
+                    predicate: str, left_geom: str, right_geom: str,
+                    right_out: str) -> DataFrame:
+    """The broadcast path of ``grid_spatial_join``.
+
+    The build rows are collected once (``toPandas``); their parsed
+    geometries and padded bboxes ride in the closure of one scalar
+    pandas UDF, which maps each probe WKB to the ordinals of the build
+    rows it matches (``_match_probes``).  Only the probe WKB crosses Arrow.  The matches
+    are exploded and joined back to the build rows — a local relation
+    keyed by ordinal — by a broadcast hash join.  The probe side is
+    hash-partitioned by ``left_keys`` (which spreads a one-file probe
+    over the cores) and deduplicated on them in the same exchange.
+    """
+    spark = right.sparkSession
+    pdf = right.toPandas()
+    geoms, boxes = _build_index(pdf[right_geom].tolist())
+    fields = [T.StructField(right_out, f.dataType, f.nullable)
+              if f.name == right_geom else f for f in right.schema.fields]
+    # an Arrow local relation, as golden's dissolve is: a parallelized
+    # list of rows would cost a cold broadcast job of its own
+    build = spark.createDataFrame(
+        pdf.assign(__bid=np.arange(len(pdf), dtype=np.int32)),
+        T.StructType(fields + [T.StructField("__bid", T.IntegerType(),
+                                             False)]))
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def matches(wkb: pd.Series) -> pd.Series:
+        return pd.Series(_match_probes(wkb.tolist(), geoms, boxes,
+                                       predicate))
+
+    probe = (left.repartition(spark.sparkContext.defaultParallelism,
+                              *left_keys)
+             .dropDuplicates(left_keys))
+    hits = probe.withColumn("__bid", F.explode(matches(F.col(left_geom))))
+    return hits.join(F.broadcast(build), "__bid").drop("__bid")
+
+
+# Relative widening of each build bbox.  It is far wider than the
+# predicates' 1e-12 boundary tolerance and the rounding of the ray-cast
+# intercept, so the bbox prefilter never drops a pair the exact test
+# would keep; a wider box only adds exact tests.
+_BBOX_PAD = 1e-9
+_POINT_WKB_HEAD = np.frombuffer(b"\x01\x01\x00\x00\x00", dtype=np.uint8)
+
+
+def _build_index(wkbs: list):
+    """Parsed build geometries (None for a null) and their padded bboxes
+    as an (n, 4) xmin/ymin/xmax/ymax array (NaN rows for nulls)."""
+    geoms = [None if b is None else G.wkb_loads(bytes(b)) for b in wkbs]
+    boxes = np.full((len(geoms), 4), np.nan)
+    for j, g in enumerate(geoms):
+        if g is not None:
+            boxes[j] = G.bounds(g)
+    pad = _BBOX_PAD * (1.0 + np.abs(boxes).max(axis=1, initial=0.0))
+    return geoms, boxes + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
+
+
+def _match_probes(wkbs: list, geoms: list, boxes, predicate: str) -> list:
+    """For each probe WKB (or None), the ordinals j of the build
+    geometries with predicate(geoms[j], probe) — ``G.contains`` or
+    ``G.intersects`` exactly.
+
+    Little-endian point WKB (21 bytes, ``01 01000000``) is decoded for
+    the whole batch in one ``np.frombuffer``.  The points are sorted by x
+    once, so each build bbox selects its candidates with two binary
+    searches and a y test, and polygonal builds decide them with
+    ``G.points_in_polygon`` (for a point probe, contains and intersects
+    are both point-in-polygon).  Every other probe — polygons,
+    big-endian WKB — is parsed and tested row by row against the build
+    bboxes it overlaps; null probes match nothing."""
+    pred = G.contains if predicate == "contains" else G.intersects
+    n = len(wkbs)
+    out = [[] for _ in range(n)]
+    point = np.fromiter((b is not None and len(b) == 21 for b in wkbs),
+                        dtype=bool, count=n)
+    idx = np.flatnonzero(point)
+    rec = np.frombuffer(b"".join([bytes(wkbs[i]) for i in idx]),
+                        dtype=np.uint8).reshape(-1, 21)
+    head = (rec[:, :5] == _POINT_WKB_HEAD).all(axis=1)
+    point[idx[~head]] = False
+    idx = idx[head]
+    xy = np.ascontiguousarray(rec[head, 5:]).view("<f8")
+    x, y = xy[:, 0], xy[:, 1]
+    order = np.argsort(x, kind="stable")
+    xs = x[order]
+    lo = np.searchsorted(xs, boxes[:, 0], side="left")
+    hi = np.searchsorted(xs, boxes[:, 2], side="right")
+    for j, g in enumerate(geoms):
+        if g is None or lo[j] >= hi[j]:
+            continue
+        c = order[lo[j]:hi[j]]
+        c = c[(y[c] >= boxes[j, 1]) & (y[c] <= boxes[j, 3])]
+        if g[0] == "Point":
+            hit = np.array([pred(g, ("Point", (float(x[i]), float(y[i]))))
+                            for i in c], dtype=bool)
+        else:
+            hit = G.points_in_polygon(x[c], y[c], g)
+        for i in idx[c[hit]].tolist():
+            out[i].append(j)
+
+    for i in np.flatnonzero(~point).tolist():
+        if wkbs[i] is None:
+            continue
+        g = G.wkb_loads(bytes(wkbs[i]))
+        x0, y0, x1, y1 = G.bounds(g)
+        near = ((boxes[:, 0] <= x1) & (boxes[:, 2] >= x0)
+                & (boxes[:, 1] <= y1) & (boxes[:, 3] >= y0))
+        out[i] = [j for j in np.flatnonzero(near).tolist()
+                  if pred(geoms[j], g)]
+    return out
 
 
 # Phase-1 combine pays one python-side union per (group, batch); when a

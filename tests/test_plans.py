@@ -48,12 +48,32 @@ def test_q06_column_pruning(spark):
     assert "l_quantity" not in read and "l_returnflag" not in read
 
 
-def test_q60_spatial_join_is_hash_join_on_cell(spark):
+def _per_row_spatial_udfs(plan: str) -> list[str]:
+    return [u for u in ("st_grid_cells", "st_contains", "st_intersects")
+            if u in plan]
+
+
+def test_q60_spatial_join_is_broadcast_point_kernel(spark):
     plan = _plan(spark, "q60_point_in_polygon")
-    # grid-bucketed spatial join = equi-join on the cell id, broadcast
-    # because the polygon side is small; never a cartesian product
+    # the 25 nation boxes are within the broadcast threshold, so each
+    # customer point meets them in one vectorized UDF pass and the matches
+    # join back by build ordinal: no per-row grid-cell UDF, no
+    # per-candidate predicate, never a cartesian product
+    assert _per_row_spatial_udfs(plan) == []
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_golden_location_join_is_broadcast_point_kernel(spark, tmp_path):
+    from spatial_data_engineering_spark.fixtures import write_fixtures
+    from spatial_data_engineering_spark.plans import golden
+
+    write_fixtures(str(tmp_path), seed=42)
+    dissolved = golden.mangrove_dissolve(spark, str(tmp_path))
+    pixels = spark.read.parquet(f"{tmp_path}/landsat_pixels.parquet")
+    df = golden.monthly_ndvi(pixels, dissolved)
+    assert _per_row_spatial_udfs(
+        df._jdf.queryExecution().executedPlan().toString()) == []
 
 
 def test_q49_broadcasts_query_side(spark):

@@ -1,9 +1,12 @@
-"""Property test: the grid-bucketed spatial join equals the brute-force
-cross join + predicate, for random rectangles and points, across cell
-sizes.  This is the invariant that makes the §4 physical strategy safe to
-tune — cell size must never change results."""
+"""Property test: the spatial join equals the brute-force cross join +
+predicate, for random rectangles and points, on both of its paths (the
+broadcast kernel and the grid) and across cell sizes.  This is the
+invariant that makes the §4 physical strategy safe to tune — neither the
+path nor the cell size may change results."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -14,6 +17,28 @@ from spatial_data_engineering_spark.functions.st_funcs import (
     st_contains, st_intersects, st_makebox)
 from spatial_data_engineering_spark.operators.spatial_join import (
     grid_spatial_join)
+
+
+PATHS = ("broadcast", "grid")
+
+
+@contextmanager
+def _forced(spark, path):
+    """Force one path of ``grid_spatial_join`` through Spark's broadcast
+    threshold (the rule that picks it): -1 turns broadcasting off, the
+    largest long admits any build side.  Restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(2 ** 63 - 1) if path == "broadcast" else "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _assert_path(df, path):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("st_grid_cells" in plan) == (path == "grid"), plan
 
 
 def _random_frames(spark, seed: int, n_pts=300, n_boxes=25):
@@ -39,18 +64,20 @@ def _random_frames(spark, seed: int, n_pts=300, n_boxes=25):
 def test_grid_join_equals_bruteforce(spark, seed, cell):
     pts, boxes = _random_frames(spark, seed)
 
-    got = (grid_spatial_join(pts, boxes, ["pt_id"], ["box_id"],
-                             predicate="contains", cell=cell)
-           .select("pt_id", "box_id"))
-
     brute = (pts.crossJoin(boxes.select("box_id",
                                         F.col("geom").alias("bgeom")))
              .filter(st_contains(F.col("bgeom"), F.col("geom")))
              .select("pt_id", "box_id"))
-
-    g = {(r.pt_id, r.box_id) for r in got.collect()}
     b = {(r.pt_id, r.box_id) for r in brute.collect()}
-    assert g == b and len(b) > 0
+
+    for path in PATHS:
+        with _forced(spark, path):
+            got = (grid_spatial_join(pts, boxes, ["pt_id"], ["box_id"],
+                                     predicate="contains", cell=cell)
+                   .select("pt_id", "box_id"))
+            _assert_path(got, path)
+            g = {(r.pt_id, r.box_id) for r in got.collect()}
+        assert g == b and len(b) > 0, path
 
 
 @pytest.mark.parametrize("cell", [5.0, None])
@@ -76,9 +103,32 @@ def test_null_or_nan_coordinates_drop_out(spark, cell):
     # the generic WKB writer is the reference for the vectorized bytes
     assert geoms[0] == G.wkb_dumps(("Point", (5.0, 5.0)))
     assert geoms[4] == G.wkb_dumps(("Point", (15.0, 15.0)))
-    got = grid_spatial_join(pts, boxes, ["pt_id"], ["box_id"],
-                            predicate="contains", cell=cell)
-    assert {(r.pt_id, r.box_id) for r in got.collect()} == {(0, 0), (4, 1)}
+    for path in PATHS:
+        with _forced(spark, path):
+            got = grid_spatial_join(pts, boxes, ["pt_id"], ["box_id"],
+                                    predicate="contains", cell=cell)
+            _assert_path(got, path)
+            assert ({(r.pt_id, r.box_id) for r in got.collect()}
+                    == {(0, 0), (4, 1)}), path
+
+
+def test_empty_or_null_build_side(spark):
+    """An empty build side joins to nothing, and a null build geometry
+    matches nothing, on both paths."""
+    pts, boxes = _random_frames(spark, 4, n_pts=50, n_boxes=5)
+    nulled = boxes.select(
+        "box_id", F.when(F.col("box_id") == 0, None)
+        .otherwise(F.col("geom")).alias("geom"))
+    for path in PATHS:
+        with _forced(spark, path):
+            empty = grid_spatial_join(pts, boxes.filter("box_id < 0"),
+                                      ["pt_id"], ["box_id"],
+                                      predicate="contains", cell=5.0)
+            _assert_path(empty, path)
+            assert empty.count() == 0, path
+            got = grid_spatial_join(pts, nulled, ["pt_id"], ["box_id"],
+                                    predicate="intersects", cell=5.0)
+            assert 0 not in {r.box_id for r in got.collect()}, path
 
 
 def test_grid_join_cell_size_invariance(spark):
@@ -139,14 +189,17 @@ def test_grid_join_polygons_intersects_equals_bruteforce(spark):
     a = boxes_a.select(F.col("box_id").alias("a_id"), "geom")
     b = boxes_b.select(F.col("box_id").alias("b_id"), "geom")
 
-    got = (grid_spatial_join(a, b, ["a_id"], ["b_id"],
-                             predicate="intersects", cell=10.0)
-           .select("a_id", "b_id"))
     brute = (a.crossJoin(b.select("b_id", F.col("geom").alias("g2")))
              .filter(st_intersects(F.col("g2"), F.col("geom")))
              .select("a_id", "b_id"))
-    assert ({(r.a_id, r.b_id) for r in got.collect()}
-            == {(r.a_id, r.b_id) for r in brute.collect()})
+    want = {(r.a_id, r.b_id) for r in brute.collect()}
+    for path in PATHS:
+        with _forced(spark, path):
+            got = (grid_spatial_join(a, b, ["a_id"], ["b_id"],
+                                     predicate="intersects", cell=10.0)
+                   .select("a_id", "b_id"))
+            _assert_path(got, path)
+            assert {(r.a_id, r.b_id) for r in got.collect()} == want, path
 
 
 def test_union_agg_partitioning_invariant(spark):

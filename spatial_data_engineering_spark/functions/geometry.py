@@ -23,6 +23,7 @@ from __future__ import annotations
 import bisect
 import math
 import struct
+from typing import NamedTuple
 
 import numpy as np
 
@@ -328,47 +329,120 @@ def _point_in_ring(x: float, y: float, ring) -> int:
     return 1 if inside else 0
 
 
-def points_in_polygon(xs, ys, geom):
-    """``point_in_polygon`` over numpy coordinate arrays: per point the
-    same IEEE operations in the same order (``_points_in_ring``), and
-    parts and holes decided in the same order, so each element equals
-    the scalar result exactly."""
-    out = np.zeros(len(xs), dtype=bool)
-    for rings in _iter_polys(geom):
-        if not rings:
-            continue
-        idx = np.flatnonzero(~out)  # points no earlier part has taken
-        for i, ring in enumerate(rings):
-            if not len(idx):
-                break
-            hit = _points_in_ring(xs[idx], ys[idx], ring)
-            out[idx[hit == 2]] = True  # on any ring's boundary -> inside
-            # a shell keeps the points inside it; a hole drops them
-            idx = idx[hit == (1 if i == 0 else 0)]
-        out[idx] = True
+class RingTable(NamedTuple):
+    """The rings of a list of geometries flattened for
+    ``points_in_polygons``.  Geometry j owns rings
+    ``geom_ring0[j]:geom_ring0[j + 1]`` and edges
+    ``geom_edge0[j]:geom_edge0[j + 1]``, each part's shell before its
+    holes, in the order ``point_in_polygon`` visits them; a point or a
+    None owns none."""
+    edges: np.ndarray       # (E, 4) x1, y1, x2, y2 of each closed ring
+    edge_ylo: np.ndarray    # (E,) min(y1, y2) - 1e-12
+    edge_yhi: np.ndarray    # (E,) max(y1, y2) + 1e-12
+    edge_ring: np.ndarray   # (E,) ring of each edge
+    ring_shell: np.ndarray  # (R,) the ring is its part's shell
+    geom_edge0: np.ndarray  # (n + 1,) edge offsets
+    geom_ring0: np.ndarray  # (n + 1,) ring offsets
+
+
+def ring_table(geoms) -> RingTable:
+    """The ``RingTable`` of a list of geometries (polygonal, points or
+    None)."""
+    edges, edge_ring, ring_shell = [], [], []
+    geom_edge0, geom_ring0 = [0], [0]
+    for g in geoms:
+        if g is not None and g[0] != "Point":
+            for rings in _iter_polys(g):
+                for i, ring in enumerate(rings):
+                    r = list(ring)
+                    if r[0] != r[-1]:  # closed as _point_in_ring closes it
+                        r.append(r[0])
+                    edges += [(x1, y1, x2, y2)
+                              for (x1, y1), (x2, y2) in zip(r, r[1:])]
+                    edge_ring += [len(ring_shell)] * (len(r) - 1)
+                    ring_shell.append(i == 0)
+        geom_edge0.append(len(edges))
+        geom_ring0.append(len(ring_shell))
+    e = np.array(edges, dtype=np.float64).reshape(-1, 4)
+    return RingTable(e, np.minimum(e[:, 1], e[:, 3]) - 1e-12,
+                     np.maximum(e[:, 1], e[:, 3]) + 1e-12,
+                     np.array(edge_ring, dtype=np.int64),
+                     np.array(ring_shell, dtype=bool),
+                     np.array(geom_edge0, dtype=np.int64),
+                     np.array(geom_ring0, dtype=np.int64))
+
+
+# (point, edge) rows ``points_in_polygons`` evaluates at once: ~40 MB of
+# float64 temporaries per chunk
+_PIP_CHUNK = 1 << 19
+
+
+def points_in_polygons(xs, ys, which, table: RingTable):
+    """``point_in_polygon(xs[k], ys[k], geoms[which[k]])`` for every k,
+    with ``table = ring_table(geoms)``: each (point, edge) row is one
+    element of one numpy pass, so the cost is the edges of the pairs
+    asked about, not of the whole table.  Per row the same IEEE
+    operations in the same order as ``_point_in_ring``, and rings and
+    parts decided as ``point_in_polygon`` decides them, so each result
+    equals the scalar one exactly."""
+    which = np.asarray(which, dtype=np.int64)
+    ne = table.geom_edge0[which + 1] - table.geom_edge0[which]
+    ends = np.cumsum(ne)
+    out = np.zeros(len(which), dtype=bool)
+    k = 0
+    while k < len(which):
+        base = ends[k - 1] if k else 0
+        stop = max(k + 1, int(np.searchsorted(ends, base + _PIP_CHUNK,
+                                              side="right")))
+        out[k:stop] = _pip_rows(xs[k:stop], ys[k:stop], which[k:stop],
+                                table)
+        k = stop
     return out
 
 
-def _points_in_ring(xs, ys, ring):
-    """``_point_in_ring`` over numpy arrays: 0 outside, 1 inside, 2 on
-    boundary."""
-    r = list(ring)
-    if r[0] != r[-1]:
-        r.append(r[0])
-    inside = np.zeros(len(xs), dtype=bool)
-    edge = np.zeros(len(xs), dtype=bool)
-    for i in range(len(r) - 1):
-        x1, y1 = r[i]
-        x2, y2 = r[i + 1]
-        cross = (x2 - x1) * (ys - y1) - (y2 - y1) * (xs - x1)
-        edge |= ((np.abs(cross) < 1e-12 * max(1.0, abs(x2 - x1) + abs(y2 - y1)))
-                 & (min(x1, x2) - 1e-12 <= xs) & (xs <= max(x1, x2) + 1e-12)
-                 & (min(y1, y2) - 1e-12 <= ys) & (ys <= max(y1, y2) + 1e-12))
-        if y1 != y2:  # a level edge never straddles the ray
-            with np.errstate(over="ignore"):  # inf, as Python's float gives
-                xin = x1 + (ys - y1) * (x2 - x1) / (y2 - y1)
-            inside ^= ((y1 > ys) != (y2 > ys)) & (xin > xs)
-    return np.where(edge, 2, inside.astype(np.int8))
+def _pip_rows(xs, ys, which, t: RingTable):
+    n = len(which)
+    e0 = t.geom_edge0[which]
+    ne = t.geom_edge0[which + 1] - e0
+    r0 = t.geom_ring0[which]
+    nr = t.geom_ring0[which + 1] - r0
+    pair = np.repeat(np.arange(n), ne)
+    e = np.repeat(e0 - (np.cumsum(ne) - ne), ne) + np.arange(len(pair))
+    # only an edge whose y span (with the boundary tolerance) holds the
+    # point can have it on its boundary or cross its ray
+    y = ys[pair]
+    near = (t.edge_ylo[e] <= y) & (y <= t.edge_yhi[e])
+    pair, e, y = pair[near], e[near], y[near]
+    x = xs[pair]
+    x1, y1, x2, y2 = t.edges[e].T
+    cross = (x2 - x1) * (y - y1) - (y2 - y1) * (x - x1)
+    on_edge = ((np.abs(cross) < 1e-12 * np.maximum(1.0, np.abs(x2 - x1)
+                                                    + np.abs(y2 - y1)))
+               & (np.minimum(x1, x2) - 1e-12 <= x)
+               & (x <= np.maximum(x1, x2) + 1e-12))
+    with np.errstate(all="ignore"):  # level edges: masked by the straddle
+        xin = x1 + (y - y1) * (x2 - x1) / (y2 - y1)
+    flip = ((y1 > y) != (y2 > y)) & (xin > x)
+    # one row per (point, ring): 2 on its boundary, else the ray parity
+    rbase = np.cumsum(nr) - nr
+    seg = (rbase - r0)[pair] + t.edge_ring[e]
+    nseg = int(nr.sum())
+    status = np.where(np.bincount(seg, on_edge, nseg) > 0, 2,
+                      np.bincount(seg, flip, nseg).astype(np.int64) % 2)
+    ring = np.repeat(r0 - rbase, nr) + np.arange(nseg)
+    shell = t.ring_shell[ring]
+    part = np.cumsum(shell) - 1
+    # a part holds the point on its shell's boundary, or inside its shell
+    # unless the first hole the point is not outside of has it inside
+    hole = np.zeros(int(shell.sum()), dtype=np.int64)
+    h = np.flatnonzero(~shell & (status != 0))
+    first_part, first = np.unique(part[h], return_index=True)
+    hole[first_part] = status[h[first]]
+    s0 = status[shell]
+    inside = (s0 == 2) | ((s0 == 1) & (hole != 1))
+    out = np.zeros(n, dtype=bool)
+    out[np.repeat(np.arange(n), nr)[shell][inside]] = True
+    return out
 
 
 def _segments(rings):

@@ -6,29 +6,40 @@ join) with the reference's two spatial predicates (ST_Contains /
 ST_Intersects).  It picks its path by Spark's own broadcast rule:
 
 * **broadcast** (build side's optimizer size estimate within
-  ``spark.sql.autoBroadcastJoinThreshold``): the build rows are collected once, and one scalar pandas UDF tests
-  each probe batch against all of them in one vectorized pass — point
-  WKB decoded by ``np.frombuffer``, bbox candidates by binary search on
-  the x-sorted points, the exact test by ``G.points_in_polygon`` — then
-  the matches join the build rows back by ordinal.  Only the probe WKB
-  crosses Arrow; there is no per-row cell UDF and no per-candidate
-  refine.  The probe side is hash-partitioned by its keys and
-  deduplicated on them in that one exchange (one probe row per left
-  key).
-* **grid** (a build side too big to collect): each side emits the grid
+  ``spark.sql.autoBroadcastJoinThreshold``): the build rows are
+  collected once, and one scalar pandas UDF tests each probe batch
+  against them — point WKB decoded by ``np.frombuffer``, (point, build
+  row) bbox candidates by binary search on the x-sorted points, and all
+  candidates' exact tests in one numpy pass over their polygons' edges
+  (``G.points_in_polygons``) — then the matches join the build rows back
+  by ordinal.  Only the probe WKB crosses Arrow; there is no per-row
+  cell UDF and no per-candidate Python refine, and a batch's cost
+  follows its candidates' edges, not the build size.  The probe side is
+  hash-partitioned by its keys and deduplicated on them in that one
+  exchange (one probe row per left key).
+* **grid** (a build side over the threshold): each side emits the grid
   cells its bbox overlaps, candidates come from an **equi-join on the
   cell id** (``_grid_candidates``, shuffle-friendly integer-grid keys),
   duplicate candidate pairs from multi-cell spans are dropped (one
   candidate per key pair), and the exact predicate pandas UDF refines
   them.
 
+The threshold is the rule Spark uses to broadcast a hash-join side, so
+the broadcast path collects nothing Spark would not broadcast itself.
+Measured on 4 cores (SCALE_NOTES.md, "Broadcast point-in-polygon
+kernel"): 1M points against 1,000 to 80,000 star polygons of 32
+vertices, the broadcast path took 4.7-11.3 s and the grid path
+23.2-28.6 s; 80,000 such polygons are a 9.3 MB estimate, just under the
+10 MB default.
+
 Scale notes (100 TB): the broadcast path scales with the probe side
-alone (no shuffle beyond the probe's dedupe exchange).  On the grid
-path cell size trades shuffle fan-out (small cells -> more duplicate
-candidates) against refine selectivity (big cells -> more false
-candidates); skew from one huge polygon overlapping many cells is
-bounded by the explode (its candidates spread across many
-cell-partitions — the opposite of key skew).
+alone (no shuffle beyond the probe's dedupe exchange, whose partition
+count AQE sizes from the probe).  On the grid path cell size trades
+shuffle fan-out (small cells -> more duplicate candidates) against
+refine selectivity (big cells -> more false candidates); skew from one
+huge polygon overlapping many cells is bounded by the explode (its
+candidates spread across many cell-partitions — the opposite of key
+skew).
 
 ``union_agg`` implements E1 (ST_Union aggregate, load_report.py:472) in
 two phases, exactly like a built-in aggregate with a map-side combiner:
@@ -41,8 +52,11 @@ no single pandas group ever materializes a whole 100 TB group's rows.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -121,11 +135,12 @@ def grid_spatial_join(
     * **broadcast** — when the right (build) side's optimizer size
       estimate is within ``spark.sql.autoBroadcastJoinThreshold`` (the
       rule Spark uses to broadcast a join side), the build rows are
-      collected once and each probe batch is tested against all of them
-      in one vectorized pass (``_broadcast_join``);
+      collected once and each probe batch is tested against them in one
+      vectorized pass (``_broadcast_join``).  This path is eager:
+      building the join runs the build side's plan once;
     * **grid** — otherwise (or with the threshold set to -1), both sides
       emit the grid cells their bboxes overlap, candidates come from the
-      cell-id equi-join, and the exact predicate refines them.
+      cell-id equi-join, and the exact predicate refines them.  Lazy.
 
     left_keys/right_keys must uniquely identify rows on their side; the
     output holds at most one row per (left key, right key) pair: the
@@ -176,37 +191,42 @@ def _broadcast_join(left: DataFrame, right: DataFrame, left_keys: list[str],
                     right_out: str) -> DataFrame:
     """The broadcast path of ``grid_spatial_join``.
 
-    The build rows are collected once (``toPandas``); their parsed
-    geometries and padded bboxes ride in the closure of one scalar
-    pandas UDF, which maps each probe WKB to the ordinals of the build
-    rows it matches (``_match_probes``).  Only the probe WKB crosses Arrow.  The matches
-    are exploded and joined back to the build rows — a local relation
-    keyed by ordinal — by a broadcast hash join.  The probe side is
-    hash-partitioned by ``left_keys`` (which spreads a one-file probe
-    over the cores) and deduplicated on them in the same exchange.
+    Eager: building it runs the build side's plan once, to collect its
+    rows through Arrow (``toArrow``, which keeps nulls of every type).
+    Their index (``_Build``) rides in the closure of one scalar pandas
+    UDF, which maps each probe WKB to the ordinals of the build rows it
+    matches (``_match_probes``); only the probe WKB crosses Arrow.  The
+    matches are exploded and joined back to the build rows, a local
+    relation keyed by ordinal, by a broadcast hash join.  The probe side
+    is hash-partitioned by ``left_keys`` (no fixed count:
+    ``spark.sql.shuffle.partitions``, which AQE coalesces) and
+    deduplicated on them in that one exchange, which also spreads a
+    one-file probe over the cores.
     """
     spark = right.sparkSession
-    pdf = right.toPandas()
-    geoms, boxes = _build_index(pdf[right_geom].tolist())
+    table = right.toArrow()
+    build = _Build(table.column(right_geom).to_pylist())
     fields = [T.StructField(right_out, f.dataType, f.nullable)
               if f.name == right_geom else f for f in right.schema.fields]
+    bid = pa.array(np.arange(table.num_rows, dtype=np.int32))
     # an Arrow local relation, as golden's dissolve is: a parallelized
     # list of rows would cost a cold broadcast job of its own
-    build = spark.createDataFrame(
-        pdf.assign(__bid=np.arange(len(pdf), dtype=np.int32)),
+    rows = spark.createDataFrame(
+        table.rename_columns([f.name for f in fields])
+        .append_column(pa.field("__bid", pa.int32(), False), bid),
         T.StructType(fields + [T.StructField("__bid", T.IntegerType(),
                                              False)]))
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def matches(wkb: pd.Series) -> pd.Series:
-        return pd.Series(_match_probes(wkb.tolist(), geoms, boxes,
-                                       predicate))
+        return pd.Series(_match_probes(wkb.tolist(), build, predicate))
 
-    probe = (left.repartition(spark.sparkContext.defaultParallelism,
-                              *left_keys)
-             .dropDuplicates(left_keys))
-    hits = probe.withColumn("__bid", F.explode(matches(F.col(left_geom))))
-    return hits.join(F.broadcast(build), "__bid").drop("__bid")
+    # the exchange under the dedupe also keeps it from merging with an
+    # aggregate on the same keys below it (golden's distinct locations),
+    # which would evaluate the probe's geometry on the pre-distinct rows
+    hits = (left.repartition(*left_keys).dropDuplicates(left_keys)
+            .withColumn("__bid", F.explode(matches(F.col(left_geom)))))
+    return hits.join(F.broadcast(rows), "__bid").drop("__bid")
 
 
 # Relative widening of each build bbox.  It is far wider than the
@@ -215,36 +235,54 @@ def _broadcast_join(left: DataFrame, right: DataFrame, left_keys: list[str],
 # would keep; a wider box only adds exact tests.
 _BBOX_PAD = 1e-9
 _POINT_WKB_HEAD = np.frombuffer(b"\x01\x01\x00\x00\x00", dtype=np.uint8)
+# (probe, build) bbox candidates ``_bbox_pairs`` expands at once
+_PAIR_CHUNK = 1 << 20
 
 
-def _build_index(wkbs: list):
-    """Parsed build geometries (None for a null) and their padded bboxes
-    as an (n, 4) xmin/ymin/xmax/ymax array (NaN rows for nulls)."""
-    geoms = [None if b is None else G.wkb_loads(bytes(b)) for b in wkbs]
-    boxes = np.full((len(geoms), 4), np.nan)
-    for j, g in enumerate(geoms):
-        if g is not None:
-            boxes[j] = G.bounds(g)
-    pad = _BBOX_PAD * (1.0 + np.abs(boxes).max(axis=1, initial=0.0))
-    return geoms, boxes + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
+class _Build:
+    """The collected build side as ``_match_probes`` reads it: its WKB,
+    padded bboxes (an (n, 4) xmin/ymin/xmax/ymax array, NaN rows for
+    nulls) and ``G.ring_table``.  The parsed geometries serve only the
+    per-pair fallback (point build rows, probes that are not little-endian
+    points); pickling drops them, so the UDF closure ships numpy arrays
+    and bytes, and a worker parses them again only if it needs them."""
+
+    def __init__(self, wkbs: list):
+        self.wkbs = [None if b is None else bytes(b) for b in wkbs]
+        boxes = np.full((len(wkbs), 4), np.nan)
+        for j, g in enumerate(self.geoms):
+            if g is not None:
+                boxes[j] = G.bounds(g)
+        pad = _BBOX_PAD * (1.0 + np.abs(boxes).max(axis=1, initial=0.0))
+        self.boxes = boxes + pad[:, None] * np.array([-1.0, -1.0, 1.0, 1.0])
+        self.rings = G.ring_table(self.geoms)
+        self.is_point = np.array([g is not None and g[0] == "Point"
+                                  for g in self.geoms], dtype=bool)
+
+    @functools.cached_property
+    def geoms(self) -> list:
+        return [None if b is None else G.wkb_loads(b) for b in self.wkbs]
+
+    def __getstate__(self):
+        return {k: v for k, v in self.__dict__.items() if k != "geoms"}
 
 
-def _match_probes(wkbs: list, geoms: list, boxes, predicate: str) -> list:
-    """For each probe WKB (or None), the ordinals j of the build
-    geometries with predicate(geoms[j], probe) — ``G.contains`` or
+def _match_probes(wkbs: list, build: _Build, predicate: str) -> list:
+    """For each probe WKB (or None), the ordinals j, ascending, of the
+    build geometries with predicate(geoms[j], probe) — ``G.contains`` or
     ``G.intersects`` exactly.
 
     Little-endian point WKB (21 bytes, ``01 01000000``) is decoded for
-    the whole batch in one ``np.frombuffer``.  The points are sorted by x
-    once, so each build bbox selects its candidates with two binary
-    searches and a y test, and polygonal builds decide them with
-    ``G.points_in_polygon`` (for a point probe, contains and intersects
-    are both point-in-polygon).  Every other probe — polygons,
-    big-endian WKB — is parsed and tested row by row against the build
-    bboxes it overlaps; null probes match nothing."""
+    the whole batch in one ``np.frombuffer``; ``_bbox_pairs`` finds the
+    (point, build row) bbox candidates, and ``G.points_in_polygons``
+    decides those with a polygonal build row in one pass over their
+    edges (for a point probe, contains and intersects are both
+    point-in-polygon), so the cost follows the candidates, not the build
+    size.  Point build rows, and every other probe (polygons, big-endian
+    WKB), are tested pair by pair with the predicate after the same bbox
+    test; null probes match nothing."""
     pred = G.contains if predicate == "contains" else G.intersects
     n = len(wkbs)
-    out = [[] for _ in range(n)]
     point = np.fromiter((b is not None and len(b) == 21 for b in wkbs),
                         dtype=bool, count=n)
     idx = np.flatnonzero(point)
@@ -255,33 +293,56 @@ def _match_probes(wkbs: list, geoms: list, boxes, predicate: str) -> list:
     idx = idx[head]
     xy = np.ascontiguousarray(rec[head, 5:]).view("<f8")
     x, y = xy[:, 0], xy[:, 1]
-    order = np.argsort(x, kind="stable")
-    xs = x[order]
-    lo = np.searchsorted(xs, boxes[:, 0], side="left")
-    hi = np.searchsorted(xs, boxes[:, 2], side="right")
-    for j, g in enumerate(geoms):
-        if g is None or lo[j] >= hi[j]:
-            continue
-        c = order[lo[j]:hi[j]]
-        c = c[(y[c] >= boxes[j, 1]) & (y[c] <= boxes[j, 3])]
-        if g[0] == "Point":
-            hit = np.array([pred(g, ("Point", (float(x[i]), float(y[i]))))
-                            for i in c], dtype=bool)
-        else:
-            hit = G.points_in_polygon(x[c], y[c], g)
-        for i in idx[c[hit]].tolist():
-            out[i].append(j)
+    i, j = _bbox_pairs(x, y, build.boxes)
+    poly = ~build.is_point[j]
+    hit = np.zeros(len(i), dtype=bool)
+    hit[poly] = G.points_in_polygons(x[i[poly]], y[i[poly]], j[poly],
+                                     build.rings)
+    for k in np.flatnonzero(~poly).tolist():
+        hit[k] = pred(build.geoms[j[k]],
+                      ("Point", (float(x[i[k]]), float(y[i[k]]))))
+    out = [[] for _ in range(n)]
+    for p, b in zip(idx[i[hit]].tolist(), j[hit].tolist()):
+        out[p].append(b)
 
-    for i in np.flatnonzero(~point).tolist():
-        if wkbs[i] is None:
+    boxes = build.boxes
+    for p in np.flatnonzero(~point).tolist():
+        if wkbs[p] is None:
             continue
-        g = G.wkb_loads(bytes(wkbs[i]))
+        g = G.wkb_loads(bytes(wkbs[p]))
         x0, y0, x1, y1 = G.bounds(g)
         near = ((boxes[:, 0] <= x1) & (boxes[:, 2] >= x0)
                 & (boxes[:, 1] <= y1) & (boxes[:, 3] >= y0))
-        out[i] = [j for j in np.flatnonzero(near).tolist()
-                  if pred(geoms[j], g)]
+        out[p] = [b for b in np.flatnonzero(near).tolist()
+                  if pred(build.geoms[b], g)]
     return out
+
+
+def _bbox_pairs(x, y, boxes):
+    """(point, box) index pairs with the point inside the box, ordered by
+    box: the points are sorted by x once, each box takes its x range by
+    two binary searches, and a y test keeps the pairs inside it.  The
+    x-range pairs are expanded ``_PAIR_CHUNK`` at a time."""
+    order = np.argsort(x, kind="stable")
+    xs = x[order]
+    lo = np.searchsorted(xs, boxes[:, 0], side="left")
+    cnt = np.maximum(np.searchsorted(xs, boxes[:, 2], side="right") - lo, 0)
+    ends = np.cumsum(cnt)
+    pi, pj = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+    a = 0
+    while a < len(boxes):
+        base = ends[a - 1] if a else 0
+        b = max(a + 1, int(np.searchsorted(ends, base + _PAIR_CHUNK,
+                                           side="right")))
+        c = cnt[a:b]
+        j = np.repeat(np.arange(a, b), c)
+        i = order[np.repeat(lo[a:b] - (np.cumsum(c) - c), c)
+                  + np.arange(len(j))]
+        keep = (y[i] >= boxes[j, 1]) & (y[i] <= boxes[j, 3])
+        pi.append(i[keep])
+        pj.append(j[keep])
+        a = b
+    return np.concatenate(pi), np.concatenate(pj)
 
 
 # Phase-1 combine pays one python-side union per (group, batch); when a

@@ -1,9 +1,10 @@
 """Differential tests for the broadcast join's point-in-polygon kernel:
-``G.points_in_polygon`` must equal the scalar ``G.point_in_polygon`` for
-every point, and ``_match_probes`` must equal the per-pair predicate
-(``G.contains`` / ``G.intersects``) for every probe and build row —
-on vertices, edges, grid lines, concave rings, holes and multipolygons,
-and for the probes the vectorized point decode does not take."""
+``G.points_in_polygons`` must equal the scalar ``G.point_in_polygon``
+for every (point, geometry) pair, and ``_match_probes`` must equal the
+per-pair predicate (``G.contains`` / ``G.intersects``) for every probe
+and build row — on vertices, edges, grid lines, concave rings, holes
+and multipolygons, and for the probes the vectorized point decode does
+not take."""
 
 from __future__ import annotations
 
@@ -14,8 +15,9 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from spatial_data_engineering_spark.functions import geometry as G
+from spatial_data_engineering_spark.operators import spatial_join as SJ
 from spatial_data_engineering_spark.operators.spatial_join import (
-    _build_index, _match_probes)
+    _Build, _match_probes)
 
 # a concave (notched) ring, a box with a clockwise hole and an island
 # part inside that hole, and a triangle — laid out once near the origin
@@ -68,16 +70,27 @@ def _probe_points(geoms, seed):
     return [(float(x), float(y)) for x, y in pts]
 
 
+def _pip(pts, which, geoms):
+    xs = np.array([p[0] for p in pts], dtype=np.float64)
+    ys = np.array([p[1] for p in pts], dtype=np.float64)
+    return G.points_in_polygons(xs, ys, np.asarray(which, dtype=np.int64),
+                                G.ring_table(geoms)).tolist()
+
+
+@pytest.mark.parametrize("chunk", [1 << 19, 7])
 @pytest.mark.parametrize("dx,dy", [(0.0, 0.0), (476400.0, 9873300.0)])
-def test_points_in_polygon_equals_scalar(dx, dy):
+def test_points_in_polygons_equals_scalar(dx, dy, chunk, monkeypatch):
+    monkeypatch.setattr(G, "_PIP_CHUNK", chunk)
     geoms = _geoms(dx, dy)
     pts = _probe_points(geoms, seed=int(dx) % 97)
-    xs = np.array([p[0] for p in pts])
-    ys = np.array([p[1] for p in pts])
-    for g in geoms:
+    for j, g in enumerate(geoms):
         want = [G.point_in_polygon(x, y, g) for x, y in pts]
-        assert G.points_in_polygon(xs, ys, g).tolist() == want
+        assert _pip(pts, [j] * len(pts), geoms) == want
         assert any(want) and not all(want)
+    # every pair at once, the geometries interleaved
+    which = [k % len(geoms) for k in range(len(pts))]
+    assert _pip(pts, which, geoms) == [
+        G.point_in_polygon(x, y, geoms[j]) for (x, y), j in zip(pts, which)]
 
 
 def _brute(wkbs, build, predicate):
@@ -88,9 +101,12 @@ def _brute(wkbs, build, predicate):
             for w in wkbs]
 
 
+@pytest.mark.parametrize("pair_chunk", [1 << 20, 5])
 @pytest.mark.parametrize("predicate", ["contains", "intersects"])
 @pytest.mark.parametrize("dx,dy", [(0.0, 0.0), (476400.0, 9873300.0)])
-def test_match_probes_equals_per_pair_predicate(predicate, dx, dy):
+def test_match_probes_equals_per_pair_predicate(predicate, dx, dy,
+                                                pair_chunk, monkeypatch):
+    monkeypatch.setattr(SJ, "_PAIR_CHUNK", pair_chunk)
     geoms = _geoms(dx, dy)
     build = geoms + [None]  # a null build geometry matches nothing
     pts = _probe_points(geoms, seed=5)
@@ -106,7 +122,7 @@ def test_match_probes_equals_per_pair_predicate(predicate, dx, dy):
              G.wkb_dumps(G.make_box(-5.0 + dx, -5.0 + dy,
                                     40.0 + dx, 40.0 + dy))]
     want = _brute(wkbs, build, predicate)
-    got = _match_probes(wkbs, *_build_index(
+    got = _match_probes(wkbs, _Build(
         [None if g is None else G.wkb_dumps(g) for g in build]), predicate)
     assert got == want
     assert sum(map(len, want[-6:])) > 0  # the slow-path probes match
@@ -117,26 +133,29 @@ def test_match_probes_empty_build_and_all_null(predicate):
     pts = [G.wkb_dumps(("Point", (1.0, 2.0))),
            struct.pack(">BIdd", 0, 1, 1.0, 2.0), None,
            G.wkb_dumps(G.make_box(0.0, 0.0, 1.0, 1.0))]
-    assert _match_probes(pts, *_build_index([]), predicate) == [[]] * 4
-    build = _build_index([G.wkb_dumps(G.make_box(0.0, 0.0, 5.0, 5.0))])
-    assert _match_probes([None, None], *build, predicate) == [[], []]
-    assert _match_probes([], *build, predicate) == []
+    assert _match_probes(pts, _Build([]), predicate) == [[]] * 4
+    build = _Build([G.wkb_dumps(G.make_box(0.0, 0.0, 5.0, 5.0))])
+    assert _match_probes([None, None], build, predicate) == [[], []]
+    assert _match_probes([], build, predicate) == []
 
 
 coord = st.floats(min_value=-50, max_value=50, allow_nan=False,
                   allow_infinity=False)
 
 
+ring = st.lists(st.tuples(coord, coord), min_size=3, max_size=9)
+
+
 @settings(max_examples=60, deadline=None)
-@given(ring=st.lists(st.tuples(coord, coord), min_size=3, max_size=9),
+@given(parts=st.lists(st.lists(ring, min_size=1, max_size=3), min_size=1,
+                      max_size=3),
        pts=st.lists(st.tuples(coord, coord), min_size=1, max_size=40))
-def test_points_in_polygon_equals_scalar_random_rings(ring, pts):
-    """Arbitrary (possibly self-intersecting) rings: the vectorized
-    kernel copies the scalar one, so it agrees even where the geometry is
-    invalid.  The ring's own vertices are probed too."""
-    g = ("Polygon", [ring + [ring[0]]])
-    pts = pts + ring
-    xs = np.array([p[0] for p in pts])
-    ys = np.array([p[1] for p in pts])
+def test_points_in_polygons_equals_scalar_random_rings(parts, pts):
+    """Arbitrary (possibly self-intersecting, overlapping) shells and
+    holes in one or more parts: the vectorized kernel decides rings and
+    parts in the scalar one's order, so it agrees even where the
+    geometry is invalid.  Every ring's own vertices are probed too."""
+    g = ("MultiPolygon", [[r + [r[0]] for r in rings] for rings in parts])
+    pts = pts + [p for rings in parts for r in rings for p in r]
     want = [G.point_in_polygon(x, y, g) for x, y in pts]
-    assert G.points_in_polygon(xs, ys, g).tolist() == want
+    assert _pip(pts, [0] * len(pts), [g]) == want

@@ -74,6 +74,11 @@ def test_golden_location_join_is_broadcast_point_kernel(spark, tmp_path):
     df = golden.monthly_ndvi(pixels, dissolved)
     assert _per_row_spatial_udfs(
         df._jdf.queryExecution().executedPlan().toString()) == []
+    # st_point runs on the distinct locations, not on every pixel row:
+    # the join's probe dedupe does not merge with the distinct below it
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    below = plan[plan.index("st_point"):]
+    assert "Aggregate" in below[:below.index("Relation")], plan
 
 
 def test_q49_broadcasts_query_side(spark):

@@ -11,6 +11,7 @@ from contextlib import contextmanager
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spatial_data_engineering_spark.functions import geometry as G
 from spatial_data_engineering_spark.functions.st_funcs import (
@@ -112,23 +113,40 @@ def test_null_or_nan_coordinates_drop_out(spark, cell):
                     == {(0, 0), (4, 1)}), path
 
 
-def test_empty_or_null_build_side(spark):
-    """An empty build side joins to nothing, and a null build geometry
-    matches nothing, on both paths."""
-    pts, boxes = _random_frames(spark, 4, n_pts=50, n_boxes=5)
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_empty_or_null_build_side(spark, arrow):
+    """An empty build side joins to nothing, a null build geometry
+    matches nothing, and a nullable build column keeps its nulls and
+    its type, on both paths, with or without Arrow conversion in the
+    session."""
+    pts, boxes = _random_frames(spark, 4, n_pts=2000, n_boxes=5)
     nulled = boxes.select(
         "box_id", F.when(F.col("box_id") == 0, None)
-        .otherwise(F.col("geom")).alias("geom"))
-    for path in PATHS:
-        with _forced(spark, path):
-            empty = grid_spatial_join(pts, boxes.filter("box_id < 0"),
-                                      ["pt_id"], ["box_id"],
-                                      predicate="contains", cell=5.0)
-            _assert_path(empty, path)
-            assert empty.count() == 0, path
-            got = grid_spatial_join(pts, nulled, ["pt_id"], ["box_id"],
-                                    predicate="intersects", cell=5.0)
-            assert 0 not in {r.box_id for r in got.collect()}, path
+        .otherwise(F.col("geom")).alias("geom"),
+        F.when(F.col("box_id") % 2 == 0, F.col("box_id").cast("int"))
+        .alias("tag"))
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        for path in PATHS:
+            with _forced(spark, path):
+                empty = grid_spatial_join(pts, boxes.filter("box_id < 0"),
+                                          ["pt_id"], ["box_id"],
+                                          predicate="contains", cell=5.0)
+                _assert_path(empty, path)
+                assert empty.count() == 0, path
+                got = grid_spatial_join(pts, nulled, ["pt_id"], ["box_id"],
+                                        predicate="intersects", cell=5.0)
+                _assert_path(got, path)
+                assert got.schema["tag"].dataType == T.IntegerType()
+                rows = got.select("box_id", "tag").collect()
+                assert 0 not in {r.box_id for r in rows}, path
+                assert {r.box_id % 2 for r in rows} == {0, 1}, path
+                assert all(r.tag == (r.box_id if r.box_id % 2 == 0 else None)
+                           for r in rows), path
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_grid_join_cell_size_invariance(spark):

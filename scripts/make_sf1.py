@@ -64,7 +64,7 @@ STRIDES = {
     "documents": {"doc_id": 5_000},
 }
 
-# output file counts: big facts get enough splits for local[32] scans
+# output file counts: big facts get enough splits for wide local scans
 N_FILES = {"lineitem": 32, "orders": 16, "events": 16, "documents": 8,
            "customer": 8, "part": 8}
 
@@ -142,15 +142,11 @@ def main() -> None:
                                                            "testdata_sf1"))
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (SparkSession.builder.master("local[32]").appName("make-sf1")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "16g")
-             .getOrCreate())
+    from spatial_data_engineering_spark.session import build_session
+
+    spark = build_session(app_name="make-sf1")
     spark.sparkContext.setLogLevel("ERROR")
 
     import shutil

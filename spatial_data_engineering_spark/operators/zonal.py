@@ -33,16 +33,6 @@ from .spatial_join import grid_spatial_join, union_agg
 QUERIES, ORACLES, query = registrar()
 
 
-# Grid pitch for joins whose build side is the _nation_boxes fixture:
-# every box has extent _NATION_BOX_SIDE by construction (the 5x5 layout
-# below), so adaptive_cell's p95-extent/2 is exactly SIDE/2 — deriving it
-# here skips the per-query percentile job adaptive_cell runs (r16
-# optimization: ~0.5 s/query at sf0.1; result sets are cell-invariant by
-# the exact-refine contract, pinned by the invariance property test).
-_NATION_BOX_SIDE = 20.0
-_NATION_CELL = _NATION_BOX_SIDE / 2.0
-
-
 def _nation_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     return n.select(
@@ -92,7 +82,7 @@ def q60_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes = _nation_boxes(spark, sf_dir)
     joined = grid_spatial_join(
         pts, boxes, left_keys=["c_custkey"], right_keys=["n_nationkey"],
-        predicate="contains", cell=_NATION_CELL,
+        predicate="contains",
     )
     return joined.groupBy("n_nationkey").agg(
         F.count(F.lit(1)).alias("n_points"), davg("c_acctbal", "avg_acctbal")
@@ -139,7 +129,7 @@ def q61_zonal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes = _nation_boxes(spark, sf_dir)
     joined = grid_spatial_join(
         cells, boxes, left_keys=["p_partkey"], right_keys=["n_nationkey"],
-        predicate="contains", cell=_NATION_CELL,
+        predicate="contains",
     )
     zonal = joined.groupBy("n_nationkey").agg(davg("elev", "mean_elev"))
     return (

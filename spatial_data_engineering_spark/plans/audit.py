@@ -28,7 +28,7 @@ mapInPandas, not Window.
 
 Used by tests/test_plan_invariants.py (with the kernel threshold forced
 to 0 so auto-switch small paths can't mask a missing reroute) and by
-scripts/global_window_audit.py for ad-hoc sweeps.
+the ``invariants`` gate of scripts/gates.py.
 """
 
 from __future__ import annotations
@@ -200,8 +200,8 @@ def _bounding_evidence(window_node) -> str | None:
     """What bounds this global window's input, or None (= violation).
 
     Returns ``"limit:<NodeName>"`` or ``"bounded-aggregate:[keys]"`` —
-    the per-window audit row scripts/global_window_audit.py commits as
-    a round artifact, so every remaining ``WindowExec: No Partition
+    the per-window audit row GLOBAL_WINDOW_AUDIT.json commits as a
+    round artifact, so every remaining ``WindowExec: No Partition
     Defined`` warning in a bench log is attributable to a named node.
     """
     cs = window_node.children()
@@ -246,17 +246,25 @@ def global_window_violations(df) -> list[str]:
             if not r["ok"]]
 
 
-def audit_registry(spark, sf_dir: str, names=None) -> dict:
-    """Sweep the full query registry and return the committed-per-round
-    audit artifact: every global window per query with its bounding
-    evidence (``global_windows``), plus ``n_checked``/``n_flagged``.
+FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
-    Shared by scripts/global_window_audit.py (ad-hoc CLI) and
+
+def audit_registry(spark, sf_dir: str, names=None) -> dict:
+    """The registry plan sweep: each query's physical plan compiled once,
+    with the global-order kernel's threshold zeroed so small-input
+    auto-switches can't mask a missing reroute.  Returns
+
+    * ``global_window_audit`` — the GLOBAL_WINDOW_AUDIT.json payload:
+      every global window per query with its bounding evidence
+      (``global_windows``), plus ``n_checked``/``n_flagged``; a query
+      whose plan fails to build is flagged with its error;
+    * ``plan_invariants`` — the queries whose plans carry a
+      ``FORBIDDEN`` marker (``hits``) and the build ``errors``.
+
+    Shared by the ``invariants`` gate of scripts/gates.py and
     tests/test_plan_invariants.py (the per-round refresh: pytest
     regenerates GLOBAL_WINDOW_AUDIT.json and gates on 0 flagged, so the
-    artifact can never go stale against the shipped plans — VERDICT r9
-    task 7).  The sweep zeroes the global-order kernel's threshold so
-    small-input auto-switches can't mask a missing reroute.
+    artifact can never go stale against the shipped plans).
     """
     from ..operators import relational as R
     from ..queries_registry import all_queries
@@ -266,15 +274,20 @@ def audit_registry(spark, sf_dir: str, names=None) -> dict:
         names = list(qs)
     saved = R._ROW_ID_WINDOW_THRESHOLD
     R._ROW_ID_WINDOW_THRESHOLD = 0
-    flagged, table = {}, {}
+    flagged, table, hits, errors = {}, {}, {}, {}
     try:
         for name in names:
             try:
-                report = global_window_report(qs[name](spark, sf_dir))
+                df = qs[name](spark, sf_dir)
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                report = global_window_report(df)
             except Exception as ex:  # noqa: BLE001
-                table[name] = {"error": str(ex)[:200]}
-                flagged[name] = [f"error: {str(ex)[:200]}"]
+                errors[name] = str(ex)[:200]
+                table[name] = {"error": errors[name]}
+                flagged[name] = [f"error: {errors[name]}"]
                 continue
+            if found := [m for m in FORBIDDEN if m in plan]:
+                hits[name] = found
             if report:
                 table[name] = report
             v = [r["window"] for r in report if not r["ok"]]
@@ -282,10 +295,16 @@ def audit_registry(spark, sf_dir: str, names=None) -> dict:
                 flagged[name] = v
     finally:
         R._ROW_ID_WINDOW_THRESHOLD = saved
-    return {"sf": sf_dir, "n_checked": len(names),
+    return {
+        "global_window_audit": {
+            "sf": sf_dir, "n_checked": len(names),
             "n_flagged": len(flagged),
             "flagged": _stable_ids(flagged),
-            "global_windows": _stable_ids(table)}
+            "global_windows": _stable_ids(table)},
+        "plan_invariants": {
+            "forbidden_markers": list(FORBIDDEN), "n_hits": len(hits),
+            "hits": hits, "errors": errors},
+    }
 
 
 # `L?` swallows Catalyst's long-type suffix too (n#61396L), so typed and

@@ -42,6 +42,7 @@ from __future__ import annotations
 import statistics
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,8 +66,9 @@ def mangrove_dissolve(spark: SparkSession, fixture_dir: str,
     """(keterangan, geom) in EPSG:4326, one row per matching category.
 
     ``union_agg`` runs once here and its rows come back as a local
-    relation (through Arrow), so every consumer reads the result instead
-    of re-running the dissolve's Python stages.  A local relation's size
+    relation (built from an Arrow table, which is one whether or not the
+    session enables Arrow for pandas), so every consumer reads the result
+    instead of re-running the dissolve's Python stages.  A local relation's size
     estimate is its real size; a ``localCheckpoint`` keeps the estimate
     of the plan it pins, which is derived from the input scans (PySpark
     4.1.2, the seed-0 test fixtures: the 2-row dissolve reads 256 bytes
@@ -94,7 +96,7 @@ def mangrove_dissolve(spark: SparkSession, fixture_dir: str,
         ).alias("geom"),
     )
     dissolved = union_agg(filtered, ["keterangan"], geom_col="geom")
-    return spark.createDataFrame(dissolved.toPandas(), dissolved.schema)
+    return spark.createDataFrame(dissolved.toArrow(), dissolved.schema)
 
 
 def monthly_ndvi(pixels: DataFrame, dissolved: DataFrame) -> DataFrame:
@@ -189,10 +191,12 @@ def report(spark: SparkSession, monthly: DataFrame,
             ("Variance", str(t["variance"])),
             ("Inference", inference),
         ]
-    # a local relation (Arrow from pandas), not a parallelized list, so
-    # collecting or writing the report runs no Python-worker job
+    # a local relation (from an Arrow table, in any session), not a
+    # parallelized list, so collecting or writing the report runs no
+    # Python-worker job
+    metric, value = zip(*rows)
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["Metric", "Value"], dtype=object),
+        pa.table({"Metric": metric, "Value": value}),
         "Metric string, Value string")
 
 

@@ -47,15 +47,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from spatial_data_engineering_spark.operators import relational as R
-from spatial_data_engineering_spark.plans.audit import \
-    global_window_violations
+from spatial_data_engineering_spark.plans.audit import (
+    FORBIDDEN, global_window_violations)
 from spatial_data_engineering_spark.queries_registry import all_queries
 
 # Plan compilation needs a readable sf_dir for schemas; the smallest one
 # keeps any stats estimation instant.
 SF_PLAN = "/root/testdata/sf0.001"
-
-FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
 # The reviewed set of queries whose plans carry an (excused) global
 # window — every entry's excuse is machine-checked by the audit (limit /
@@ -266,17 +264,17 @@ def test_q175_calendar_bucket_attribution(spark):
 
 def test_global_window_audit_artifact_refreshes(spark):
     # VERDICT r9 task 7: the per-round audit artifact used to be a
-    # manual script run (scripts/global_window_audit.py) that could go
-    # stale against the shipped plans.  Now every pytest run regenerates
-    # GLOBAL_WINDOW_AUDIT.json at the repo root from the live registry
-    # (big paths forced, same sweep the CLI runs) and gates on 0
+    # manual script run that could go stale against the shipped plans.
+    # Now every pytest run regenerates GLOBAL_WINDOW_AUDIT.json at the
+    # repo root from the live registry (big paths forced, the same sweep
+    # the `invariants` gate of scripts/gates.py runs) and gates on 0
     # flagged — the round artifact is a copy of a file CI just rebuilt.
     import json
     import os
 
     from spatial_data_engineering_spark.plans.audit import audit_registry
 
-    payload = audit_registry(spark, SF_PLAN)
+    payload = audit_registry(spark, SF_PLAN)["global_window_audit"]
     assert payload["n_checked"] == len(all_queries())
     assert payload["n_flagged"] == 0, payload["flagged"]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

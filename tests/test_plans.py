@@ -81,6 +81,28 @@ def test_golden_location_join_is_broadcast_point_kernel(spark, tmp_path):
     assert "Aggregate" in below[:below.index("Relation")], plan
 
 
+def test_golden_location_join_is_broadcast_without_arrow(spark, tmp_path):
+    # the driver's plain session may leave Arrow off; the dissolve must
+    # still be a local relation with real size statistics there (a
+    # pandas input without Arrow is an RDD scan estimated at
+    # Long.MaxValue), so the location join keeps its broadcast path
+    from spatial_data_engineering_spark.fixtures import write_fixtures
+    from spatial_data_engineering_spark.plans import golden
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        write_fixtures(str(tmp_path), seed=42)
+        dissolved = golden.mangrove_dissolve(spark, str(tmp_path))
+        pixels = spark.read.parquet(f"{tmp_path}/landsat_pixels.parquet")
+        plan = (golden.monthly_ndvi(pixels, dissolved)
+                ._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set(key, saved)
+    assert "st_grid_cells" not in plan and "st_contains" not in plan, plan
+
+
 def test_q49_broadcasts_query_side(spark):
     plan = _plan(spark, "q49_cosine_topk")
     # non-equi self join: acceptable ONLY as broadcast NLJ with the tiny

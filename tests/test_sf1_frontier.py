@@ -61,8 +61,8 @@ def test_frontier_query_completes_at_sf1(spark, name):
 # The oracled queries most exposed to at-scale-only divergence: every
 # quality-score consumer (the round-11 halfway-rounding find), the
 # percentile/quantile family (the lerp find), and the scale-frontier
-# queries with oracles.  The FULL 204-query sf1 sweep lives in
-# scripts/sf1_parity.py; this marked subset keeps the evidence class
+# queries with oracles.  The full sf1 sweep is the `sf1` gate of
+# scripts/gates.py; this marked subset keeps the evidence class
 # un-bit-rottable in CI at ~1/6 the cost.
 PARITY_SUBSET = [
     "q44_quality_score", "q80_quality_filter", "q127_score_calibration",
@@ -134,7 +134,7 @@ def test_oracle_parity_at_sf1(spark, duck_sf1, name):
 
 # The four quadratic-ORACLE queries get deterministic subset strategies
 # (VERDICT r11 task 2) instead of a skip — definitions live in
-# scripts/sf1_parity.py so the per-round sweep and this gate can never
+# scripts/gates.py so the per-round sweep and this gate can never
 # drift apart.  q49 runs whole (its oracle is 10 queries x n — linear);
 # q50 verifies the FULL-corpus Spark output on a stratified pair slice;
 # q154/q156 run both engines on a stratified corpus slice sized above
@@ -143,7 +143,7 @@ def _sf1_parity_mod():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "sf1_parity", os.path.join(REPO, "scripts", "sf1_parity.py"))
+        "gates", os.path.join(REPO, "scripts", "gates.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
